@@ -1,35 +1,44 @@
-"""Rule-binding → Spark plan compiler.
+"""Rule-binding → Spark SQL compiler.
 
 The reference renders one BigQuery SQL script per rule binding with one
 UNION-ALL branch per rule over the same scan
 (clouddq/templates/dbt/macros/create_rule_binding_view.sql:56-95) and lets
 BigQuery dedupe the scan. A literal translation would re-scan the table once
-per rule in Spark, so we compile differently (SURVEY.md §4.1):
+per rule in Spark, and even one pass per binding re-reads an entity once per
+binding, so we compile every binding that shares an entity into ONE SQL text
+(``compile_entity``):
 
-* ONE filtered scan per binding (row filter ∧ incremental watermark ∧
-  partition NULL-guards, all pushed down by Catalyst),
-* every *simple* rule becomes one tri-valued predicate ``Column`` evaluated
-  in a single projection pass (macros.sql:28-42 semantics: NULL column →
-  NULL, predicate → TRUE, else FALSE; NOT_NULL has no NULL branch),
-* every *set-level* rule (CUSTOM_SQL_STATEMENT) becomes a DataFrame-producing
-  closure run against the filtered scan registered as the ``data`` view
+* each binding gets a row-in-binding flag ``__in_{b}``: row filter ∧
+  partition NULL-guards ∧ that binding's own incremental window; the scan
+  keeps only rows some binding selects (``WHERE __in_0 OR __in_1 …``,
+  pushed into the Parquet reader by Catalyst),
+* every row-level rule becomes one tri-valued validity column
+  ``__v_{b}_{r}`` (macros.sql:28-42 semantics: NULL column → NULL,
+  predicate → TRUE, else FALSE; NOT_NULL has no NULL branch), NULL outside
+  its binding; CUSTOM_PANDAS_BATCH rules call a session-registered Arrow
+  UDF named by ``batch_udf_name``,
+* one ``named_struct`` metric of ``count_if`` aggregates holds every
+  binding's rows_validated and every rule's success/failed/null counts,
+* one ``inline(array_compact(array(CASE … END, …)))`` select list emits the
+  failed records: one row per (input row, failing rule),
+* *set-level* rules (CUSTOM_SQL_STATEMENT) stay per binding: they run
+  against the binding's rows registered as the ``data`` view
   (rule_type.py:111-127 contract: statement must read ``from data``; rows
-  returned are errors),
-* CUSTOM_PANDAS_BATCH rules (new) become vectorized Arrow stages that emit a
-  boolean validity column.
+  returned are errors).
 
-Compilation is a pure function (no SparkSession needed until `.filter_df`),
-mirroring the reference's testable seam lib.create_rule_binding_view_model
-(clouddq/lib.py:101-153).
+Compilation is pure (no SparkSession), mirroring the reference's testable
+seam lib.create_rule_binding_view_model (clouddq/lib.py:101-153).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 from dataclasses import dataclass, field
-from typing import Callable
+from datetime import datetime, timezone
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from cloud_data_quality_spark.compiler.dialect import bq_to_spark_sql
 from cloud_data_quality_spark.config.loader import ConfigRegistry
@@ -40,6 +49,24 @@ from cloud_data_quality_spark.config.model import (
     substitute_column,
 )
 from cloud_data_quality_spark.functions.batch_registry import get_batch_function
+
+
+def sql_ident(name: str) -> str:
+    """Backquoted Spark SQL column reference; dots separate nested fields,
+    as in ``F.col(name)``."""
+    return ".".join("`" + part.replace("`", "``") + "`"
+                    for part in name.split("."))
+
+
+def sql_str(value: str) -> str:
+    """Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ts(ts: datetime) -> str:
+    """Timestamp literal with the exact microseconds ``F.lit(ts)`` would
+    carry (tz-aware → UTC, naive → local time, as pyspark converts)."""
+    return f"timestamp_micros({TimestampType().toInternal(ts)})"
 
 
 @dataclass(frozen=True)
@@ -57,19 +84,24 @@ class CompiledRule:
     batch_params: dict = field(default_factory=dict)
     column_id: str | None = None
 
-    def predicate(self) -> Column:
-        """Tri-valued validity Column (TRUE/FALSE/NULL) per macros.sql:28-42."""
-        assert self.predicate_sql is not None
-        pred = F.expr(self.predicate_sql)
-        col = F.col(self.column_id) if self.column_id else None
+    def validity_sql(self) -> str:
+        """Tri-valued validity (TRUE/FALSE/NULL) per macros.sql:28-42."""
+        col = sql_ident(self.column_id) if self.column_id else None
+        if self.rule_type == RuleType.CUSTOM_PANDAS_BATCH:
+            return f"{batch_udf_name(self)}({col})"
         if self.rule_type == RuleType.NOT_NULL or col is None:
             # no NULL branch: NULL column simply fails the IS NOT NULL test
-            return F.when(pred, F.lit(True)).otherwise(F.lit(False))
-        return (
-            F.when(col.isNull(), F.lit(None).cast("boolean"))
-            .when(pred, F.lit(True))
-            .otherwise(F.lit(False))
-        )
+            return f"CASE WHEN ({self.predicate_sql}) THEN TRUE ELSE FALSE END"
+        return (f"CASE WHEN {col} IS NULL THEN NULL "
+                f"WHEN ({self.predicate_sql}) THEN TRUE ELSE FALSE END")
+
+
+def batch_udf_name(rule: CompiledRule) -> str:
+    """Session UDF name of a CUSTOM_PANDAS_BATCH rule: one per (function,
+    params), so bindings sharing a rule share the registration."""
+    key = json.dumps([rule.batch_function.upper(), rule.batch_params],
+                     sort_keys=True, default=str)
+    return "__dq_batch_" + hashlib.sha1(key.encode()).hexdigest()[:16]
 
 
 @dataclass(frozen=True)
@@ -93,24 +125,102 @@ class CompiledBinding:
     def all_rules(self) -> tuple[CompiledRule, ...]:
         return self.simple_rules + self.batch_rules + self.statement_rules
 
-    def scan_filter(self) -> Column:
-        cond = F.expr(self.filter_sql)
-        for g in self.partition_null_guards:
-            cond = cond & F.col(g).isNotNull()
-        return cond
+    @property
+    def row_rules(self) -> tuple[CompiledRule, ...]:
+        return self.simple_rules + self.batch_rules
 
-    def filter_df(self, df: DataFrame, high_watermark=None, current_ts=None) -> DataFrame:
-        """Apply row filter + partition guards + incremental BETWEEN filter
-        (create_rule_binding_view.sql:62-77 semantics). Filters are plain
-        Column expressions → Catalyst pushes them into the parquet scan."""
-        out = df.where(self.scan_filter())
-        if self.incremental_column and high_watermark is not None:
-            ts = F.col(self.incremental_column).cast("timestamp")
-            if current_ts is not None:
-                out = out.where(ts.between(F.lit(high_watermark), F.lit(current_ts)))
-            else:
-                out = out.where(ts > F.lit(high_watermark))
+    def in_binding_sql(self, window: tuple[datetime, datetime] | None = None
+                       ) -> str:
+        """Row filter ∧ partition guards ∧ incremental BETWEEN window
+        (create_rule_binding_view.sql:62-77 semantics)."""
+        parts = [f"({self.filter_sql})"]
+        parts += [f"{sql_ident(g)} IS NOT NULL"
+                  for g in self.partition_null_guards]
+        if self.incremental_column and window is not None:
+            lo, hi = window
+            parts.append(
+                f"CAST({sql_ident(self.incremental_column)} AS TIMESTAMP) "
+                f"BETWEEN {sql_ts(lo)} AND {sql_ts(hi)}")
+        return " AND ".join(parts)
+
+
+@dataclass(frozen=True)
+class EntityQuery:
+    """One pass over an entity for a group of bindings (``compile_entity``).
+
+    ``sql`` yields the source columns plus ``__in_{b}`` and ``__v_{b}_{r}``;
+    ``metric`` is an aggregate over those columns and ``failed_records`` a
+    select list over them."""
+    bindings: tuple[CompiledBinding, ...]
+    in_binding: tuple[str, ...]
+    sql: str
+    metric: str
+    failed_records: tuple[str, ...]
+
+    def counts(self, m) -> list[tuple[int, list[tuple[int, int, int]]]]:
+        """Decode a ``metric`` value: per binding, (rows_validated, per
+        row-level rule (success, failed, null))."""
+        out = []
+        for b, bd in enumerate(self.bindings):
+            n = int(m[f"n{b}"])
+            rules = [(int(m[f"s{b}_{r}"]), int(m[f"f{b}_{r}"]))
+                     for r in range(len(bd.row_rules))]
+            out.append((n, [(s, f, n - s - f) for s, f in rules]))
         return out
+
+
+def compile_entity(
+    bindings: Sequence[CompiledBinding],
+    source: str,
+    *,
+    windows: Sequence[tuple[datetime, datetime] | None] | None = None,
+    invocation_id: str = "",
+    execution_ts: datetime = datetime(1970, 1, 1, tzinfo=timezone.utc),
+) -> EntityQuery:
+    """Compile bindings that read the same entity into one SQL pass over
+    the table or view ``source``. ``windows[b]`` is binding b's incremental
+    (high watermark, execution_ts) window, None for a full scan."""
+    windows = list(windows or [None] * len(bindings))
+    in_binding = tuple(b.in_binding_sql(w) for b, w in zip(bindings, windows))
+    flags = ",\n".join(f"    {cond} AS __in_{i}"
+                       for i, cond in enumerate(in_binding))
+    any_in = " OR ".join(f"__in_{i}" for i in range(len(bindings)))
+    validity, metric, failed = [], [], []
+    for b, bd in enumerate(bindings):
+        metric.append(f"'n{b}', count_if(__in_{b})")
+        refs = ", ".join(sql_ident(c) for c in
+                         (bd.reference_columns or (bd.column_id,)))
+        for r, rule in enumerate(bd.row_rules):
+            v = f"__v_{b}_{r}"
+            validity.append(
+                f"  CASE WHEN __in_{b} THEN {rule.validity_sql()} END AS {v}")
+            # validity is non-NULL only inside the binding, so the NULL
+            # count is n - success - failed: two aggregates per rule, not
+            # three (fewer aggregates measurably cut executor CPU)
+            metric += [f"'s{b}_{r}', count_if({v} = TRUE)",
+                       f"'f{b}_{r}', count_if({v} = FALSE)"]
+            failed.append(
+                f"  CASE WHEN {v} = FALSE THEN named_struct("
+                f"'_dq_validation_rule_id', {sql_str(rule.rule_id)}, "
+                f"'_dq_validation_rule_binding_id', "
+                f"{sql_str(bd.rule_binding_id)}, "
+                f"'_dq_validation_column_id', {sql_str(bd.column_id)}, "
+                f"'_dq_validation_column_value', "
+                f"CAST({sql_ident(bd.column_id)} AS STRING), "
+                f"'_dq_validation_reference_columns_json', "
+                f"to_json(struct({refs}))) END")
+    sql = ("SELECT *" + "".join(",\n" + v for v in validity) + "\n"
+           f"FROM (\n  SELECT *,\n{flags}\n  FROM {sql_ident(source)}\n)\n"
+           f"WHERE {any_in}")
+    failed_records = (
+        ("inline(array_compact(array(\n" + ",\n".join(failed) + ")))",
+         f"{sql_str(invocation_id)} AS _dq_validation_invocation_id",
+         f"{sql_ts(execution_ts)} AS _dq_validation_execution_ts")
+        if failed else ())
+    return EntityQuery(
+        bindings=tuple(bindings), in_binding=in_binding, sql=sql,
+        metric="named_struct(" + ", ".join(metric) + ")",
+        failed_records=failed_records)
 
 
 def compile_rule(rule: Rule, column_id: str, binding_arguments: dict) -> CompiledRule:
@@ -190,7 +300,3 @@ def compile_binding(registry: ConfigRegistry, rule_binding_id: str,
         metadata=rb.metadata,
         configs_hashsum=registry.configs_hashsum(rule_binding_id),
     )
-
-
-# Callable alias for set-level rule runners
-StatementRunner = Callable[[DataFrame], int]

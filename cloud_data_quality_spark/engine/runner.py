@@ -1,35 +1,39 @@
 """DqEngine — executes compiled rule bindings and materializes the
 dq_summary + dq_failed_records outputs.
 
-Execution strategy per binding (contrast with the reference, which submits one
+Execution strategy per ENTITY (contrast with the reference, which submits one
 BigQuery script per binding with one UNION-ALL branch per rule —
 create_rule_binding_view.sql:86-95 — and lets BigQuery dedupe the scan):
+every binding of a run that reads the same table is compiled into one SQL
+text (``compile_entity``) and validated in one pass, ``run_entity``:
 
-1. ONE filtered scan (row filter + partition guards + incremental watermark
-   all pushed to the parquet/Iceberg reader by Catalyst).
-2. ONE projection computing every simple rule's tri-valued validity column
-   plus every CUSTOM_PANDAS_BATCH rule's validity via an Arrow-vectorized
-   pandas_udf — whole-stage-codegen for the SQL predicates, Arrow batches for
-   the Python stages, zero extra scans.
-3. ONE aggregation: count(*), and per rule count_if(valid), count_if(NOT
-   valid), count_if(valid IS NULL). Spark performs partial (map-side)
-   aggregation automatically, so the shuffle carries ~3·N_rules longs per
-   partition, not rows. The single aggregated row is collected to the driver
-   (scalar-sized) and expanded into summary rows — the reference's
-   zero_record LEFT JOIN totem (macros.sql:53-58) is unnecessary because the
-   row is built driver-side even for empty input.
-4. Failed records: the same projected frame (cached when any consumer needs
-   it) yields per-rule failing rows in ONE pass: build an array of failing
-   rule_ids per row, explode, write. valid IS FALSE only — NULL validity is
-   not a failure (failed_records_query.sql:108-109).
-5. CUSTOM_SQL_STATEMENT rules: the filtered scan is registered as the `data`
-   temp view; each statement runs via spark.sql; rows returned are errors
-   (macros.sql:90-99). The errors_count uses .count(), never
-   COUNT(*) OVER () — a global window would collapse to one partition.
+1. ONE scan of the entity, keeping only rows some binding selects (the OR of
+   the bindings' row filters, partition guards and incremental windows is
+   pushed to the parquet/Iceberg reader by Catalyst).
+2. ONE projection computing each binding's row-in-binding flag and every
+   row-level rule's tri-valued validity column; CUSTOM_PANDAS_BATCH rules
+   are session-registered Arrow pandas UDFs called from the same SQL.
+3. Counts: per binding count_if(in), and per rule count_if(valid) and
+   count_if(NOT valid), all in one ``named_struct`` aggregate; the NULL
+   count is the rest of the binding's rows. With a failed-records path the
+   aggregate is attached to the failed-records write as an ``Observation``,
+   so the write is the only job and no second pass runs; without one it is
+   one ``collect``. Summary rows are built driver-side, even for zero
+   selected rows, so the reference's zero_record LEFT JOIN totem
+   (macros.sql:53-58) is unnecessary.
+4. Failed records: the same pass explodes an array with one struct per
+   failing (row, rule) pair — valid IS FALSE only, NULL validity is not a
+   failure (failed_records_query.sql:108-109) — and appends it. No Exchange
+   sits between the scan and the write, so the observed metrics are merged
+   once per successful task.
+5. CUSTOM_SQL_STATEMENT rules run per binding: the binding's rows are
+   registered as the `data` temp view; each statement runs via spark.sql;
+   rows returned are errors (macros.sql:90-99). The errors_count uses
+   .count(), never COUNT(*) OVER () — a global window would collapse to one
+   partition.
 
-At 100 TB the dominant cost is the scan; this design reads the entity exactly
-once per binding regardless of rule count, and bindings sharing an entity can
-share a cached scan via `run(..., reuse_scan=True)`.
+At 100 TB the dominant cost is the scan; this design reads each entity once
+per run regardless of binding and rule count (statement rules aside).
 """
 
 from __future__ import annotations
@@ -41,13 +45,17 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.compiler.binding import (
     CompiledBinding,
     CompiledRule,
+    EntityQuery,
+    batch_udf_name,
     compile_binding,
+    compile_entity,
+    sql_str,
 )
 from cloud_data_quality_spark.config.loader import ConfigRegistry
 from cloud_data_quality_spark.config.model import RuleType
@@ -67,16 +75,24 @@ def _aware_utc(ts: datetime) -> datetime:
     return ts if ts.tzinfo else ts.replace(tzinfo=timezone.utc)
 
 
+def _batch_udf(rule: CompiledRule):
+    """Arrow-vectorized validity UDF for a CUSTOM_PANDAS_BATCH rule."""
+    fn = get_batch_function(rule.batch_function)
+    params = dict(rule.batch_params)
+
+    @F.pandas_udf("boolean")
+    def _validity(s: pd.Series) -> pd.Series:
+        return fn(s, params).astype("boolean")
+
+    return _validity
+
+
 @dataclass
 class RunResult:
     invocation_id: str
     summary: DataFrame
     failed_records: DataFrame | None = None
     stats: dict = field(default_factory=dict)
-
-
-def _valid_col_name(rule_id: str) -> str:
-    return f"__valid_{rule_id}"
 
 
 class DqEngine:
@@ -240,31 +256,37 @@ class DqEngine:
                 out[k] = _aware_utc(r["hwm"])
         return out
 
-    # ---------- per-binding plan ----------
+    # ---------- per-entity pass ----------
 
-    def _batch_validity(self, rule: CompiledRule) -> Column:
-        """Arrow-vectorized validity column for a CUSTOM_PANDAS_BATCH rule."""
-        fn = get_batch_function(rule.batch_function)
-        params = dict(rule.batch_params)
-
-        @F.pandas_udf("boolean")
-        def _validity(s: pd.Series) -> pd.Series:
-            return fn(s, params).astype("boolean")
-
-        return _validity(F.col(rule.column_id))
-
-    def projected_frame(self, binding: CompiledBinding, df: DataFrame) -> DataFrame:
-        """Original columns + one tri-valued validity column per row-level rule."""
-        cols = [F.col(c) for c in df.columns]
-        for rule in binding.simple_rules:
-            cols.append(rule.predicate().alias(_valid_col_name(rule.rule_id)))
-        for rule in binding.batch_rules:
-            cols.append(self._batch_validity(rule).alias(_valid_col_name(rule.rule_id)))
-        return df.select(*cols)
-
-    def run_binding(
+    def entity_frame(
         self,
-        binding: CompiledBinding,
+        bindings: list[CompiledBinding],
+        *,
+        df: DataFrame,
+        windows: list[tuple[datetime, datetime] | None] | None = None,
+        invocation_id: str = "",
+        execution_ts: datetime = EPOCH,
+    ) -> tuple[EntityQuery, DataFrame]:
+        """Compile ``bindings`` over ``df`` and analyze the pass: the query
+        and its frame (source columns + __in_{b} + __v_{b}_{r}). The source
+        view only lives while the SQL is analyzed; the frame keeps its plan."""
+        spark = df.sparkSession
+        for rule in {batch_udf_name(r): r for b in bindings
+                     for r in b.batch_rules}.values():
+            spark.udf.register(batch_udf_name(rule), _batch_udf(rule))
+        view = f"__dq_entity_{uuid.uuid4().hex}"
+        q = compile_entity(bindings, view, windows=windows,
+                           invocation_id=invocation_id,
+                           execution_ts=execution_ts)
+        df.createOrReplaceTempView(view)
+        try:
+            return q, spark.sql(q.sql)
+        finally:
+            spark.catalog.dropTempView(view)
+
+    def run_entity(
+        self,
+        bindings: list[CompiledBinding],
         *,
         invocation_id: str,
         execution_ts: datetime,
@@ -272,107 +294,108 @@ class DqEngine:
         progress_watermark: bool = True,
         incremental: bool = False,
         write_failed_records: bool = False,
-        last_modified: datetime | None = None,
-        hwm: datetime | None = None,
+        hwms: dict[tuple[str, str], datetime] | None = None,
     ) -> list[dict]:
-        """Execute one compiled binding → list of summary-row dicts.
-        ``hwm``: precomputed watermark from high_watermarks() (run() batches
-        the lookup); None → look it up individually."""
-        spark = self.spark
+        """Validate bindings that read one entity in one pass → summary-row
+        dicts in binding order. ``df`` stands in for the entity scan (a
+        stream's micro-batch); ``hwms``: watermarks precomputed by
+        high_watermarks(), looked up individually when missing."""
+        last_modified = None
         if df is None:
-            df = self.read_entity(binding)
-        if incremental and binding.incremental_column:
-            if hwm is None:
-                hwm = self.high_watermark(binding)
-        else:
-            hwm = None
-        filtered = binding.filter_df(df, high_watermark=hwm, current_ts=execution_ts
-                                     if hwm is not None else None)
+            df = self.read_entity(bindings[0])
+            last_modified = self.entity_last_modified(bindings[0])
+        windows = []
+        for b in bindings:
+            if incremental and b.incremental_column:
+                hwm = (hwms or {}).get((b.rule_binding_id, b.table_name))
+                windows.append((hwm or self.high_watermark(b), execution_ts))
+            else:
+                windows.append(None)
+        q, projected = self.entity_frame(
+            bindings, df=df, windows=windows, invocation_id=invocation_id,
+            execution_ts=execution_ts)
 
-        row_rules = binding.simple_rules + binding.batch_rules
-        projected = self.projected_frame(binding, filtered)
-
-        needs_reuse = bool(binding.statement_rules) or write_failed_records
-        if needs_reuse:
-            projected = projected.persist()
-
-        # ---- single-pass aggregation over all row-level rules ----
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for rule in row_rules:
-            v = F.col(_valid_col_name(rule.rule_id))
-            aggs += [
-                F.count_if(v == True).alias(f"__s_{rule.rule_id}"),   # noqa: E712
-                F.count_if(v == False).alias(f"__f_{rule.rule_id}"),  # noqa: E712
-                F.count_if(v.isNull()).alias(f"__n_{rule.rule_id}"),
-            ]
-        agg_row = projected.agg(*aggs).collect()[0]
-        rows_validated = int(agg_row["__rows"])
-
-        counts: list[RuleCounts] = []
-        for rule in row_rules:
-            counts.append(RuleCounts(
-                rule_id=rule.rule_id,
-                dimension=rule.dimension,
-                skip_null_count=rule.skip_null_count,
-                is_statement=False,
-                column_id=rule.column_id,
-                success=int(agg_row[f"__s_{rule.rule_id}"]),
-                failed=int(agg_row[f"__f_{rule.rule_id}"]),
-                null=int(agg_row[f"__n_{rule.rule_id}"]),
-                failed_records_query=self._failed_records_sql(binding, rule),
-            ))
-
-        # ---- set-level rules over the `data` view ----
-        # the view name is fixed by the statement contract ("from data"), a
-        # session-global — serialize register+run when bindings execute on
-        # concurrent driver threads (run(max_concurrency > 1))
-        if binding.statement_rules:
-            with self._statement_lock:
-                filtered.createOrReplaceTempView("data")
-                for rule in binding.statement_rules:
-                    errors = spark.sql(rule.statement_sql).count()
-                    counts.append(RuleCounts(
-                        rule_id=rule.rule_id,
-                        dimension=rule.dimension,
-                        skip_null_count=True,
-                        is_statement=True,
-                        column_id=None,
-                        errors_count=int(errors),
-                        failed_records_query=self._statement_failed_records_sql(
-                            binding, rule, invocation_id,
-                            high_watermark=hwm,
-                            current_ts=execution_ts if hwm is not None else None),
-                    ))
-
-        # ---- failed records: one pass, explode failing rule ids ----
-        # concurrent appends to one path share its _temporary staging dir —
-        # serialize (the write is output-sized, rarely the bottleneck)
-        if write_failed_records and row_rules and self.failed_records_path:
+        if write_failed_records and q.failed_records \
+                and self.failed_records_path:
+            obs = Observation()
+            failed = projected.observe(obs, F.expr(q.metric).alias("m")) \
+                .selectExpr(*q.failed_records)
+            # concurrent appends to one path share its _temporary staging
+            # dir — serialize (one write per entity group)
             with self._write_lock:
-                self._write_failed_records(
-                    binding, projected, row_rules,
-                    invocation_id=invocation_id, execution_ts=execution_ts,
+                failed.write.mode("append").parquet(self.failed_records_path)
+            metric = obs.get["m"]
+        else:
+            metric = projected.selectExpr(f"{q.metric} AS m").collect()[0]["m"]
+
+        rows: list[dict] = []
+        for bd, (rows_validated, rule_counts), in_binding, window in zip(
+                bindings, q.counts(metric), q.in_binding, windows):
+            counts = [
+                RuleCounts(
+                    rule_id=rule.rule_id,
+                    dimension=rule.dimension,
+                    skip_null_count=rule.skip_null_count,
+                    is_statement=False,
+                    column_id=rule.column_id,
+                    success=s, failed=f, null=n,
+                    failed_records_query=self._failed_records_sql(bd, rule),
                 )
+                for rule, (s, f, n) in zip(bd.row_rules, rule_counts)
+            ]
+            counts += self._statement_counts(
+                bd, df, in_binding, invocation_id=invocation_id,
+                window=window)
+            metadata_json = json.dumps(bd.metadata, sort_keys=True)
+            rows += [
+                build_summary_row(
+                    counts=c,
+                    rows_validated=rows_validated,
+                    rule_binding_id=bd.rule_binding_id,
+                    table_id=bd.table_name,
+                    metadata_json=metadata_json,
+                    configs_hashsum=bd.configs_hashsum,
+                    execution_ts=execution_ts,
+                    invocation_id=invocation_id,
+                    progress_watermark=progress_watermark,
+                    last_modified=last_modified,
+                )
+                for c in counts
+            ]
+        return rows
 
-        if needs_reuse:
-            projected.unpersist()
+    def run_binding(self, binding: CompiledBinding, **kwargs) -> list[dict]:
+        """One binding as an entity group of one (see run_entity)."""
+        return self.run_entity([binding], **kwargs)
 
-        metadata_json = json.dumps(binding.metadata, sort_keys=True)
-        return [
-            build_summary_row(
-                counts=c,
-                rows_validated=rows_validated,
-                rule_binding_id=binding.rule_binding_id,
-                table_id=binding.table_name,
-                metadata_json=metadata_json,
-                configs_hashsum=binding.configs_hashsum,
-                execution_ts=execution_ts,
-                invocation_id=invocation_id,
-                progress_watermark=progress_watermark,
-                last_modified=last_modified,
-            )
-            for c in counts
-        ]
+    def _statement_counts(self, binding: CompiledBinding, df: DataFrame,
+                          in_binding: str, *, invocation_id: str,
+                          window: tuple[datetime, datetime] | None
+                          ) -> list[RuleCounts]:
+        """Set-level rules over the `data` view. The view name is fixed by
+        the statement contract ("from data"), a session-global — serialize
+        register+run when entity groups execute on concurrent driver
+        threads (run(max_concurrency > 1))."""
+        if not binding.statement_rules:
+            return []
+        hwm, current_ts = window or (None, None)
+        out = []
+        with self._statement_lock:
+            df.where(in_binding).createOrReplaceTempView("data")
+            for rule in binding.statement_rules:
+                errors = df.sparkSession.sql(rule.statement_sql).count()
+                out.append(RuleCounts(
+                    rule_id=rule.rule_id,
+                    dimension=rule.dimension,
+                    skip_null_count=True,
+                    is_statement=True,
+                    column_id=None,
+                    errors_count=int(errors),
+                    failed_records_query=self._statement_failed_records_sql(
+                        binding, rule, invocation_id,
+                        high_watermark=hwm, current_ts=current_ts),
+                ))
+        return out
 
     def _failed_records_sql(self, binding: CompiledBinding, rule: CompiledRule) -> str:
         """Human-runnable Spark SQL selecting this rule's failing rows — the
@@ -430,7 +453,7 @@ class DqEngine:
         FALSE`). errors_count is attached via a counted CTE cross join
         rather than the reference's `COUNT(*) OVER ()` — identical values
         without a one-partition global window."""
-        dim = (f"'{rule.dimension}'" if rule.dimension
+        dim = (sql_str(rule.dimension) if rule.dimension
                else "CAST(NULL AS STRING)")
         stmt = "\n".join("  " + line for line in
                          rule.statement_sql.strip().splitlines())
@@ -456,9 +479,10 @@ class DqEngine:
             f"),\n"
             f"errs AS (SELECT COUNT(*) AS n FROM validation_errors)\n"
             f"SELECT\n"
-            f"  '{invocation_id}' AS _dq_validation_invocation_id,\n"
-            f"  '{binding.rule_binding_id}' AS _dq_validation_rule_binding_id,\n"
-            f"  '{rule.rule_id}' AS _dq_validation_rule_id,\n"
+            f"  {sql_str(invocation_id)} AS _dq_validation_invocation_id,\n"
+            f"  {sql_str(binding.rule_binding_id)} "
+            f"AS _dq_validation_rule_binding_id,\n"
+            f"  {sql_str(rule.rule_id)} AS _dq_validation_rule_id,\n"
             f"  CAST(NULL AS STRING) AS _dq_validation_column_id,\n"
             f"  CAST(NULL AS STRING) AS _dq_validation_column_value,\n"
             f"  CAST({dim} AS STRING) AS _dq_validation_dimension,\n"
@@ -469,48 +493,6 @@ class DqEngine:
             f"FROM validation_errors e CROSS JOIN errs\n"
             f"ORDER BY _dq_validation_rule_id"
         )
-
-    def failed_records_frame(
-        self,
-        binding: CompiledBinding,
-        projected: DataFrame,
-        row_rules: tuple[CompiledRule, ...],
-        *,
-        invocation_id: str,
-        execution_ts: datetime,
-    ) -> DataFrame:
-        """Long-format failing rows: one output row per (input row, failing
-        rule). Single pass: array of failing rule ids → filter → explode."""
-        failing = F.array_compact(F.array(*[
-            F.when(F.col(_valid_col_name(r.rule_id)) == False,  # noqa: E712
-                   F.lit(r.rule_id))
-            for r in row_rules
-        ]))
-        ref_cols = list(binding.reference_columns) or [binding.column_id]
-        return (
-            projected
-            .withColumn("__failing_rules", failing)
-            .where(F.size("__failing_rules") > 0)
-            .select(
-                F.explode("__failing_rules").alias("_dq_validation_rule_id"),
-                F.lit(binding.rule_binding_id).alias("_dq_validation_rule_binding_id"),
-                F.lit(binding.column_id).alias("_dq_validation_column_id"),
-                F.col(binding.column_id).cast("string")
-                 .alias("_dq_validation_column_value"),
-                F.to_json(F.struct(*[F.col(c) for c in ref_cols]))
-                 .alias("_dq_validation_reference_columns_json"),
-                F.lit(invocation_id).alias("_dq_validation_invocation_id"),
-                F.lit(execution_ts).alias("_dq_validation_execution_ts"),
-            )
-        )
-
-    def _write_failed_records(self, binding, projected, row_rules, *,
-                              invocation_id, execution_ts) -> None:
-        out = self.failed_records_frame(
-            binding, projected, row_rules,
-            invocation_id=invocation_id, execution_ts=execution_ts,
-        )
-        (out.write.mode("append").parquet(self.failed_records_path))
 
     # ---------- whole-run orchestration ----------
 
@@ -537,34 +519,21 @@ class DqEngine:
         invocation_id = invocation_id or uuid.uuid4().hex
         self.register_entity_views()
         rows: list[dict] = []
-        # group bindings by entity so a shared scan is read once per entity
-        by_entity: dict[str, list[CompiledBinding]] = {}
-        for rbid in rule_binding_ids:
-            b = compile_binding(self.registry, rbid,
-                                environment_target=self.environment_target)
-            by_entity.setdefault(b.table_name + "|" + b.source_format, []).append(b)
-
+        groups = self._entity_groups(rule_binding_ids)
         hwms = self.high_watermarks(
-            [b for g in by_entity.values() for b in g]) if incremental else {}
+            [b for g in groups for b in g]) if incremental else {}
 
         def run_group(bindings: list[CompiledBinding]) -> list[dict]:
-            df = self.read_entity(bindings[0])
-            out: list[dict] = []
-            for binding in bindings:
-                out.extend(self.run_binding(
-                    binding,
-                    invocation_id=invocation_id,
-                    execution_ts=execution_ts,
-                    df=df,
-                    progress_watermark=progress_watermark,
-                    incremental=incremental,
-                    write_failed_records=write_failed_records,
-                    last_modified=self.entity_last_modified(binding),
-                    hwm=hwms.get((binding.rule_binding_id, binding.table_name)),
-                ))
-            return out
+            return self.run_entity(
+                bindings,
+                invocation_id=invocation_id,
+                execution_ts=execution_ts,
+                progress_watermark=progress_watermark,
+                incremental=incremental,
+                write_failed_records=write_failed_records,
+                hwms=hwms,
+            )
 
-        groups = list(by_entity.values())
         if max_concurrency > 1 and len(groups) > 1:
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
@@ -591,39 +560,48 @@ class DqEngine:
         """Validate-only mode, the reference's default posture (main.py:
         146-151 dry-runs every generated script through BigQuery's dry-run
         API before executing anything): compile every binding, resolve its
-        entity + declared-vs-actual schema, build and ANALYZE each rule
-        plan — including statement SQL against the `data` view — but execute
-        nothing. No jobs run, no summary/failed-records output is written.
-        Returns one dict per binding with what WOULD run; config or
+        entity + declared-vs-actual schema, ANALYZE each entity's pass once
+        — every rule expression — and each statement against the `data`
+        view, but execute nothing. No jobs run, no summary/failed-records
+        output is written. Returns one dict per binding (grouped by entity,
+        as run() orders its summary rows) with what WOULD run; config or
         analysis errors raise exactly as a real run would."""
         self.register_entity_views()
         out: list[dict] = []
-        for rbid in rule_binding_ids:
-            binding = compile_binding(self.registry, rbid,
-                                      environment_target=self.environment_target)
-            df = self.read_entity(binding)  # declared-schema check happens here
-            filtered = binding.filter_df(df)
-            projected = self.projected_frame(binding, filtered)
-            _ = projected.schema  # force analysis of every rule expression
-            statement_ok: list[str] = []
-            if binding.statement_rules:
-                with self._statement_lock:
-                    filtered.createOrReplaceTempView("data")
-                    for rule in binding.statement_rules:
-                        _ = self.spark.sql(rule.statement_sql).schema
-                        statement_ok.append(rule.rule_id)
-            out.append({
-                "rule_binding_id": rbid,
-                "table": binding.table_name.format(**self.table_name_vars),
-                "filter": binding.filter_sql,
-                "column_id": binding.column_id,
-                "row_rules": [r.rule_id for r in
-                              binding.simple_rules + binding.batch_rules],
-                "statement_rules": statement_ok,
-                "physical_plan_head": projected._jdf.queryExecution()
-                    .simpleString().splitlines()[0],
-            })
+        for bindings in self._entity_groups(rule_binding_ids):
+            df = self.read_entity(bindings[0])  # declared-schema check here
+            q, projected = self.entity_frame(bindings, df=df)
+            plan_head = projected._jdf.queryExecution() \
+                .simpleString().splitlines()[0]
+            for binding, in_binding in zip(bindings, q.in_binding):
+                statement_ok: list[str] = []
+                if binding.statement_rules:
+                    with self._statement_lock:
+                        df.where(in_binding).createOrReplaceTempView("data")
+                        for rule in binding.statement_rules:
+                            _ = self.spark.sql(rule.statement_sql).schema
+                            statement_ok.append(rule.rule_id)
+                out.append({
+                    "rule_binding_id": binding.rule_binding_id,
+                    "table": binding.table_name.format(**self.table_name_vars),
+                    "filter": binding.filter_sql,
+                    "column_id": binding.column_id,
+                    "row_rules": [r.rule_id for r in binding.row_rules],
+                    "statement_rules": statement_ok,
+                    "physical_plan_head": plan_head,
+                })
         return out
+
+    def _entity_groups(self, rule_binding_ids: list[str]
+                       ) -> list[list[CompiledBinding]]:
+        """Compiled bindings grouped by the table they read, in first-seen
+        order: each group is validated in one pass."""
+        by_entity: dict[tuple[str, str], list[CompiledBinding]] = {}
+        for rbid in rule_binding_ids:
+            b = compile_binding(self.registry, rbid,
+                                environment_target=self.environment_target)
+            by_entity.setdefault((b.table_name, b.source_format), []).append(b)
+        return list(by_entity.values())
 
     def read_summary(self, deduped: bool = True) -> DataFrame:
         """Read the metrics table through the configured sink. With

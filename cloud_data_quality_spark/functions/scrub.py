@@ -55,9 +55,9 @@ def scrub_toxicity(col: Column, words: list[str] | None = None) -> Column:
 # matching none of these cannot be changed by any replace, so the guarded
 # chain is byte-identical while ~87% of (measured) web-text rows skip the
 # seven-pattern regex chain entirely. Mirrors webtext_rules._SCRUB_DETECT.
+# tests/test_text_functions.py::TestScrubGuardCoverage checks that it covers
+# every TOXICITY_WORDS entry.
 SCRUB_DETECT_PATTERN = r"[@0-9]|badword|slur"
-assert all(("badword" in w) or ("slur" in w) for w in TOXICITY_WORDS), \
-    "SCRUB_DETECT_PATTERN no longer covers TOXICITY_WORDS"
 
 
 def scrub_text(col: Column) -> Column:

@@ -283,11 +283,9 @@ def q_failed_records_acctbal(spark, sf_dir):
     reg = _dq_registry()
     binding = compile_binding(reg, "RB_CUSTOMER_ACCTBAL")
     eng = DqEngine(spark, reg, table_name_vars={"sf_dir": sf_dir})
-    df = eng.read_entity(binding)
-    projected = eng.projected_frame(binding, binding.filter_df(df))
-    fr = eng.failed_records_frame(
-        binding, projected, binding.simple_rules,
-        invocation_id="fixed", execution_ts=TS)
+    q, projected = eng.entity_frame([binding], df=eng.read_entity(binding),
+                                    invocation_id="fixed", execution_ts=TS)
+    fr = projected.selectExpr(*q.failed_records)
     return fr.select(
         F.col("_dq_validation_rule_id").alias("rule_id"),
         F.col("_dq_validation_column_value").cast("double").alias("column_value"),

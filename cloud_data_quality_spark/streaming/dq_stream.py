@@ -3,9 +3,9 @@
 The reference validates tables in scheduled batch runs; its "incremental"
 is a high-watermark re-query (clouddq/lib.py:274-306). On Spark the same
 rule bindings can run CONTINUOUSLY: each micro-batch of a stream is
-validated with the identical compiled plan (one projection + one agg per
-binding — engine/runner.py semantics, byte-for-byte the same summary
-contract) and the per-batch summary rows are upserted through the
+validated with the identical compiled plan (one entity pass over the
+micro-batch for all bindings — engine/runner.py semantics, byte-for-byte the
+same summary contract) and the per-batch summary rows are upserted through the
 engine's pluggable SummarySink, keyed by a per-batch dq_run_id
 (invocation_id = "<run>-b<batch_id>"), so re-processed micro-batches
 after a restart MERGE idempotently instead of double-counting — the
@@ -50,23 +50,20 @@ def run_bindings_on_stream(
 
     def validate_batch(batch_df: DataFrame, batch_id: int) -> None:
         execution_ts = datetime.now(timezone.utc)
-        rows: list[dict] = []
-        for binding in bindings:
-            batch_rows = engine.run_binding(
-                binding,
-                invocation_id=f"{run_id}-b{batch_id}",
-                execution_ts=execution_ts,
-                df=batch_df,
-                progress_watermark=False,  # batch boundaries ARE the progress
-            )
-            # batch-mode dq_run_id embeds execution_ts, which differs when a
-            # restart re-processes a batch — rewrite it to the batch-stable
-            # identity so re-processing MERGEs instead of double-counting,
-            # while execution_ts keeps reporting the actual validation time
-            for r in batch_rows:
-                r["dq_run_id"] = (f"{run_id}-b{batch_id}-"
-                                  f"{r['rule_binding_id']}-{r['rule_id']}")
-            rows.extend(batch_rows)
+        rows = engine.run_entity(
+            bindings,
+            invocation_id=f"{run_id}-b{batch_id}",
+            execution_ts=execution_ts,
+            df=batch_df,
+            progress_watermark=False,  # batch boundaries ARE the progress
+        )
+        # batch-mode dq_run_id embeds execution_ts, which differs when a
+        # restart re-processes a batch — rewrite it to the batch-stable
+        # identity so re-processing MERGEs instead of double-counting,
+        # while execution_ts keeps reporting the actual validation time
+        for r in rows:
+            r["dq_run_id"] = (f"{run_id}-b{batch_id}-"
+                              f"{r['rule_binding_id']}-{r['rule_id']}")
         if rows and engine.summary_sink is not None:
             from cloud_data_quality_spark.engine.summary import SUMMARY_SCHEMA
             field_names = [f.name for f in SUMMARY_SCHEMA.fields]

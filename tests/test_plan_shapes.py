@@ -1,13 +1,14 @@
 """Physical-plan assertions — the scale posture, checked mechanically.
 
 These lock in the properties that make the engine viable at 100 TB: filters
-reach the parquet scan, small sides broadcast, one scan per binding, no
+reach the parquet scan, small sides broadcast, one scan per entity, no
 global (empty-partition-by) windows, codegen'd projections.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -23,7 +24,8 @@ class TestPushdownAndPruning:
         from cloud_data_quality_spark.engine.runner import DqEngine
         eng = DqEngine(spark, contact_registry)
         b = compile_binding(contact_registry, "T2_EMAIL")
-        plan = plan_of(b.filter_df(eng.read_entity(b)))
+        _, projected = eng.entity_frame([b], df=eng.read_entity(b))
+        plan = plan_of(projected)
         assert "PushedFilters" in plan
         assert "contact_type" in plan.split("PushedFilters")[1][:200]
 
@@ -65,19 +67,27 @@ class TestJoinStrategies:
 
 class TestSinglePassExecution:
     def test_one_scan_per_binding(self, spark, contact_registry):
-        """The fused multi-rule projection reads the entity once — the
-        reference's UNION-ALL-per-rule shape would show one scan per rule."""
+        """All bindings of an entity share ONE scan — the fused pass, the
+        counts aggregate and the failed-records frame alike (the reference's
+        UNION-ALL-per-rule shape would show one scan per rule, a per-binding
+        pass one per binding). No Exchange sits between the scan and the
+        failed-records output, so the observed metrics are computed in the
+        write's own stage."""
         from cloud_data_quality_spark.compiler.binding import compile_binding
         from cloud_data_quality_spark.engine.runner import DqEngine
         eng = DqEngine(spark, contact_registry)
-        b = compile_binding(contact_registry, "T2_EMAIL")  # 5 rules
-        projected = eng.projected_frame(b, b.filter_df(eng.read_entity(b)))
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        for r in b.simple_rules:
-            v = F.col(f"__valid_{r.rule_id}")
-            aggs.append(F.count_if(v == True).alias(f"s_{r.rule_id}"))  # noqa: E712
-        plan = plan_of(projected.agg(*aggs))
+        bindings = [compile_binding(contact_registry, rbid) for rbid in
+                    ("T1_VALUE_NOT_NULL", "T2_EMAIL", "T9_INCREMENTAL")]
+        q, projected = eng.entity_frame(
+            bindings, df=eng.read_entity(bindings[0]))
+        counts = projected.selectExpr(f"{q.metric} AS m")
+        assert plan_of(counts).count("Scan parquet") == 1
+        failed = projected.observe(Observation(), F.expr(q.metric).alias("m")) \
+            .selectExpr(*q.failed_records)
+        plan = plan_of(failed)
+        assert "CollectMetrics" in plan
         assert plan.count("Scan parquet") == 1
+        assert "Exchange" not in plan
 
     def test_no_global_windows_in_summary_path(self, spark, contact_registry):
         """COUNT(*) OVER () transliterations would appear as a Window with an

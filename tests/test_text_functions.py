@@ -130,6 +130,32 @@ class TestScrub:
         assert s1.count("<EMAIL>") == 2 and "<IP>" in s1 and "<SSN>" in s1
 
 
+def _uncovered_by_scrub_guard(words: list[str]) -> list[str]:
+    """Words whose whole-word occurrence the candidate guard would miss:
+    a text containing the word then matches no guard alternative, so the
+    guarded scrub chain would leave it unscrubbed."""
+    import re
+
+    from cloud_data_quality_spark.functions.scrub import SCRUB_DETECT_PATTERN
+    return [w for w in words if not re.search(SCRUB_DETECT_PATTERN, w)]
+
+
+class TestScrubGuardCoverage:
+    def test_guard_covers_every_toxicity_word(self):
+        from cloud_data_quality_spark.functions.scrub import TOXICITY_WORDS
+        assert _uncovered_by_scrub_guard(TOXICITY_WORDS) == []
+
+    def test_uncovered_word_is_reported(self):
+        assert _uncovered_by_scrub_guard(["badword9", "jerk"]) == ["jerk"]
+
+    def test_batch_guard_mirrors_column_guard(self):
+        from cloud_data_quality_spark.functions.scrub import SCRUB_DETECT_PATTERN
+        from cloud_data_quality_spark.functions.webtext_rules import (
+            _SCRUB_DETECT,
+        )
+        assert _SCRUB_DETECT.pattern == SCRUB_DETECT_PATTERN
+
+
 class TestPerplexity:
     def test_english_lower_than_spam(self):
         ppl = perplexity_batch(pd.Series([
