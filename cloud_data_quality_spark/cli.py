@@ -164,9 +164,10 @@ def _require_unique_ids(df, id_col: str, op: str) -> None:
     ids (NULL never equi-joins; dup ids fan out / self-duplicate) — refuse
     loudly instead."""
     from pyspark.sql import functions as F
-    n_rows = df.count()
-    n_ids = df.select(id_col).where(
-        F.col(id_col).isNotNull()).distinct().count()
+    # one aggregate; count_distinct skips NULLs, so a NULL id also makes
+    # n_ids < n_rows
+    n_rows, n_ids = df.agg(F.count(F.lit(1)),
+                           F.count_distinct(F.col(id_col))).first()
     if n_ids != n_rows:
         raise SystemExit(
             f"{op}: --id-col {id_col!r} must be unique and non-null "

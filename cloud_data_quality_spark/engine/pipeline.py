@@ -35,9 +35,13 @@ Composition contract:
   (the same plan-pinned property as test_quality_filter.TestResume);
 * a stage's completion is recorded in the shared pipeline lineage
   (``{work_dir}/lineage``) as one row per partition (partition stages) or
-  one row with ``part_key = -1`` (global stages). Resume consults lineage
-  only — never output-directory existence, which a half-written stage also
-  has.
+  one row with ``part_key = -1`` (global stages). Lineage is read once per
+  run into a ledger (the run's rows only — units × buckets, not data); the
+  ledger is the only resume source — never output-directory existence,
+  which a half-written stage also has;
+* the next unit reads a unit's output with the schema the unit just wrote
+  (data columns, then ``part_key``, as partition discovery orders it), so
+  only a fully resumed unit pays a schema-inference job.
 
 Reference basis: CloudDQ's resumability is a high-watermark + MERGE
 idempotency on dq_run_id (clouddq/lib.py:274-306, dq_summary.sql:15-26);
@@ -50,17 +54,22 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable, Literal, Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cloud_data_quality_spark.engine.incremental import (
     LINEAGE_SCHEMA,
     ResumableQualityRun,
+    append_lineage,
     preserve_observations,
 )
 from cloud_data_quality_spark.engine.sinks import _hadoop_path_exists
 
 GLOBAL_PART_KEY = -1
+
+# unit run id -> that unit's lineage rows, as read at the start of a run
+Ledger = dict[str, list[Row]]
 
 
 @dataclass
@@ -125,20 +134,26 @@ class ResumableCurationPipeline:
 
     # ---------- lineage ----------
 
-    def _lineage(self):
-        if not _hadoop_path_exists(self.spark, self.lineage_path):
-            return None
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
+    def _read_ledger(self, run_id: str) -> Ledger:
+        """Every lineage row of ``run_id``'s units, in one job. The filter
+        keeps the trailing '/' so run 'r1' never sees run 'r10's units."""
+        ledger: Ledger = {}
+        if _hadoop_path_exists(self.spark, self.lineage_path):
+            for r in (self.spark.read.schema(LINEAGE_SCHEMA)
+                      .parquet(self.lineage_path)
+                      .where(F.col("run_id").startswith(f"{run_id}/"))
+                      .collect()):
+                ledger.setdefault(r["run_id"], []).append(r)
+        return ledger
 
     def _stage_run_id(self, run_id: str, idx: int, name: str) -> str:
         return f"{run_id}/{idx:02d}_{name}"
 
     def _mark_stage(self, stage_run_id: str, n_in: int, n_out: int) -> None:
-        self.spark.createDataFrame(
-            [(stage_run_id, GLOBAL_PART_KEY, "stage_committed",
-              n_in, n_out, time.time())],
-            schema=LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(self.lineage_path)
+        append_lineage(self.spark, self.lineage_path, [
+            {"run_id": stage_run_id, "part_key": GLOBAL_PART_KEY,
+             "status": "stage_committed", "n_in": n_in, "n_kept": n_out,
+             "finished_ts": time.time()}])
 
     # ---------- stage execution ----------
 
@@ -149,23 +164,10 @@ class ResumableCurationPipeline:
         # previous run's rows into any bucket the new run leaves empty
         return f"{self.work_dir}/{run_id}/{idx:02d}_{name}"
 
-    def _stage_totals(self, stage_run_id: str) -> tuple[int, int]:
-        """Whole-stage (n_in, n_kept) summed over committed lineage rows —
-        correct on resume, when the current process ran zero waves."""
-        lineage = self._lineage()
-        if lineage is None:
-            return 0, 0
-        row = (lineage.where((F.col("run_id") == stage_run_id)
-                             & (F.col("status") == "committed"))
-               .agg(F.coalesce(F.sum("n_in"), F.lit(0)).alias("i"),
-                    F.coalesce(F.sum("n_kept"), F.lit(0)).alias("k"))
-               .collect()[0])
-        return row["i"], row["k"]
-
     def _run_partition_stage(
         self, df: DataFrame, stage: PipelineStage, idx: int, run_id: str,
-        fail_at_partition: int | None,
-    ) -> StageResult:
+        ledger: Ledger, fail_at_partition: int | None,
+    ) -> tuple[StageResult, StructType | None]:
         base = self._stage_paths(run_id, idx, stage.name)
         # the first stage buckets by id hash; any stage whose input already
         # carries part_key (a previous stage's partitioned output) reuses it
@@ -181,32 +183,35 @@ class ResumableCurationPipeline:
             partitions_per_commit=self.partitions_per_commit,
         )
         stage_run_id = self._stage_run_id(run_id, idx, stage.name)
-        already = runner.committed_partitions(stage_run_id)
-        runner.run(df, stage.transform, run_id=stage_run_id,
-                   fail_at_partition=fail_at_partition)
-        # report lineage totals, not this process's delta — a resumed stage
-        # would otherwise claim rows_in/rows_out 0
-        n_in, n_kept = self._stage_totals(stage_run_id)
+        prior = [r for r in ledger.get(stage_run_id, ())
+                 if r["status"] == "committed"]
+        already = {r["part_key"] for r in prior}
+        res = runner.run(df, stage.transform, run_id=stage_run_id,
+                         fail_at_partition=fail_at_partition,
+                         committed=already)
+        # report whole-stage totals (earlier commits + this run's waves),
+        # not this process's delta — a resumed stage would otherwise claim
+        # rows_in/rows_out 0
         return StageResult(
             name=stage.name, kind="partition", output_path=f"{base}/out",
-            rows_in=n_in, rows_out=n_kept,
-            resumed=len(already) == self.n_buckets)
+            rows_in=sum(r["n_in"] for r in prior) + res.rows_in,
+            rows_out=sum(r["n_kept"] for r in prior) + res.rows_kept,
+            resumed=len(already) == self.n_buckets), res.output_schema
 
     def _run_global_stage(
         self, df: DataFrame, stage: PipelineStage, idx: int, run_id: str,
-    ) -> StageResult:
+        ledger: Ledger,
+    ) -> tuple[StageResult, StructType | None]:
         base = self._stage_paths(run_id, idx, stage.name)
         out_path = f"{base}/out"
         stage_run_id = self._stage_run_id(run_id, idx, stage.name)
-        lineage = self._lineage()
-        if lineage is not None:
-            prior = (lineage.where((F.col("run_id") == stage_run_id)
-                                   & (F.col("status") == "stage_committed"))
-                     .select("n_in", "n_kept").limit(1).collect())
-            if prior:
-                return StageResult(stage.name, "global", out_path,
-                                   rows_in=prior[0]["n_in"],
-                                   rows_out=prior[0]["n_kept"], resumed=True)
+        prior = [r for r in ledger.get(stage_run_id, ())
+                 if r["status"] == "stage_committed"]
+        if prior:
+            return StageResult(stage.name, "global", out_path,
+                               rows_in=prior[0]["n_in"],
+                               rows_out=prior[0]["n_kept"],
+                               resumed=True), None
         obs_in, obs_out = Observation(), Observation()
         keyed = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
         # the transform CALL must sit inside preserve_observations too: a
@@ -233,15 +238,20 @@ class ResumableCurationPipeline:
             n_in, n_out = obs_in.get["n"], obs_out.get["n"]
         self._mark_stage(stage_run_id, n_in, n_out)
         return StageResult(stage.name, "global", out_path, n_in, n_out,
-                           resumed=False)
+                           resumed=False), out.schema
 
     def _stage_output_frame(self, stage: PipelineStage, input_df: DataFrame,
-                            output_path: str) -> DataFrame:
-        """Stage output for the next stage. A stage that dropped EVERY row
-        wrote no parquet files (dynamic partition overwrite writes nothing;
-        a plain empty write leaves only _SUCCESS), so schema inference
-        fails — reconstruct an empty frame from the transform's ANALYZED
-        schema instead (pure plan analysis, no execution)."""
+                            output_path: str,
+                            written: StructType | None) -> DataFrame:
+        """Stage output for the next stage. A unit that ran in this process
+        passes ``written``, the schema of the frame it wrote: reading with
+        it needs no inference job (Spark still moves the part_key
+        partition column last, as inference does), also when the unit
+        dropped every row and left no parquet files. A fully resumed unit
+        infers the schema; if its output is empty, inference fails and the
+        empty frame is rebuilt from the transform's ANALYZED schema."""
+        if written is not None:
+            return self.spark.read.schema(written).parquet(output_path)
         from pyspark.errors import AnalysisException
         try:
             return self.spark.read.parquet(output_path)
@@ -347,6 +357,7 @@ class ResumableCurationPipeline:
         if len(set(names)) != len(names):
             raise ValueError(f"duplicate stage names: {names}")
         result = PipelineResult(run_id=run_id)
+        ledger = self._read_ledger(run_id)
         current = df
         for idx, members in enumerate(self._fuse_units(stages, fuse)):
             stage, pinned = self._unit_stage(members)
@@ -355,15 +366,16 @@ class ResumableCurationPipeline:
             t0 = time.perf_counter()
             try:
                 if stage.kind == "partition":
-                    res = self._run_partition_stage(
-                        current, stage, idx, run_id,
+                    res, written = self._run_partition_stage(
+                        current, stage, idx, run_id, ledger,
                         fail_at_partition=fail_at[1] if crash_here else None)
                 elif stage.kind == "global":
                     if crash_here:
                         raise RuntimeError(
                             f"simulated crash in global stage "
                             f"{fail_at[0]!r} (unit {stage.name!r})")
-                    res = self._run_global_stage(current, stage, idx, run_id)
+                    res, written = self._run_global_stage(
+                        current, stage, idx, run_id, ledger)
                 else:
                     raise ValueError(f"unknown stage kind {stage.kind!r}")
             finally:
@@ -373,5 +385,6 @@ class ResumableCurationPipeline:
             res.seconds = round(time.perf_counter() - t0, 3)
             res.members = member_names
             result.stages.append(res)
-            current = self._stage_output_frame(stage, current, res.output_path)
+            current = self._stage_output_frame(stage, current,
+                                               res.output_path, written)
         return result

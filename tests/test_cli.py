@@ -295,6 +295,41 @@ class TestCurate:
         out2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert all(s["resumed"] for s in out2["stages"])
 
+    def test_unit_read_back_schema_matches_inference(
+            self, spark, pages_parquet, tmp_path, capsys, monkeypatch):
+        """Each unit hands the next one its output read with the schema it
+        wrote; that must equal what parquet inference gives for the same
+        output (names, order, types), for every unit of a full curate."""
+        import json as _json
+
+        from cloud_data_quality_spark.engine.pipeline import (
+            ResumableCurationPipeline)
+        handed = {}
+        original = ResumableCurationPipeline._stage_output_frame
+
+        def record(self, stage, input_df, output_path, written):
+            frame = original(self, stage, input_df, output_path, written)
+            handed[output_path] = frame.schema
+            return frame
+
+        monkeypatch.setattr(ResumableCurationPipeline,
+                            "_stage_output_frame", record)
+        rc = main(["curate", "--input", pages_parquet,
+                   "--work-dir", str(tmp_path / "w"), "--run-id", "s",
+                   "--buckets", "4", "--span-dedup", "--max-per-host", "100",
+                   "--near-dedup", "0.5", "--keep-best",
+                   "--top-fraction", "0.5", "--pack-budget", "2048"])
+        assert rc == 0
+        out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert [s["name"] for s in out["stages"]] == \
+            ["quality", "span_dedup", "hosts", "dedup", "near_dedup",
+             "select_top", "pack"]
+        assert sorted(handed) == sorted(s["output"] for s in out["stages"])
+        for path, schema in handed.items():
+            inferred = spark.read.parquet(path).schema
+            assert [(f.name, f.dataType) for f in schema] == \
+                [(f.name, f.dataType) for f in inferred], path
+
 
 class TestCorpusNewOps:
     def test_c4_clean_paragraph_and_canonicalize(self, spark, tmp_path,
@@ -726,6 +761,16 @@ class TestCurateArgValidation:
         with pytest.raises(SystemExit, match="unique"):
             main(["curate", "--input", dup,
                   "--work-dir", str(tmp_path / "w3"), "--run-id", "x"])
+
+    def test_curate_refuses_a_null_id(self, spark, tmp_path):
+        ids = str(tmp_path / "cnull.parquet")
+        spark.createDataFrame(
+            [("u1", "text one here"), (None, "other text"),
+             ("u2", "third text")],
+            "url string, text string").write.parquet(ids)
+        with pytest.raises(SystemExit, match="unique"):
+            main(["curate", "--input", ids,
+                  "--work-dir", str(tmp_path / "w4"), "--run-id", "x"])
 
 
 class TestRound5Ops:

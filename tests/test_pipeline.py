@@ -332,3 +332,131 @@ class TestRunIsolationNoStaleRows:
         assert again.stages[0].rows_in == first.stages[0].rows_in > 0
         assert again.stages[0].rows_out == first.stages[0].rows_out > 0
         assert again.rows_out == first.rows_out
+
+
+def _count_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn started) — counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestLedger:
+    """Lineage is read once per run into an in-memory ledger that answers
+    every resume question; appends and unit read-backs start no jobs of
+    their own beyond the write."""
+
+    # STAGES over the 2k-page fixture at 8 buckets. Before the ledger, the
+    # per-append Python-list frames, the repeated lineage queries and the
+    # schema inference per unit made it 20 jobs fresh and 13 fully resumed;
+    # the ledger engine measures 11 fresh.
+    PARENT_FRESH_JOBS = 20
+
+    def test_job_counts_and_one_lineage_file_per_commit(
+            self, spark, pages, tmp_path):
+        work = tmp_path / "w"
+        pipe = ResumableCurationPipeline(spark, str(work), n_buckets=8)
+        first, fresh = _count_jobs(
+            spark, f"fresh-{work}",
+            lambda: pipe.run(pages, STAGES, run_id="j"))
+        again, resumed = _count_jobs(
+            spark, f"resumed-{work}",
+            lambda: pipe.run(pages, STAGES, run_id="j"))
+        assert not any(s.resumed for s in first.stages)
+        assert all(s.resumed for s in again.stages)
+        assert fresh <= self.PARENT_FRESH_JOBS - 3 * len(STAGES)
+        # one lineage read, then one schema read per resumed unit
+        assert resumed == 1 + len(STAGES)
+        # one wave of the partition unit + one mark per global unit
+        assert len(list((work / "lineage").glob("*.parquet"))) == 3
+
+    def test_fresh_object_resumes_a_crash(self, spark, pages, tmp_path):
+        work = str(tmp_path / "w")
+        with pytest.raises(RuntimeError, match="host_cap"):
+            ResumableCurationPipeline(spark, work, n_buckets=8).run(
+                pages, STAGES, run_id="k", fail_at=("host_cap", None))
+        res = ResumableCurationPipeline(spark, work, n_buckets=8).run(
+            pages, STAGES, run_id="k")
+        assert [s.resumed for s in res.stages] == [True, False, False]
+        want = sorted(r["url"] for r in
+                      _expected(pages).select("url").collect())
+        got = sorted(r["url"] for r in
+                     spark.read.parquet(res.stages[-1].output_path)
+                     .select("url").collect())
+        assert got == want
+        # lineage totals chain through the resumed unit
+        assert res.stages[0].rows_in == pages.count()
+        for up, down in zip(res.stages, res.stages[1:]):
+            assert down.rows_in == up.rows_out
+        assert res.rows_out == len(want)
+
+    def test_run_id_prefixes_do_not_leak(self, spark, pages, tmp_path):
+        """'r1' is a prefix of 'r10': neither run may see the other's
+        commits in a shared work dir."""
+        stages = [STAGES[0], STAGES[2]]
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=8)
+        r1 = pipe.run(pages, stages, run_id="r1")
+        r10 = pipe.run(pages, stages, run_id="r10")
+        assert not any(s.resumed for s in r10.stages)
+        assert all(k.startswith("r1/") for k in pipe._read_ledger("r1"))
+        assert all(k.startswith("r10/") for k in pipe._read_ledger("r10"))
+        again = pipe.run(pages, stages, run_id="r1")
+        assert all(s.resumed for s in again.stages)
+        totals = [(s.rows_in, s.rows_out) for s in r1.stages]
+        assert [(s.rows_in, s.rows_out) for s in r10.stages] == totals
+        assert [(s.rows_in, s.rows_out) for s in again.stages] == totals
+
+    def test_waved_unit_reports_whole_stage_totals_after_resume(
+            self, spark, pages, tmp_path):
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=8, partitions_per_commit=2)
+        stages = STAGES[:1]
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe.run(pages, stages, run_id="p", fail_at=("quality", 5))
+        q = pipe.run(pages, stages, run_id="p").stages[0]
+        assert not q.resumed
+        assert q.rows_in == pages.count()
+        assert q.rows_out == _quality(pages).count() \
+            == spark.read.parquet(q.output_path).count()
+
+
+class TestUnitReadBack:
+    def test_all_dropping_unit_hands_on_the_written_schema(
+            self, spark, pages, tmp_path, monkeypatch):
+        """A unit that dropped every row wrote no files; the next unit
+        still gets an empty frame with the schema a non-empty output of
+        the same unit reads back with."""
+        handed = []
+        original = ResumableCurationPipeline._stage_output_frame
+
+        def record(self, stage, input_df, output_path, written):
+            frame = original(self, stage, input_df, output_path, written)
+            handed.append((output_path, frame))
+            return frame
+
+        monkeypatch.setattr(ResumableCurationPipeline,
+                            "_stage_output_frame", record)
+
+        def stages(keep):
+            return [PipelineStage(
+                        "s", lambda d: d.where(F.length("text") >= 0)
+                        if keep else d.where(F.length("text") < 0),
+                        kind="partition"),
+                    PipelineStage("dedup", _exact_dedup, kind="global")]
+
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=4)
+        pipe.run(pages, stages(True), run_id="full")
+        full, handed[:] = list(handed), []
+        pipe.run(pages, stages(False), run_id="none")
+        assert len(handed) == len(full) == 2
+        for (full_path, _), (_, empty) in zip(full, handed):
+            inferred = spark.read.parquet(full_path).schema
+            assert [(f.name, f.dataType) for f in empty.schema] == \
+                [(f.name, f.dataType) for f in inferred]
+            assert empty.count() == 0
