@@ -5,13 +5,15 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
-All queries live in cloud_data_quality_spark/plans/registry.py, where each
-Spark query is paired with a DuckDB oracle generated from the same Python
-constants (stopword lists, thresholds, scrub patterns) so the two sides
-cannot drift. Every registered query has a full value oracle — including
-lsh_ann, whose DuckDB SQL replays the exact hyperplane constants (LSH is
-approximate w.r.t. brute force — recall is pytest-asserted — but fully
-deterministic given its planes, so its VALUES are exactly checkable).
+Each query is registered in the CASES table at the end of the
+cloud_data_quality_spark/plans/registry_* module that defines it, paired with
+a DuckDB oracle generated from the same Python constants (stopword lists,
+thresholds, scrub patterns) so the two sides cannot drift; plans/registry.py
+merges the tables into QUERIES and ORACLES. Every registered query has a full
+value oracle — including lsh_ann, whose DuckDB SQL replays the exact
+hyperplane constants (LSH is approximate w.r.t. brute force — recall is
+pytest-asserted — but fully deterministic given its planes, so its VALUES are
+exactly checkable).
 """
 
 from __future__ import annotations

@@ -120,7 +120,6 @@ class ResumableQualityRun:
         n_buckets: int = 16,
         partition_expr: str | None = None,
         partitions_per_commit: int | None = None,
-        compact_output: bool = True,
     ):
         self.spark = spark
         self.output_path = output_path
@@ -128,7 +127,6 @@ class ResumableQualityRun:
         self.n_buckets = n_buckets
         self.partition_expr = partition_expr or f"pmod(xxhash64(url), {n_buckets})"
         self.partitions_per_commit = partitions_per_commit
-        self.compact_output = compact_output
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def _lineage_exists(self) -> bool:
@@ -193,13 +191,12 @@ class ResumableQualityRun:
         wave: Sequence[int],
     ) -> tuple[int, int, StructType]:
         out, obs_in, obs_out = self.wave_plan(df, transform, wave)
-        if self.compact_output:
-            # cluster rows by bucket before the partitioned write: without
-            # it every write task opens a file in every partition dir
-            # (tasks × buckets small files — 512 at 32×16; measured ~1.6×
-            # slower than shuffling the kept rows once and writing one file
-            # per bucket, and the small files then tax every downstream read)
-            out = out.repartition(self.n_buckets, "part_key")
+        # cluster rows by bucket before the partitioned write: without it
+        # every write task opens a file in every partition dir (tasks ×
+        # buckets small files — 512 at 32×16; measured ~1.6× slower than
+        # shuffling the kept rows once and writing one file per bucket, and
+        # the small files then tax every downstream read)
+        out = out.repartition(self.n_buckets, "part_key")
         with preserve_observations(self.spark):
             (out.write.mode("overwrite")
              .partitionBy("part_key").parquet(self.output_path))

@@ -225,7 +225,7 @@ class ResumableCurationPipeline:
             writer_df = out
             if "part_key" in out.columns:
                 # cluster rows by bucket before the partitioned write —
-                # same rationale as ResumableQualityRun's compact_output:
+                # same rationale as ResumableQualityRun._run_wave:
                 # without it every write task opens a file in every bucket
                 # dir (tasks × buckets small files that tax every
                 # downstream stage read) and the dynamic-partition writer

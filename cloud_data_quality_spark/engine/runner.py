@@ -60,9 +60,9 @@ from cloud_data_quality_spark.compiler.binding import (
 from cloud_data_quality_spark.config.loader import ConfigRegistry
 from cloud_data_quality_spark.config.model import RuleType
 from cloud_data_quality_spark.engine.summary import (
-    SUMMARY_SCHEMA,
     RuleCounts,
     build_summary_row,
+    summary_frame,
 )
 from cloud_data_quality_spark.functions.batch_registry import get_batch_function
 
@@ -204,37 +204,21 @@ class DqEngine:
 
     # ---------- watermark (reference: clouddq/lib.py:274-306) ----------
 
-    def high_watermark(self, binding: CompiledBinding) -> datetime:
-        """Newest watermarked execution_ts for this binding, read through the
-        configured SummarySink — NOT a raw parquet path, so incremental runs
-        work with every sink (MERGE INTO tables have no summary_path at all).
-        A sink whose backing table/path doesn't exist yet means no prior run:
-        EPOCH — probed via sink.exists(), never by catching a read failure,
-        so a store that EXISTS but can't be read (corrupt state that would
-        silently re-scan everything forever) propagates loudly.
-        deduped=False: max(execution_ts) needs no per-run dedupe."""
-        if self.summary_sink is None or not self.summary_sink.exists(self.spark):
-            return EPOCH
-        summary = self.summary_sink.read(self.spark, deduped=False)
-        row = (
-            summary.where(
-                (F.col("rule_binding_id") == binding.rule_binding_id)
-                & (F.col("table_id") == binding.table_name)
-                & (F.col("progress_watermark") == True)  # noqa: E712
-            )
-            .agg(F.coalesce(F.max("execution_ts"), F.lit(EPOCH)).alias("hwm"))
-            .collect()[0]
-        )
-        return _aware_utc(row["hwm"] or EPOCH)
-
     def high_watermarks(
         self, bindings: list[CompiledBinding],
     ) -> dict[tuple[str, str], datetime]:
-        """Batched watermark lookup: ONE groupBy job over the summary store
-        for every incremental binding in the run. A run with hundreds of
-        incremental bindings previously launched one scalar agg job each
-        over the same summary; driver job-submission latency dominated.
-        Same sink-routed read and EPOCH semantics as high_watermark()."""
+        """Newest watermarked execution_ts per incremental (binding, table),
+        in ONE groupBy job over the summary store for every binding of the
+        run (one scalar job per binding let job-submission latency dominate
+        runs with hundreds of incremental bindings). Read through the
+        configured SummarySink — NOT a raw parquet path, so incremental runs
+        work with every sink (MERGE INTO tables have no summary_path at all).
+        A binding with no prior watermarked run maps to EPOCH, and so does
+        every binding when the sink's table/path doesn't exist yet — probed
+        via sink.exists(), never by catching a read failure, so a store that
+        EXISTS but can't be read (corrupt state that would silently re-scan
+        everything forever) propagates loudly. deduped=False: max(execution_ts)
+        needs no per-run dedupe."""
         keys = {(b.rule_binding_id, b.table_name)
                 for b in bindings if b.incremental_column}
         out = {k: EPOCH for k in keys}
@@ -299,18 +283,16 @@ class DqEngine:
         """Validate bindings that read one entity in one pass → summary-row
         dicts in binding order. ``df`` stands in for the entity scan (a
         stream's micro-batch); ``hwms``: watermarks precomputed by
-        high_watermarks(), looked up individually when missing."""
+        high_watermarks(), looked up here in one job when not given."""
         last_modified = None
         if df is None:
             df = self.read_entity(bindings[0])
             last_modified = self.entity_last_modified(bindings[0])
-        windows = []
-        for b in bindings:
-            if incremental and b.incremental_column:
-                hwm = (hwms or {}).get((b.rule_binding_id, b.table_name))
-                windows.append((hwm or self.high_watermark(b), execution_ts))
-            else:
-                windows.append(None)
+        if incremental and hwms is None:
+            hwms = self.high_watermarks(bindings)
+        windows = [(hwms[(b.rule_binding_id, b.table_name)], execution_ts)
+                   if incremental and b.incremental_column else None
+                   for b in bindings]
         q, projected = self.entity_frame(
             bindings, df=df, windows=windows, invocation_id=invocation_id,
             execution_ts=execution_ts)
@@ -542,14 +524,7 @@ class DqEngine:
         else:
             for bindings in groups:
                 rows.extend(run_group(bindings))
-        # plain tuples, NOT a pandas frame: pandas coerces None in integer
-        # columns to NaN, which createDataFrame rejects for LongType when the
-        # session doesn't have Arrow enabled (the driver's session may not)
-        field_names = [f.name for f in SUMMARY_SCHEMA.fields]
-        summary = self.spark.createDataFrame(
-            [tuple(r[k] for k in field_names) for r in rows],
-            schema=SUMMARY_SCHEMA,
-        ) if rows else self.spark.createDataFrame([], schema=SUMMARY_SCHEMA)
+        summary = summary_frame(self.spark, rows)
         if write_summary and self.summary_sink is not None:
             self.summary_sink.write(summary)
         return RunResult(invocation_id=invocation_id, summary=summary,

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from datetime import datetime
 from typing import Any
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 SUMMARY_SCHEMA = T.StructType([
@@ -126,3 +127,13 @@ def build_summary_row(
         "null_percentage": None if null_nulled else counts.null / rows_validated,
         "failed_records_query": counts.failed_records_query,
     }
+
+
+def summary_frame(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
+    """Summary-row dicts → a SUMMARY_SCHEMA frame. Plain tuples, NOT a pandas
+    frame: pandas coerces None in integer columns to NaN, which
+    createDataFrame rejects for LongType when the session doesn't have Arrow
+    enabled (the driver's session may not)."""
+    return spark.createDataFrame(
+        [tuple(r[f.name] for f in SUMMARY_SCHEMA.fields) for r in rows],
+        schema=SUMMARY_SCHEMA)

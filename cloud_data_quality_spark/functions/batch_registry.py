@@ -41,8 +41,3 @@ def get_batch_function(name: str) -> Callable[[pd.Series, dict], pd.Series]:
             f"Unknown batch function {name!r}; registered: {sorted(_REGISTRY)}"
         )
     return fn
-
-
-def registered_names() -> list[str]:
-    import cloud_data_quality_spark.functions.webtext_rules  # noqa: F401
-    return sorted(_REGISTRY)

@@ -368,10 +368,6 @@ def encode_word(word: str) -> tuple[str, ...]:
     return make_word_encoder(tuple(BPE_MERGES))(word)
 
 
-def word_token_count(word: str) -> int:
-    return len(encode_word(word))
-
-
 def doc_token_count(text: str | None,
                     merges: tuple[tuple[str, str], ...] | None = None) -> int:
     enc = (make_word_encoder(merges) if merges is not None

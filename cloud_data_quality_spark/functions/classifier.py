@@ -13,8 +13,8 @@ row inside the map stage (features of one doc are co-partitioned by
 construction — explode never crosses partitions), so the only Exchange
 moves ~one row per document. Weights are integer micro-units: int64
 aggregation is exact and order-free, which is what lets the DuckDB oracle
-replay every score bit-for-bit (plans/registry.py classifier_score_docs)
-and keeps cross-parallelism runs byte-identical.
+replay every score bit-for-bit (plans/registry_corpus.py
+classifier_score_docs) and keeps cross-parallelism runs byte-identical.
 
 Reference anchor: CloudDQ rules are YAML->SQL predicates over columns
 (clouddq/classes/rule.py, rule_type.py); this operator is the same
@@ -37,21 +37,11 @@ from cloud_data_quality_spark.functions.qc_artifact import (
     QC_WEIGHTS_MICRO,
     feature_bucket,
 )
-from cloud_data_quality_spark.functions.text import py_tokens
 
 #: md5 buckets memoized per unique feature string across batches — web text
 #: token vocabularies are Zipfian, so the cache hit rate approaches 1 after
 #: the first few batches on an executor
 _BUCKET_CACHE: dict[str, int] = {}
-
-
-def _cached_bucket(feat: str) -> int:
-    b = _BUCKET_CACHE.get(feat)
-    if b is None:
-        b = feature_bucket(feat)
-        if len(_BUCKET_CACHE) < 1_000_000:  # bound executor memory
-            _BUCKET_CACHE[feat] = b
-    return b
 
 
 def batch_feature_sums(texts: pd.Series,

@@ -61,8 +61,8 @@ Scale posture (10^12 docs):
 * stratified_sample is a pure narrow filter — no shuffle at all.
 
 All three use md5-derived keys (not xxhash64) so every decision has an
-exact DuckDB oracle — see plans/registry.py. A production fork can swap
-xxhash64 behind the same shape.
+exact DuckDB oracle — see plans/registry_corpus.py. A production fork can
+swap xxhash64 behind the same shape.
 """
 
 from __future__ import annotations
@@ -889,9 +889,9 @@ class SeenMinhashStore:
 
 #: C4 §2.2 (Raffel et al. 2020, public) line/document heuristics. The
 #: constants are consumed by BOTH the Column implementation below and the
-#: generated DuckDB oracle (registry._oracle_c4_line_filter) so they can't
-#: drift. Reference DQ engine has no corpus-rewrite operator (rule_type.py
-#: stops at REGEX) — pipeline extension, not parity.
+#: generated DuckDB oracle (registry_corpus._oracle_c4_line_filter) so they
+#: can't drift. Reference DQ engine has no corpus-rewrite operator
+#: (rule_type.py stops at REGEX) — pipeline extension, not parity.
 C4_TERMINAL_PUNCT_RE = '[.!?"]$'
 C4_MIN_LINE_WORDS = 5
 C4_MIN_LINES_KEPT = 3

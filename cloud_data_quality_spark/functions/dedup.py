@@ -140,14 +140,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
             .otherwise(F.array_distinct(grams))
 
 
-def minhash_signature(col: Column, n: int = 3, k: int = 8) -> Column:
-    """Bottom-k sketch: the k lexicographically-smallest md5(shingle) digests.
-    A valid MinHash variant (single hash, bottom-k) — estimator of Jaccard via
-    sketch overlap; deterministic and portable."""
-    hashes = F.array_sort(F.transform(word_shingles(col, n), F.md5))
-    return F.slice(hashes, 1, k)
-
-
 def _shingle_hexes(text, n: int) -> list[str]:
     """Sorted md5 hex digests of a doc's distinct word n-gram shingles —
     the Python twin of array_sort(transform(word_shingles(col,n), md5)).

@@ -21,7 +21,8 @@ single '<unk>' symbol BEFORE counting, so every count table is over the
 closed vocab and the model degrades gracefully on unseen text.
 
 Every arithmetic step is exactly replayable in DuckDB (integer counts,
-double divisions, ln, round-4) — see plans/registry.ORACLE_TRIGRAM_LOGPROB.
+double divisions, ln, round-4) — see
+plans/registry_corpus.ORACLE_TRIGRAM_LOGPROB.
 
 Scale posture (10^12 docs):
 * the only corpus-wide shuffle is ONE hash partition by doc id for the

@@ -68,16 +68,6 @@ def scrub_text(col: Column) -> Column:
                   scrub_toxicity(scrub_pii(col))).otherwise(col)
 
 
-def pii_hit_count(col: Column) -> Column:
-    """Number of PII matches (for metrics / keep-drop reasons) — counted by
-    scrubbing and diffing lengths is ambiguous, so count per pattern."""
-    total = F.lit(0).cast("bigint")
-    for _, pattern, _ in SCRUB_PATTERNS:
-        total = total + F.coalesce(
-            F.regexp_count(col, F.lit(pattern)).cast("bigint"), F.lit(0))
-    return total
-
-
 def has_pii(col: Column) -> Column:
     cond = F.lit(False)
     for _, pattern, _ in SCRUB_PATTERNS:

@@ -88,10 +88,6 @@ def _count_in(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("bigint")
 
 
-def stopword_count(col: Column, stopwords: list[str] | None = None) -> Column:
-    return _count_in(tokens(col), stopwords or EN_STOPWORDS)
-
-
 def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
     """C4 keeps docs whose stopword ratio is high enough; ratio over tokens."""
     toks = tokens(col)
@@ -105,24 +101,8 @@ def alpha_ratio(col: Column) -> Column:
     return (alpha.cast("double") / F.nullif(F.length(col), F.lit(0))).cast("double")
 
 
-def digit_ratio(col: Column) -> Column:
-    digits = F.length(F.regexp_replace(col, "[^0-9]", ""))
-    return (digits.cast("double") / F.nullif(F.length(col), F.lit(0))).cast("double")
-
-
 def lines(col: Column) -> Column:
     return F.split(col, "\n")
-
-
-def line_count(col: Column) -> Column:
-    return F.size(lines(col)).cast("bigint")
-
-
-def mean_line_length(col: Column) -> Column:
-    """Gopher: mean characters per line; boilerplate has very short lines."""
-    ls = lines(col)
-    total = F.aggregate(ls, F.lit(0).cast("bigint"), lambda acc, l: acc + F.length(l))
-    return (total.cast("double") / F.nullif(F.size(ls), F.lit(0))).cast("double")
 
 
 def duplicate_line_fraction(col: Column) -> Column:

@@ -32,8 +32,6 @@ from cloud_data_quality_spark.functions.text import (
     EN_STOPWORDS,
     ES_MARKERS,
     FR_MARKERS,
-    PY_ONLY_WS_RE,
-    py_tokens,
 )
 from cloud_data_quality_spark.functions.scrub import SCRUB_PATTERNS, TOXICITY_WORDS
 
@@ -51,21 +49,6 @@ _MARKER_RE = {
 }
 _CJK_RE = re.compile("[一-鿿]")
 _LANG_PRIORITY = ["en", "es", "fr", "de"]  # deterministic tie-break
-
-
-def _java_ws_token_lists(s: pd.Series) -> pd.Series:
-    """Vectorized str.split() with per-row correction on the (rare) rows
-    where Python's Unicode whitespace diverges from Java \\s — keeps the
-    fast path for ASCII web text while staying byte-parity with
-    functions/text.tokens (the Column path) and sql_tokens (the oracle).
-    (The quality/classifier hot paths use _arrow_token_core instead —
-    Arrow's ascii split IS the Java class, no correction pass needed.)"""
-    tok_lists = s.str.split()
-    mask = s.str.contains(PY_ONLY_WS_RE, na=False)
-    if mask.any():
-        tok_lists = tok_lists.copy()
-        tok_lists[mask] = s[mask].map(py_tokens)
-    return tok_lists
 
 
 #: bool LUT over the full codepoint plane for the scrub/PII candidate

@@ -61,20 +61,6 @@ def _count_in_col(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda w: F.array_contains(arr, w))).cast("bigint")
 
 
-def quality_features(text_col: Column) -> dict[str, Column]:
-    return {
-        "lang_pred": TX.langid(text_col),
-        "n_chars": TX.char_count(text_col),
-        "n_words": TX.word_count(text_col),
-        "mean_word_len": TX.mean_word_length(text_col),
-        "alpha_ratio": TX.alpha_ratio(text_col),
-        "cjk_ratio": TX.cjk_ratio(text_col),
-        "dup_token_frac": TX.duplicate_token_fraction(text_col),
-        "dup_line_frac": TX.duplicate_line_fraction(text_col),
-        "has_toxicity": F.coalesce(text_col.rlike(TOX_PATTERN), F.lit(False)),
-    }
-
-
 def gates(feat: dict[str, Column], t: QualityThresholds) -> list[tuple[str, Column]]:
     """Ordered (name, passes) gate list — order defines drop_reason priority.
     A NULL feature fails its gate (coalesce False): NULL/empty text drops."""
@@ -252,10 +238,6 @@ def annotate_quality(
         out = out.withColumn("scrubbed_text", scrub_text(col))
     return out.drop("__barrier", "__toks", "__lines",
                     "__s_en", "__s_es", "__s_fr", "__s_de")
-
-
-def filter_kept(df: DataFrame, **kw) -> DataFrame:
-    return annotate_quality(df, **kw).where(F.col("keep"))
 
 
 def quality_summary(annotated: DataFrame) -> DataFrame:

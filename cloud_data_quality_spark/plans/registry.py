@@ -6,434 +6,28 @@ driver runs both at sf0.01 and compares row count + schema + order-insensitive
 value hash (see __spark_entry__.py). Column names/types are aliased
 identically on both sides; floats are rounded to fixed decimals on both sides.
 
+A query is registered where it is defined: each registry_* module ends with
+one ``CASES`` table, name → (query, oracle SQL). This module only merges them
+(tests/test_registry_tables.py checks that the names are disjoint).
+
 Conventions:
 * deterministic only — no current_timestamp, no rand, fixed execution_ts
   for engine runs;
 * counts cast to BIGINT on both sides;
-* lsh_ann is approximate w.r.t. BRUTE FORCE (recall pytest-asserted) but
-  deterministic given its hyperplanes, so it still carries an exact value
-  oracle generated from the shared plane constants (_oracle_lsh_ann).
+* approximate operators (LSH/IVF ANN) are approximate w.r.t. BRUTE FORCE
+  (recall pytest-asserted) but deterministic given their constants, so they
+  still carry an exact value oracle generated from the same constants.
 """
 
 from __future__ import annotations
 
-from cloud_data_quality_spark.plans.registry_dq import (  # noqa: F401
-    ORACLE_ACCURACY_DISTRIBUTION_EVENTS,
-    ORACLE_ACCURACY_DISTRIBUTION_TRUE,
-    ORACLE_ARRAY_AGGREGATE_RULE,
-    ORACLE_EVENTS_VOLUME_PER_DAY,
-    ORACLE_FAILED_RECORDS_ACCTBAL,
-    ORACLE_FAILED_RECORDS_DUP_STATEMENT,
-    ORACLE_INTEGRITY_LINEITEM_PART,
-    ORACLE_INTEGRITY_UNNEST_JOIN,
-    ORACLE_JSON_FIELD_THRESHOLD,
-    ORACLE_RB_CUSTOMER_RULES,
-    ORACLE_RB_ENTITY_URI_AND_ENV,
-    ORACLE_RB_EVENTS_WINDOW,
-    ORACLE_RB_ORDERS_DUP,
-    ORACLE_SESSIONIZE_EVENTS,
-    ORACLE_TIMELINESS_RECENT_EVENTS,
-    REF_UNNEST_INTEGRITY_EXPR,
-    REF_UNNEST_SUM_EXPR,
-    _run_dq,
-    q_accuracy_distribution_events,
-    q_accuracy_distribution_true,
-    q_array_aggregate_rule,
-    q_events_volume_per_day,
-    q_failed_records_acctbal,
-    q_failed_records_dup_statement,
-    q_integrity_lineitem_part,
-    q_integrity_unnest_join,
-    q_json_field_threshold,
-    q_rb_customer_rules,
-    q_rb_entity_uri_and_env,
-    q_rb_events_window,
-    q_rb_orders_dup_statement,
-    q_sessionize_events,
-    q_timeliness_recent_events,
+from cloud_data_quality_spark.plans import (
+    registry_corpus,
+    registry_dq,
+    registry_similarity,
 )
+from cloud_data_quality_spark.plans.registry_dq import _run_dq  # noqa: F401
 
-from cloud_data_quality_spark.plans.registry_similarity import (  # noqa: F401
-    ORACLE_ANN_TOPK,
-    ORACLE_DEDUP_EXACT_PREFIX,
-    ORACLE_EMBEDDING_PAIRS,
-    ORACLE_INCREMENTAL_DEDUP_DOCS,
-    ORACLE_INCREMENTAL_MINHASH_DOCS,
-    ORACLE_MINHASH_CLUSTERS,
-    ORACLE_MINHASH_PAIRS,
-    ORACLE_NGRAM_JACCARD_PAIRS,
-    ORACLE_SIMHASH_PAIRS,
-    ORACLE_SPAN_DEDUP_DOCS,
-    ORACLE_SUBSTRING_DEDUP_DOCS,
-    _oracle_containment_pairs,
-    _oracle_ivf_ann,
-    _oracle_lsh_ann,
-    _oracle_semantic_dedup,
-    q_ann_topk,
-    q_containment_pairs,
-    q_dedup_exact_prefix,
-    q_embedding_pairs,
-    q_incremental_dedup_docs,
-    q_incremental_minhash_docs,
-    q_ivf_ann,
-    q_lsh_ann,
-    q_minhash_clusters,
-    q_minhash_pairs,
-    q_ngram_jaccard_pairs,
-    q_semantic_dedup,
-    q_semantic_dedup_np,
-    q_quantized_ann,
-    ORACLE_QUANTIZED_ANN,
-    q_best_rep_dedup,
-    ORACLE_BEST_REP_DEDUP,
-    q_simhash_pairs,
-    q_span_dedup_docs,
-    q_substring_dedup_docs,
-)
-
-from cloud_data_quality_spark.plans.registry_corpus import (  # noqa: F401
-    ORACLE_CHUNK_DOCUMENTS,
-    ORACLE_DECONTAMINATE_DOCS,
-    ORACLE_PACK_DOCUMENTS,
-    ORACLE_PACK_DOCUMENTS_BPE,
-    ORACLE_PACK_DOCUMENTS_BPE_1K,
-    ORACLE_PII_SCRUB,
-    ORACLE_REPETITION_STATS_DOCS,
-    ORACLE_TEXT_FINGERPRINT,
-    ORACLE_TEXT_LANGID,
-    ORACLE_TEXT_STATS,
-    ORACLE_TOKEN_COUNT_BY_SOURCE,
-    ORACLE_TOPK_DOCS_PER_LANG,
-    ORACLE_TOP_QUALITY,
-    ORACLE_TRIGRAM_LOGPROB,
-    ORACLE_UNIGRAM_LOGPROB,
-    ORACLE_UNIGRAM_LOGPROB_TOPK,
-    _oracle_audio_metadata,
-    _oracle_bpe_tokens,
-    _oracle_c4_line_filter,
-    _oracle_canonical_urls,
-    _oracle_classifier_score,
-    _oracle_curation_pipeline,
-    _oracle_dataset_split,
-    _oracle_dsir_scores,
-    _oracle_dup_ngram_stats,
-    _oracle_extract_text_roundtrip,
-    _oracle_host_capped_sample,
-    _oracle_image_metadata,
-    _oracle_importance_resample,
-    _oracle_paragraph_stats,
-    _oracle_perplexity_buckets,
-    _oracle_quality_rollup,
-    _oracle_quality_verdict,
-    _oracle_rollup_quality,
-    _oracle_rule_attribution,
-    _oracle_stratified_sample,
-    _oracle_token_budget_select,
-    _oracle_corpus_vocab,
-    _oracle_dedup_lines_docs,
-    _oracle_temperature_mix,
-    _oracle_encoding_stats,
-    _oracle_inverted_index,
-    _oracle_readability_stats,
-    _oracle_script_stats,
-    _oracle_corpus_shuffle_positions,
-    _oracle_snapshot_line_diff,
-    _oracle_pack_utilization,
-    _oracle_bm25_topk,
-    _oracle_snapshot_diff,
-    _oracle_top_anchor_texts,
-    _oracle_vocab_oov_docs,
-    _oracle_corpus_profile,
-    _oracle_host_boilerplate,
-    _oracle_host_pagerank,
-    _oracle_host_quality_prior,
-    _oracle_normalize_text,
-    _oracle_url_hygiene_filter,
-    _oracle_tfidf_top_terms,
-    _oracle_url_revision_dedup,
-    _oracle_video_metadata,
-    q_audio_metadata,
-    q_bpe_tokens,
-    q_c4_line_filter,
-    q_canonical_urls,
-    q_chunk_documents,
-    q_classifier_score_docs,
-    q_curation_pipeline_docs,
-    q_shard_manifest_docs,
-    _oracle_shard_manifest,
-    q_media_filter_docs,
-    _oracle_media_filter,
-    q_warc_extract_docs,
-    _oracle_warc_extract,
-    q_html_meta_docs,
-    _oracle_html_meta,
-    q_robots_filter_docs,
-    _oracle_robots_filter,
-    q_dataset_split_docs,
-    q_decontaminate_docs,
-    q_dsir_scores,
-    q_dup_ngram_stats_docs,
-    q_extract_text_roundtrip,
-    q_host_capped_sample,
-    q_image_metadata,
-    q_importance_resample_docs,
-    q_pack_documents,
-    q_pack_documents_bpe,
-    q_pack_documents_bpe_1k,
-    q_pack_documents_bpe_8k,
-    _oracle_pack_bpe_8k,
-    q_paragraph_stats,
-    q_perplexity_buckets_docs,
-    q_pii_scrub,
-    q_quality_rollup,
-    q_quality_verdict,
-    q_rule_attribution,
-    q_repetition_stats_docs,
-    q_rollup_quality,
-    q_stratified_sample_docs,
-    q_text_fingerprint,
-    q_text_langid,
-    q_text_stats,
-    q_token_budget_select,
-    q_corpus_vocab,
-    q_dedup_lines_docs,
-    q_temperature_mix,
-    q_encoding_stats,
-    q_inverted_index,
-    q_readability_stats,
-    q_script_stats,
-    q_corpus_shuffle_positions,
-    q_snapshot_line_diff,
-    q_pack_utilization,
-    q_bm25_topk,
-    q_snapshot_diff,
-    q_top_anchor_texts,
-    q_vocab_oov_docs,
-    q_token_count_by_source,
-    q_top_quality_docs,
-    q_topk_docs_per_lang,
-    q_trigram_logprob,
-    q_unigram_logprob,
-    q_unigram_logprob_topk,
-    q_corpus_profile,
-    q_host_boilerplate,
-    q_host_pagerank,
-    q_host_quality_prior,
-    q_normalize_text,
-    q_url_hygiene_filter,
-    q_tfidf_top_terms,
-    q_url_revision_dedup,
-    q_video_metadata,
-)
-
-
-
-# --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-QUERIES = {
-    "rb_customer_rules": q_rb_customer_rules,
-    "rb_orders_dup_statement": q_rb_orders_dup_statement,
-    "rb_entity_uri_and_env": q_rb_entity_uri_and_env,
-    "rb_events_window": q_rb_events_window,
-    "failed_records_acctbal": q_failed_records_acctbal,
-    "failed_records_dup_statement": q_failed_records_dup_statement,
-    "extract_text_roundtrip": q_extract_text_roundtrip,
-    "pack_documents": q_pack_documents,
-    "pack_documents_bpe": q_pack_documents_bpe,
-    "pack_documents_bpe_1k": q_pack_documents_bpe_1k,
-    "pack_documents_bpe_8k": q_pack_documents_bpe_8k,
-    "text_stats": q_text_stats,
-    "text_langid": q_text_langid,
-    "text_fingerprint": q_text_fingerprint,
-    "pii_scrub": q_pii_scrub,
-    "quality_verdict": q_quality_verdict,
-    "quality_rollup": q_quality_rollup,
-    "token_count_by_source": q_token_count_by_source,
-    "unigram_logprob": q_unigram_logprob,
-    "unigram_logprob_topk": q_unigram_logprob_topk,
-    "trigram_logprob": q_trigram_logprob,
-    "dedup_exact_prefix": q_dedup_exact_prefix,
-    "minhash_pairs": q_minhash_pairs,
-    "minhash_clusters": q_minhash_clusters,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "embedding_pairs": q_embedding_pairs,
-    "ann_topk": q_ann_topk,
-    "simhash_pairs": q_simhash_pairs,
-    "lsh_ann": q_lsh_ann,
-    "events_volume_per_day": q_events_volume_per_day,
-    "accuracy_distribution_events": q_accuracy_distribution_events,
-    "accuracy_distribution_true": q_accuracy_distribution_true,
-    "json_field_threshold": q_json_field_threshold,
-    "array_aggregate_rule": q_array_aggregate_rule,
-    "sessionize_events": q_sessionize_events,
-    "rollup_quality": q_rollup_quality,
-    "topk_docs_per_lang": q_topk_docs_per_lang,
-    "integrity_lineitem_part": q_integrity_lineitem_part,
-    "integrity_unnest_join": q_integrity_unnest_join,
-    "timeliness_recent_events": q_timeliness_recent_events,
-    "span_dedup_docs": q_span_dedup_docs,
-    "substring_dedup_docs": q_substring_dedup_docs,
-    "incremental_dedup_docs": q_incremental_dedup_docs,
-    "incremental_minhash_docs": q_incremental_minhash_docs,
-    "importance_resample_docs": q_importance_resample_docs,
-    "repetition_stats_docs": q_repetition_stats_docs,
-    "chunk_documents": q_chunk_documents,
-    "ivf_ann": q_ivf_ann,
-    "semantic_dedup_docs": q_semantic_dedup,
-    "semantic_dedup_np_docs": q_semantic_dedup_np,
-    "quantized_ann_topk": q_quantized_ann,
-    "best_rep_dedup_docs": q_best_rep_dedup,
-    "decontaminate_docs": q_decontaminate_docs,
-    "stratified_sample_docs": q_stratified_sample_docs,
-    "host_capped_sample": q_host_capped_sample,
-    "curation_pipeline_docs": q_curation_pipeline_docs,
-    "shard_manifest_docs": q_shard_manifest_docs,
-    "media_filter_docs": q_media_filter_docs,
-    "warc_extract_docs": q_warc_extract_docs,
-    "html_meta_docs": q_html_meta_docs,
-    "robots_filter_docs": q_robots_filter_docs,
-    "c4_line_filter": q_c4_line_filter,
-    "canonical_urls": q_canonical_urls,
-    "image_metadata": q_image_metadata,
-    "audio_metadata": q_audio_metadata,
-    "video_metadata": q_video_metadata,
-    "url_revision_dedup": q_url_revision_dedup,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "host_pagerank": q_host_pagerank,
-    "corpus_profile_docs": q_corpus_profile,
-    "host_quality_prior": q_host_quality_prior,
-    "normalize_text_docs": q_normalize_text,
-    "url_hygiene_filter": q_url_hygiene_filter,
-    "dsir_scores_docs": q_dsir_scores,
-    "host_boilerplate_docs": q_host_boilerplate,
-    "rule_attribution": q_rule_attribution,
-    "top_anchor_texts": q_top_anchor_texts,
-    "corpus_vocab": q_corpus_vocab,
-    "vocab_oov_docs": q_vocab_oov_docs,
-    "dedup_lines_docs": q_dedup_lines_docs,
-    "temperature_mix_docs": q_temperature_mix,
-    "encoding_stats_docs": q_encoding_stats,
-    "inverted_index_docs": q_inverted_index,
-    "readability_docs": q_readability_stats,
-    "script_stats_docs": q_script_stats,
-    "corpus_shuffle_positions": q_corpus_shuffle_positions,
-    "snapshot_line_diff_docs": q_snapshot_line_diff,
-    "pack_utilization": q_pack_utilization,
-    "bm25_topk_docs": q_bm25_topk,
-    "snapshot_diff_docs": q_snapshot_diff,
-    "bpe_tokens": q_bpe_tokens,
-    "paragraph_stats_docs": q_paragraph_stats,
-    "top_quality_docs": q_top_quality_docs,
-    "containment_pairs": q_containment_pairs,
-    "classifier_score_docs": q_classifier_score_docs,
-    "token_budget_select": q_token_budget_select,
-    "dataset_split_docs": q_dataset_split_docs,
-    "dup_ngram_stats_docs": q_dup_ngram_stats_docs,
-    "perplexity_buckets_docs": q_perplexity_buckets_docs,
-}
-
-ORACLES = {
-    "rb_customer_rules": ORACLE_RB_CUSTOMER_RULES,
-    "rb_orders_dup_statement": ORACLE_RB_ORDERS_DUP,
-    "rb_entity_uri_and_env": ORACLE_RB_ENTITY_URI_AND_ENV,
-    "rb_events_window": ORACLE_RB_EVENTS_WINDOW,
-    "failed_records_acctbal": ORACLE_FAILED_RECORDS_ACCTBAL,
-    "failed_records_dup_statement": ORACLE_FAILED_RECORDS_DUP_STATEMENT,
-    "extract_text_roundtrip": _oracle_extract_text_roundtrip(),
-    "pack_documents": ORACLE_PACK_DOCUMENTS,
-    "pack_documents_bpe": ORACLE_PACK_DOCUMENTS_BPE,
-    "pack_documents_bpe_1k": ORACLE_PACK_DOCUMENTS_BPE_1K,
-    "pack_documents_bpe_8k": _oracle_pack_bpe_8k(),
-    "text_stats": ORACLE_TEXT_STATS,
-    "text_langid": ORACLE_TEXT_LANGID,
-    "text_fingerprint": ORACLE_TEXT_FINGERPRINT,
-    "pii_scrub": ORACLE_PII_SCRUB,
-    "quality_verdict": _oracle_quality_verdict(),
-    "quality_rollup": _oracle_quality_rollup(),
-    "token_count_by_source": ORACLE_TOKEN_COUNT_BY_SOURCE,
-    "unigram_logprob": ORACLE_UNIGRAM_LOGPROB,
-    "unigram_logprob_topk": ORACLE_UNIGRAM_LOGPROB_TOPK,
-    "trigram_logprob": ORACLE_TRIGRAM_LOGPROB,
-    "dedup_exact_prefix": ORACLE_DEDUP_EXACT_PREFIX,
-    "minhash_pairs": ORACLE_MINHASH_PAIRS,
-    "minhash_clusters": ORACLE_MINHASH_CLUSTERS,
-    "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD_PAIRS,
-    "embedding_pairs": ORACLE_EMBEDDING_PAIRS,
-    "ann_topk": ORACLE_ANN_TOPK,
-    "simhash_pairs": ORACLE_SIMHASH_PAIRS,
-    # approximate vs brute force, but deterministic given its planes →
-    # exact value oracle generated from the shared hyperplane constants
-    "lsh_ann": _oracle_lsh_ann(),
-    "events_volume_per_day": ORACLE_EVENTS_VOLUME_PER_DAY,
-    "accuracy_distribution_events": ORACLE_ACCURACY_DISTRIBUTION_EVENTS,
-    "accuracy_distribution_true": ORACLE_ACCURACY_DISTRIBUTION_TRUE,
-    "json_field_threshold": ORACLE_JSON_FIELD_THRESHOLD,
-    "array_aggregate_rule": ORACLE_ARRAY_AGGREGATE_RULE,
-    "sessionize_events": ORACLE_SESSIONIZE_EVENTS,
-    "rollup_quality": _oracle_rollup_quality(),
-    "topk_docs_per_lang": ORACLE_TOPK_DOCS_PER_LANG,
-    "integrity_lineitem_part": ORACLE_INTEGRITY_LINEITEM_PART,
-    "integrity_unnest_join": ORACLE_INTEGRITY_UNNEST_JOIN,
-    "timeliness_recent_events": ORACLE_TIMELINESS_RECENT_EVENTS,
-    "span_dedup_docs": ORACLE_SPAN_DEDUP_DOCS,
-    "substring_dedup_docs": ORACLE_SUBSTRING_DEDUP_DOCS,
-    "incremental_dedup_docs": ORACLE_INCREMENTAL_DEDUP_DOCS,
-    "incremental_minhash_docs": ORACLE_INCREMENTAL_MINHASH_DOCS,
-    "importance_resample_docs": _oracle_importance_resample(),
-    "repetition_stats_docs": ORACLE_REPETITION_STATS_DOCS,
-    "chunk_documents": ORACLE_CHUNK_DOCUMENTS,
-    "ivf_ann": _oracle_ivf_ann(),
-    "semantic_dedup_docs": _oracle_semantic_dedup(),
-    "semantic_dedup_np_docs": _oracle_semantic_dedup(),
-    "quantized_ann_topk": ORACLE_QUANTIZED_ANN,
-    "best_rep_dedup_docs": ORACLE_BEST_REP_DEDUP,
-    "decontaminate_docs": ORACLE_DECONTAMINATE_DOCS,
-    "stratified_sample_docs": _oracle_stratified_sample(),
-    "host_capped_sample": _oracle_host_capped_sample(),
-    "curation_pipeline_docs": _oracle_curation_pipeline(),
-    "shard_manifest_docs": _oracle_shard_manifest(),
-    "media_filter_docs": _oracle_media_filter(),
-    "warc_extract_docs": _oracle_warc_extract(),
-    "html_meta_docs": _oracle_html_meta(),
-    "robots_filter_docs": _oracle_robots_filter(),
-    "c4_line_filter": _oracle_c4_line_filter(),
-    "canonical_urls": _oracle_canonical_urls(),
-    "image_metadata": _oracle_image_metadata(),
-    "audio_metadata": _oracle_audio_metadata(),
-    "video_metadata": _oracle_video_metadata(),
-    "url_revision_dedup": _oracle_url_revision_dedup(),
-    "tfidf_top_terms": _oracle_tfidf_top_terms(),
-    "host_pagerank": _oracle_host_pagerank(),
-    "corpus_profile_docs": _oracle_corpus_profile(),
-    "host_quality_prior": _oracle_host_quality_prior(),
-    "normalize_text_docs": _oracle_normalize_text(),
-    "url_hygiene_filter": _oracle_url_hygiene_filter(),
-    "dsir_scores_docs": _oracle_dsir_scores(),
-    "host_boilerplate_docs": _oracle_host_boilerplate(),
-    "rule_attribution": _oracle_rule_attribution(),
-    "top_anchor_texts": _oracle_top_anchor_texts(),
-    "corpus_vocab": _oracle_corpus_vocab(),
-    "vocab_oov_docs": _oracle_vocab_oov_docs(),
-    "dedup_lines_docs": _oracle_dedup_lines_docs(),
-    "temperature_mix_docs": _oracle_temperature_mix(),
-    "encoding_stats_docs": _oracle_encoding_stats(),
-    "inverted_index_docs": _oracle_inverted_index(),
-    "readability_docs": _oracle_readability_stats(),
-    "script_stats_docs": _oracle_script_stats(),
-    "corpus_shuffle_positions": _oracle_corpus_shuffle_positions(),
-    "snapshot_line_diff_docs": _oracle_snapshot_line_diff(),
-    "pack_utilization": _oracle_pack_utilization(),
-    "bm25_topk_docs": _oracle_bm25_topk(),
-    "snapshot_diff_docs": _oracle_snapshot_diff(),
-    "bpe_tokens": _oracle_bpe_tokens(),
-    "paragraph_stats_docs": _oracle_paragraph_stats(),
-    "top_quality_docs": ORACLE_TOP_QUALITY,
-    "containment_pairs": _oracle_containment_pairs(),
-    "classifier_score_docs": _oracle_classifier_score(),
-    "token_budget_select": _oracle_token_budget_select(),
-    "dataset_split_docs": _oracle_dataset_split(),
-    "dup_ngram_stats_docs": _oracle_dup_ngram_stats(),
-    "perplexity_buckets_docs": _oracle_perplexity_buckets(),
-}
+TABLES = (registry_dq.CASES, registry_similarity.CASES, registry_corpus.CASES)
+QUERIES = {name: q for cases in TABLES for name, (q, _) in cases.items()}
+ORACLES = {name: sql for cases in TABLES for name, (_, sql) in cases.items()}

@@ -4,8 +4,8 @@ Text extraction and stats, language id, scrubbing, quality verdicts, n-gram
 LM scoring, packing/BPE, host curation, URL canonicalization, C4 line
 filtering, image metadata, classifier scoring, selection (top-fraction,
 token-budget, perplexity buckets), sampling/splits, and the composed curation
-pipeline. Paired DuckDB oracles follow each query; see plans/registry.py for
-the assembly and conventions.
+pipeline. Paired DuckDB oracles follow each query, and the CASES table at the
+end registers each pair; see plans/registry.py for the conventions.
 """
 
 from __future__ import annotations
@@ -14,9 +14,11 @@ from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.functions import text as TX
 from cloud_data_quality_spark.functions.scrub import scrub_text
-from cloud_data_quality_spark.operators.quality_filter import annotate_quality
+from cloud_data_quality_spark.operators.quality_filter import (
+    annotate_quality_arrow,
+)
 from cloud_data_quality_spark.plans import oracle_fragments as OF
-from cloud_data_quality_spark.plans.base import _t
+from cloud_data_quality_spark.plans.base import Case, _t
 
 # --------------------------------------------------------------------------
 # Web-text analysis queries (documents table)
@@ -118,8 +120,8 @@ select doc_id, {OF.sql_scrub('text')} as scrubbed_text from documents
 
 
 def q_quality_verdict(spark, sf_dir):
-    ann = annotate_quality(_t(spark, sf_dir, "documents"), text_col="text",
-                           with_perplexity=False, with_scrub=False)
+    ann = annotate_quality_arrow(_t(spark, sf_dir, "documents"),
+                                 text_col="text", with_perplexity=False)
     return ann.select("doc_id", "lang_pred", "keep", "drop_reason")
 
 
@@ -200,8 +202,8 @@ def _oracle_rule_attribution() -> str:
 
 
 def q_quality_rollup(spark, sf_dir):
-    ann = annotate_quality(_t(spark, sf_dir, "documents"), text_col="text",
-                           with_perplexity=False, with_scrub=False)
+    ann = annotate_quality_arrow(_t(spark, sf_dir, "documents"),
+                                 text_col="text", with_perplexity=False)
     return (ann.groupBy("lang_pred", "keep", "drop_reason")
             .agg(F.count(F.lit(1)).alias("n_docs")))
 
@@ -978,8 +980,8 @@ def _oracle_bpe_tokens() -> str:
 def q_rollup_quality(spark, sf_dir):
     """ROLLUP aggregation over the verdict dimensions (subtotals + grand
     total) — multi-level summary reporting in one pass."""
-    ann = annotate_quality(_t(spark, sf_dir, "documents"), text_col="text",
-                           with_perplexity=False, with_scrub=False)
+    ann = annotate_quality_arrow(_t(spark, sf_dir, "documents"),
+                                 text_col="text", with_perplexity=False)
     return (ann.rollup("lang_pred", "keep")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .select("lang_pred", "keep", "n_docs"))
@@ -2776,3 +2778,87 @@ with p as (
 select doc_id, url from p
 where not (h < 6 and (c = 0 or (h % 2 = 0 and c = 3)))
 """
+
+
+CASES: dict[str, Case] = {
+    "extract_text_roundtrip":
+        (q_extract_text_roundtrip, _oracle_extract_text_roundtrip()),
+    "pack_documents": (q_pack_documents, ORACLE_PACK_DOCUMENTS),
+    "pack_documents_bpe": (q_pack_documents_bpe, ORACLE_PACK_DOCUMENTS_BPE),
+    "pack_documents_bpe_1k":
+        (q_pack_documents_bpe_1k, ORACLE_PACK_DOCUMENTS_BPE_1K),
+    "pack_documents_bpe_8k": (q_pack_documents_bpe_8k, _oracle_pack_bpe_8k()),
+    "text_stats": (q_text_stats, ORACLE_TEXT_STATS),
+    "text_langid": (q_text_langid, ORACLE_TEXT_LANGID),
+    "text_fingerprint": (q_text_fingerprint, ORACLE_TEXT_FINGERPRINT),
+    "pii_scrub": (q_pii_scrub, ORACLE_PII_SCRUB),
+    "quality_verdict": (q_quality_verdict, _oracle_quality_verdict()),
+    "quality_rollup": (q_quality_rollup, _oracle_quality_rollup()),
+    "token_count_by_source":
+        (q_token_count_by_source, ORACLE_TOKEN_COUNT_BY_SOURCE),
+    "unigram_logprob": (q_unigram_logprob, ORACLE_UNIGRAM_LOGPROB),
+    "unigram_logprob_topk":
+        (q_unigram_logprob_topk, ORACLE_UNIGRAM_LOGPROB_TOPK),
+    "trigram_logprob": (q_trigram_logprob, ORACLE_TRIGRAM_LOGPROB),
+    "rollup_quality": (q_rollup_quality, _oracle_rollup_quality()),
+    "topk_docs_per_lang": (q_topk_docs_per_lang, ORACLE_TOPK_DOCS_PER_LANG),
+    "importance_resample_docs":
+        (q_importance_resample_docs, _oracle_importance_resample()),
+    "repetition_stats_docs":
+        (q_repetition_stats_docs, ORACLE_REPETITION_STATS_DOCS),
+    "chunk_documents": (q_chunk_documents, ORACLE_CHUNK_DOCUMENTS),
+    "decontaminate_docs": (q_decontaminate_docs, ORACLE_DECONTAMINATE_DOCS),
+    "stratified_sample_docs":
+        (q_stratified_sample_docs, _oracle_stratified_sample()),
+    "host_capped_sample": (q_host_capped_sample, _oracle_host_capped_sample()),
+    "curation_pipeline_docs":
+        (q_curation_pipeline_docs, _oracle_curation_pipeline()),
+    "shard_manifest_docs": (q_shard_manifest_docs, _oracle_shard_manifest()),
+    "media_filter_docs": (q_media_filter_docs, _oracle_media_filter()),
+    "warc_extract_docs": (q_warc_extract_docs, _oracle_warc_extract()),
+    "html_meta_docs": (q_html_meta_docs, _oracle_html_meta()),
+    "robots_filter_docs": (q_robots_filter_docs, _oracle_robots_filter()),
+    "c4_line_filter": (q_c4_line_filter, _oracle_c4_line_filter()),
+    "canonical_urls": (q_canonical_urls, _oracle_canonical_urls()),
+    "image_metadata": (q_image_metadata, _oracle_image_metadata()),
+    "audio_metadata": (q_audio_metadata, _oracle_audio_metadata()),
+    "video_metadata": (q_video_metadata, _oracle_video_metadata()),
+    "url_revision_dedup": (q_url_revision_dedup, _oracle_url_revision_dedup()),
+    "tfidf_top_terms": (q_tfidf_top_terms, _oracle_tfidf_top_terms()),
+    "host_pagerank": (q_host_pagerank, _oracle_host_pagerank()),
+    "corpus_profile_docs": (q_corpus_profile, _oracle_corpus_profile()),
+    "host_quality_prior": (q_host_quality_prior, _oracle_host_quality_prior()),
+    "normalize_text_docs": (q_normalize_text, _oracle_normalize_text()),
+    "url_hygiene_filter": (q_url_hygiene_filter, _oracle_url_hygiene_filter()),
+    "dsir_scores_docs": (q_dsir_scores, _oracle_dsir_scores()),
+    "host_boilerplate_docs": (q_host_boilerplate, _oracle_host_boilerplate()),
+    "rule_attribution": (q_rule_attribution, _oracle_rule_attribution()),
+    "top_anchor_texts": (q_top_anchor_texts, _oracle_top_anchor_texts()),
+    "corpus_vocab": (q_corpus_vocab, _oracle_corpus_vocab()),
+    "vocab_oov_docs": (q_vocab_oov_docs, _oracle_vocab_oov_docs()),
+    "dedup_lines_docs": (q_dedup_lines_docs, _oracle_dedup_lines_docs()),
+    "temperature_mix_docs": (q_temperature_mix, _oracle_temperature_mix()),
+    "encoding_stats_docs": (q_encoding_stats, _oracle_encoding_stats()),
+    "inverted_index_docs": (q_inverted_index, _oracle_inverted_index()),
+    "readability_docs": (q_readability_stats, _oracle_readability_stats()),
+    "script_stats_docs": (q_script_stats, _oracle_script_stats()),
+    "corpus_shuffle_positions":
+        (q_corpus_shuffle_positions, _oracle_corpus_shuffle_positions()),
+    "snapshot_line_diff_docs":
+        (q_snapshot_line_diff, _oracle_snapshot_line_diff()),
+    "pack_utilization": (q_pack_utilization, _oracle_pack_utilization()),
+    "bm25_topk_docs": (q_bm25_topk, _oracle_bm25_topk()),
+    "snapshot_diff_docs": (q_snapshot_diff, _oracle_snapshot_diff()),
+    "bpe_tokens": (q_bpe_tokens, _oracle_bpe_tokens()),
+    "paragraph_stats_docs": (q_paragraph_stats, _oracle_paragraph_stats()),
+    "top_quality_docs": (q_top_quality_docs, ORACLE_TOP_QUALITY),
+    "classifier_score_docs":
+        (q_classifier_score_docs, _oracle_classifier_score()),
+    "token_budget_select":
+        (q_token_budget_select, _oracle_token_budget_select()),
+    "dataset_split_docs": (q_dataset_split_docs, _oracle_dataset_split()),
+    "dup_ngram_stats_docs":
+        (q_dup_ngram_stats_docs, _oracle_dup_ngram_stats()),
+    "perplexity_buckets_docs":
+        (q_perplexity_buckets_docs, _oracle_perplexity_buckets()),
+}

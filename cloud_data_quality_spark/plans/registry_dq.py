@@ -3,8 +3,9 @@
 CloudDQ-contract rule bindings, failed-records statements, events
 aggregation/timeliness/accuracy rules, reference-integrity joins (incl. the
 verbatim reference UNNEST rules through the dialect shim), and sessionize
-window shapes. Paired DuckDB oracles follow each query; see plans/registry.py
-for the assembly and cross-cutting conventions.
+window shapes. Paired DuckDB oracles follow each query, and the CASES table
+at the end registers each pair; see plans/registry.py for the cross-cutting
+conventions.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from cloud_data_quality_spark.config.model import (
 from cloud_data_quality_spark.engine.runner import DqEngine
 from cloud_data_quality_spark.functions import text as TX
 from cloud_data_quality_spark.plans import oracle_fragments as OF
-from cloud_data_quality_spark.plans.base import TS, _t
+from cloud_data_quality_spark.plans.base import TS, Case, _t
 
 # --------------------------------------------------------------------------
 # CloudDQ rule-engine queries (compiled + executed through DqEngine)
@@ -689,3 +690,34 @@ select user_id, count(*)::BIGINT as n_sessions,
        max(n_events)::BIGINT as max_session_events
 from per_sess group by user_id
 """
+
+
+CASES: dict[str, Case] = {
+    "rb_customer_rules": (q_rb_customer_rules, ORACLE_RB_CUSTOMER_RULES),
+    "rb_orders_dup_statement":
+        (q_rb_orders_dup_statement, ORACLE_RB_ORDERS_DUP),
+    "rb_entity_uri_and_env":
+        (q_rb_entity_uri_and_env, ORACLE_RB_ENTITY_URI_AND_ENV),
+    "rb_events_window": (q_rb_events_window, ORACLE_RB_EVENTS_WINDOW),
+    "failed_records_acctbal":
+        (q_failed_records_acctbal, ORACLE_FAILED_RECORDS_ACCTBAL),
+    "failed_records_dup_statement":
+        (q_failed_records_dup_statement, ORACLE_FAILED_RECORDS_DUP_STATEMENT),
+    "events_volume_per_day":
+        (q_events_volume_per_day, ORACLE_EVENTS_VOLUME_PER_DAY),
+    "accuracy_distribution_events":
+        (q_accuracy_distribution_events, ORACLE_ACCURACY_DISTRIBUTION_EVENTS),
+    "accuracy_distribution_true":
+        (q_accuracy_distribution_true, ORACLE_ACCURACY_DISTRIBUTION_TRUE),
+    "json_field_threshold":
+        (q_json_field_threshold, ORACLE_JSON_FIELD_THRESHOLD),
+    "array_aggregate_rule":
+        (q_array_aggregate_rule, ORACLE_ARRAY_AGGREGATE_RULE),
+    "sessionize_events": (q_sessionize_events, ORACLE_SESSIONIZE_EVENTS),
+    "integrity_lineitem_part":
+        (q_integrity_lineitem_part, ORACLE_INTEGRITY_LINEITEM_PART),
+    "integrity_unnest_join":
+        (q_integrity_unnest_join, ORACLE_INTEGRITY_UNNEST_JOIN),
+    "timeliness_recent_events":
+        (q_timeliness_recent_events, ORACLE_TIMELINESS_RECENT_EVENTS),
+}

@@ -2,8 +2,9 @@
 
 Exact/minhash/simhash/n-gram/containment dedup, embedding pairs, ANN
 (brute-force, LSH, IVF), span/substring dedup document rewrites, and the
-incremental cross-run dedup stores. Paired DuckDB oracles follow each query;
-see plans/registry.py for the assembly and conventions.
+incremental cross-run dedup stores. Paired DuckDB oracles follow each query,
+and the CASES table at the end registers each pair; see plans/registry.py for
+the conventions.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from cloud_data_quality_spark.functions.similarity import (
     lsh_bucketed_neighbors,
 )
 from cloud_data_quality_spark.plans import oracle_fragments as OF
-from cloud_data_quality_spark.plans.base import _t
+from cloud_data_quality_spark.plans.base import Case, _t
 
 # --------------------------------------------------------------------------
 # Dedup / similarity queries
@@ -717,3 +718,28 @@ losers as (select id from labels where id not in (select id from reps))
 select d.doc_id, length(d.text)::BIGINT as n_chars from documents d
 where d.doc_id not in (select id from losers)
 """
+
+
+CASES: dict[str, Case] = {
+    "dedup_exact_prefix": (q_dedup_exact_prefix, ORACLE_DEDUP_EXACT_PREFIX),
+    "minhash_pairs": (q_minhash_pairs, ORACLE_MINHASH_PAIRS),
+    "minhash_clusters": (q_minhash_clusters, ORACLE_MINHASH_CLUSTERS),
+    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, ORACLE_NGRAM_JACCARD_PAIRS),
+    "embedding_pairs": (q_embedding_pairs, ORACLE_EMBEDDING_PAIRS),
+    "ann_topk": (q_ann_topk, ORACLE_ANN_TOPK),
+    "simhash_pairs": (q_simhash_pairs, ORACLE_SIMHASH_PAIRS),
+    "lsh_ann": (q_lsh_ann, _oracle_lsh_ann()),
+    "span_dedup_docs": (q_span_dedup_docs, ORACLE_SPAN_DEDUP_DOCS),
+    "substring_dedup_docs":
+        (q_substring_dedup_docs, ORACLE_SUBSTRING_DEDUP_DOCS),
+    "incremental_dedup_docs":
+        (q_incremental_dedup_docs, ORACLE_INCREMENTAL_DEDUP_DOCS),
+    "incremental_minhash_docs":
+        (q_incremental_minhash_docs, ORACLE_INCREMENTAL_MINHASH_DOCS),
+    "ivf_ann": (q_ivf_ann, _oracle_ivf_ann()),
+    "semantic_dedup_docs": (q_semantic_dedup, _oracle_semantic_dedup()),
+    "semantic_dedup_np_docs": (q_semantic_dedup_np, _oracle_semantic_dedup()),
+    "quantized_ann_topk": (q_quantized_ann, ORACLE_QUANTIZED_ANN),
+    "best_rep_dedup_docs": (q_best_rep_dedup, ORACLE_BEST_REP_DEDUP),
+    "containment_pairs": (q_containment_pairs, _oracle_containment_pairs()),
+}

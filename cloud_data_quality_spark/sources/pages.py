@@ -18,7 +18,6 @@ generator scales to billions of rows on a cluster.
 
 from __future__ import annotations
 
-import hashlib
 from datetime import datetime, timezone
 
 import numpy as np
@@ -175,11 +174,6 @@ def generate_pages(spark: SparkSession, n_rows: int, seed: int = 42,
             yield generate_rows(pdf["id"].to_numpy(), seed)
 
     return base.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def pages_fingerprint(seed: int, n_rows: int) -> str:
-    """Stable id for a (seed, n) dataset — used as a cache key on disk."""
-    return hashlib.sha256(f"pages:{seed}:{n_rows}".encode()).hexdigest()[:16]
 
 
 def write_pages_parquet(spark: SparkSession, path: str, n_rows: int,

@@ -1,4 +1,4 @@
-"""Testdata table loaders + temp-view registration.
+"""Testdata table names and the default scale-factor directory.
 
 The driver testdata is a TPC-H-ish star schema plus `events`, `documents`,
 `embeddings` (TESTDATA.md). At 100 TB these would be Iceberg tables with
@@ -11,23 +11,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
 TESTDATA_TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: list[str] | None = None) -> None:
-    for name in tables or TESTDATA_TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

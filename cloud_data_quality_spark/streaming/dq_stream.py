@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from cloud_data_quality_spark.compiler.binding import compile_binding
 from cloud_data_quality_spark.engine.runner import DqEngine
+from cloud_data_quality_spark.engine.summary import summary_frame
 
 
 def run_bindings_on_stream(
@@ -65,12 +66,8 @@ def run_bindings_on_stream(
             r["dq_run_id"] = (f"{run_id}-b{batch_id}-"
                               f"{r['rule_binding_id']}-{r['rule_id']}")
         if rows and engine.summary_sink is not None:
-            from cloud_data_quality_spark.engine.summary import SUMMARY_SCHEMA
-            field_names = [f.name for f in SUMMARY_SCHEMA.fields]
-            summary = batch_df.sparkSession.createDataFrame(
-                [tuple(r[k] for k in field_names) for r in rows],
-                schema=SUMMARY_SCHEMA)
-            engine.summary_sink.write(summary)
+            engine.summary_sink.write(
+                summary_frame(batch_df.sparkSession, rows))
 
     writer = (stream_df.writeStream
               .foreachBatch(validate_batch)

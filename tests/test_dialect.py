@@ -101,7 +101,7 @@ def test_reference_unnest_rules_are_verbatim():
     YAML — this is what 'reference configs run unchanged' means."""
     import yaml
 
-    from cloud_data_quality_spark.plans.registry import (
+    from cloud_data_quality_spark.plans.registry_dq import (
         REF_UNNEST_INTEGRITY_EXPR,
         REF_UNNEST_SUM_EXPR,
     )

@@ -120,7 +120,7 @@ class TestIncremental:
     def test_batched_watermarks_match_individual(
             self, spark, contact_registry, tmp_path):
         """run() batches all bindings' watermark lookups into ONE groupBy
-        job; the batched map must equal per-binding high_watermark() and
+        job; the batched map must hold each run binding's execution_ts and
         default unknown/never-run bindings to EPOCH."""
         from cloud_data_quality_spark.engine.runner import EPOCH
         engine = DqEngine(spark, contact_registry,
@@ -133,10 +133,7 @@ class TestIncremental:
         assert set(pre.values()) == {EPOCH}
         run_bindings(engine, ["T9_INCREMENTAL"], incremental=True)
         hwms = engine.high_watermarks([b_inc, b_dup])
-        for b in (b_inc, b_dup):
-            assert hwms[(b.rule_binding_id, b.table_name)] == \
-                engine.high_watermark(b), b.rule_binding_id
-        assert hwms[(b_inc.rule_binding_id, b_inc.table_name)] != EPOCH
+        assert hwms[(b_inc.rule_binding_id, b_inc.table_name)] == TS
         assert hwms[(b_dup.rule_binding_id, b_dup.table_name)] == EPOCH
 
 

@@ -110,7 +110,7 @@ class TestSinglePassExecution:
         must never be FORCED broadcast. Allowed hints: the single-row total
         scalar (both variants) and the bounded top-K model (topk variant);
         AQE remains free to broadcast the vocab when it actually fits."""
-        from cloud_data_quality_spark.plans.registry import (
+        from cloud_data_quality_spark.plans.registry_corpus import (
             q_unigram_logprob,
             q_unigram_logprob_topk,
         )
