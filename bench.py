@@ -301,7 +301,7 @@ def build_suite(spark, sf_dir: str, pages_path: str,
              PipelineStage("select_top", select_top, kind="global"),
              PipelineStage("pack", pack, kind="global",
                            fuse_with_previous=True)],
-            run_id=uuid.uuid4().hex, fuse="narrow")
+            run_id=uuid.uuid4().hex)
         curate_stage_seconds.clear()
         curate_stage_seconds.update(
             {s.name: s.seconds for s in res.stages})

@@ -34,7 +34,8 @@ Subcommands:
                   [media-filter →]
                   [stratified sample →] [top-fraction |
                   token-budget selection →] [sequence packing |
-                  shard writer] — stages fuse (--fuse narrow default)
+                  shard writer] — adjacent partition stages share one
+                  resumable unit
                   (engine/pipeline.py)
 """
 
@@ -805,19 +806,10 @@ def _curate(args) -> int:
     if args.shard_docs > 0:
         stages.append(PipelineStage("shards", shards, kind="global"))
 
-    marks = {m.strip() for m in args.fuse_marks.split(",") if m.strip()}
-    known = {s.name for s in stages}
-    if marks - known:
-        raise SystemExit(
-            f"--fuse-marks names unknown/disabled stages "
-            f"{sorted(marks - known)} (enabled: {sorted(known)})")
-    for s in stages:
-        if s.name in marks:
-            s.fuse_with_previous = True
     pipe = ResumableCurationPipeline(
         spark, args.work_dir, n_buckets=args.buckets, id_col=args.id_col,
         partitions_per_commit=args.partitions_per_commit)
-    res = pipe.run(df, stages, run_id=args.run_id, fuse=args.fuse)
+    res = pipe.run(df, stages, run_id=args.run_id)
     print(json.dumps({
         "run_id": res.run_id,
         "stages": [{"name": s.name, "kind": s.kind, "resumed": s.resumed,
@@ -1085,19 +1077,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="binary column for --media-filter")
     cu.add_argument("--media-min-dim", type=int, default=32)
     cu.add_argument("--media-max-dim", type=int, default=8192)
-    cu.add_argument("--fuse", default="narrow",
-                    choices=["none", "narrow", "max"],
-                    help="stage-fusion policy: narrow (default) merges "
-                         "adjacent narrow per-partition stages into one "
-                         "lineage unit (one materialization instead of "
-                         "one per stage, wave resume kept); none gives "
-                         "every stage its own resume point; max runs the "
-                         "whole pipeline as one unit (resume = rerun)")
-    cu.add_argument("--fuse-marks", default="",
-                    help="comma-separated stage names to fold into their "
-                         "preceding unit regardless of --fuse (use when a "
-                         "stage's recompute is cheaper than its parquet "
-                         "materialization, e.g. 'dedup,pack')")
 
     args = p.parse_args(argv)
     args.master = getattr(args, "master", None)

@@ -100,6 +100,21 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
      .write.mode("append").parquet(path))
 
 
+def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
+    """Overwrite ``path`` with ``df``. A frame with a ``part_key`` column
+    is written ``partitionBy("part_key")`` after clustering its rows by
+    bucket: without the shuffle every write task opens a file in every
+    partition dir (tasks × buckets small files — 512 at 32×16; measured
+    ~1.6× slower than shuffling the kept rows once and writing one file per
+    bucket, and the small files then tax every downstream read). A frame
+    without ``part_key`` is a plain overwrite."""
+    if "part_key" not in df.columns:
+        df.write.mode("overwrite").parquet(path)
+        return
+    (df.repartition(n_buckets, "part_key").write.mode("overwrite")
+     .partitionBy("part_key").parquet(path))
+
+
 @dataclass
 class ResumableResult:
     run_id: str
@@ -191,15 +206,8 @@ class ResumableQualityRun:
         wave: Sequence[int],
     ) -> tuple[int, int, StructType]:
         out, obs_in, obs_out = self.wave_plan(df, transform, wave)
-        # cluster rows by bucket before the partitioned write: without it
-        # every write task opens a file in every partition dir (tasks ×
-        # buckets small files — 512 at 32×16; measured ~1.6× slower than
-        # shuffling the kept rows once and writing one file per bucket, and
-        # the small files then tax every downstream read)
-        out = out.repartition(self.n_buckets, "part_key")
         with preserve_observations(self.spark):
-            (out.write.mode("overwrite")
-             .partitionBy("part_key").parquet(self.output_path))
+            write_bucketed(out, self.output_path, self.n_buckets)
             n_in, n_kept = obs_in.get, obs_out.get
         ts = time.time()
         append_lineage(self.spark, self.lineage_path, [

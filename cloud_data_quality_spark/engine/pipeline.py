@@ -16,17 +16,18 @@ operator family with different resume semantics:
 
 Composition contract:
 * every execution UNIT (a stage, or a fused group of stages — see
-  ``run(fuse=...)``) MATERIALIZES its output as parquet under
+  ``_fuse_units``) MATERIALIZES its output as parquet under
   ``{work_dir}/{idx:02d}_{name}/out`` — the explicit unit boundary is what
   makes resume possible AND caps lineage recomputation: a 5-stage pipeline
   over 100 TB never re-runs a finished unit's compute, it re-reads its
   (column-pruned, partition-pruned) output. Adjacent narrow zero-shuffle
   stages do NOT deserve a boundary each — a parquet write+read per trivial
-  Column rewrite is pure I/O tax at any scale — so ``fuse='narrow'`` merges
-  partition-stage chains (keeping wave resume), and
+  Column rewrite is pure I/O tax at any scale — so partition-stage chains
+  always merge (keeping wave resume), and
   ``PipelineStage(fuse_with_previous=True)`` lets the author fold a stage
   whose recompute is provably cheaper than its materialization into the
-  preceding unit;
+  preceding unit. The unit plan, and with it every resume key, depends on
+  the stage list alone;
 * stage i>0 reads stage i-1's committed output. Partition stages keep the
   ``part_key`` column through their write (``partitionBy("part_key")``), so
   the NEXT partition stage uses ``partition_expr="part_key"`` — aligned
@@ -63,6 +64,7 @@ from cloud_data_quality_spark.engine.incremental import (
     ResumableQualityRun,
     append_lineage,
     preserve_observations,
+    write_bucketed,
 )
 from cloud_data_quality_spark.engine.sinks import _hadoop_path_exists
 
@@ -82,7 +84,7 @@ class PipelineStage:
     kind='global': transform sees the full stage input in one plan.
 
     fuse_with_previous=True folds this stage into the PREVIOUS execution
-    unit regardless of the pipeline's fuse policy — the author's statement
+    unit whatever the two stages' kinds — the author's statement
     that this stage's recompute is cheaper than a parquet materialization
     boundary (e.g. two adjacent cheap hygiene shuffles, or packing right
     after selection). A fused stage loses its own resume point: a crash
@@ -222,19 +224,7 @@ class ResumableCurationPipeline:
         with preserve_observations(self.spark):
             out = stage.transform(keyed).observe(
                 obs_out, F.count(F.lit(1)).alias("n"))
-            writer_df = out
-            if "part_key" in out.columns:
-                # cluster rows by bucket before the partitioned write —
-                # same rationale as ResumableQualityRun._run_wave:
-                # without it every write task opens a file in every bucket
-                # dir (tasks × buckets small files that tax every
-                # downstream stage read) and the dynamic-partition writer
-                # sorts each task's rows by part_key first
-                writer_df = out.repartition(self.n_buckets, "part_key")
-            writer = writer_df.write.mode("overwrite")
-            if "part_key" in out.columns:
-                writer = writer.partitionBy("part_key")
-            writer.parquet(out_path)
+            write_bucketed(out, out_path, self.n_buckets)
             n_in, n_out = obs_in.get["n"], obs_out.get["n"]
         self._mark_stage(stage_run_id, n_in, n_out)
         return StageResult(stage.name, "global", out_path, n_in, n_out,
@@ -266,31 +256,20 @@ class ResumableCurationPipeline:
 
     @staticmethod
     def _fuse_units(
-        stages: Sequence[PipelineStage], fuse: str,
+        stages: Sequence[PipelineStage],
     ) -> list[list[PipelineStage]]:
         """Group stages into execution units (each unit = one lineage
-        entry + one materialization).
-
-        fuse='none':   every stage is its own unit (classic behavior).
-        fuse='narrow': maximal runs of consecutive PARTITION stages merge
-                       into one partition-kind unit — adjacent narrow
-                       zero-shuffle rewrites share a single codegen'd plan
-                       and a single parquet write, and the fused unit KEEPS
-                       partition-granular wave resume.
-        fuse='max':    the whole pipeline is one unit (resume = rerun;
-                       for corpora where recompute beats any journaling).
-
-        A stage with fuse_with_previous=True joins the preceding unit in
-        every mode except when it is the first stage.
-        """
-        if fuse not in ("none", "narrow", "max"):
-            raise ValueError(f"unknown fuse policy {fuse!r}")
+        entry + one materialization). A stage joins the preceding unit
+        when it is marked fuse_with_previous, or when it and every member
+        of that unit are PARTITION stages: adjacent narrow zero-shuffle
+        rewrites share one codegen'd plan and one parquet write, and the
+        merged unit KEEPS partition-granular wave resume. The first stage
+        always opens a unit."""
         units: list[list[PipelineStage]] = []
         for s in stages:
             join = bool(units) and (
-                fuse == "max"
-                or s.fuse_with_previous
-                or (fuse == "narrow" and s.kind == "partition"
+                s.fuse_with_previous
+                or (s.kind == "partition"
                     and all(m.kind == "partition" for m in units[-1])))
             if join:
                 units[-1].append(s)
@@ -342,15 +321,13 @@ class ResumableCurationPipeline:
         stages: Sequence[PipelineStage],
         run_id: str,
         fail_at: tuple[str, int | None] | None = None,  # test crash hook
-        fuse: str = "none",
     ) -> PipelineResult:
         """Execute (or resume) the staged pipeline. ``fail_at=(stage_name,
         partition|None)`` simulates a crash inside that stage — partition
         stages crash before the given bucket, global stages crash before
         their commit mark; naming a FUSED member crashes its whole unit.
-        ``fuse`` picks the stage-fusion policy (see _fuse_units); resume
-        keys include the fused unit name, so a run must be resumed under
-        the same fuse configuration it started with."""
+        Stages are grouped into units by _fuse_units; resume keys include
+        the unit name, so they follow from the stage list alone."""
         if not stages:
             raise ValueError("pipeline needs at least one stage")
         names = [s.name for s in stages]
@@ -359,7 +336,7 @@ class ResumableCurationPipeline:
         result = PipelineResult(run_id=run_id)
         ledger = self._read_ledger(run_id)
         current = df
-        for idx, members in enumerate(self._fuse_units(stages, fuse)):
+        for idx, members in enumerate(self._fuse_units(stages)):
             stage, pinned = self._unit_stage(members)
             member_names = [m.name for m in members]
             crash_here = fail_at is not None and fail_at[0] in member_names

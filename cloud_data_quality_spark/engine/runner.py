@@ -124,8 +124,7 @@ class DqEngine:
 
     # ---------- sources ----------
 
-    def read_entity(self, binding: CompiledBinding,
-                    validate_schema: bool = True) -> DataFrame:
+    def read_entity(self, binding: CompiledBinding) -> DataFrame:
         name = binding.table_name.format(**self.table_name_vars)
         fmt = binding.source_format
         if fmt == "table":
@@ -138,8 +137,7 @@ class DqEngine:
             df = self.spark.read.orc(name)
         else:
             df = self.spark.read.parquet(name)
-        if validate_schema:
-            self._validate_entity_schema(binding.entity_id, name, df)
+        self._validate_entity_schema(binding.entity_id, name, df)
         return df
 
     def _validate_entity_schema(self, entity_id: str, name: str,

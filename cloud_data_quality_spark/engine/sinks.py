@@ -63,16 +63,12 @@ class SummarySink(ABC):
         """Read the metrics table; deduped=True guarantees one logical row
         per dq_run_id regardless of the sink's physical strategy."""
 
+    @abstractmethod
     def exists(self, spark: SparkSession) -> bool:
-        """Whether the backing store has been created. Callers use this to
-        distinguish 'no prior run' (EPOCH watermark) from a corrupt store,
-        which read() must surface loudly. Override with a cheap probe; the
-        base fallback conservatively attempts a read."""
-        try:
-            self.read(spark, deduped=False)
-            return True
-        except Exception:
-            return False
+        """Whether the backing store has been created, by a cheap probe
+        that never reads the data. Callers use this to tell 'no prior run'
+        (EPOCH watermark) from a store that exists but cannot be read,
+        which read() must surface loudly."""
 
 
 class ParquetAppendSink(SummarySink):

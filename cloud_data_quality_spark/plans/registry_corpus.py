@@ -594,12 +594,12 @@ def q_curation_pipeline_docs(spark, sf_dir):
     a stage that mutates text — not just filters rows — is value-checked
     through the whole chain.
 
-    Runs with fuse='narrow' plus an explicit fuse_with_previous mark on
-    the cap stage, so BOTH fusion paths — the narrow partition-chain merge
-    (lines+gate keep wave resume) and the marked global absorption with
-    its persist barrier (…+cap) — are value-checked by the driver oracle,
-    not just unit tests: fusion must be a physical choice with zero
-    semantic effect."""
+    An explicit fuse_with_previous mark on the cap stage means BOTH
+    fusion paths — the partition-chain merge (lines+gate keep wave
+    resume) and the marked global absorption with its persist barrier
+    (…+cap) — are value-checked by this query's DuckDB oracle, not just
+    unit tests: fusion must be a physical choice with zero semantic
+    effect."""
     import shutil
     import uuid
 
@@ -639,7 +639,7 @@ def q_curation_pipeline_docs(spark, sf_dir):
          PipelineStage("cap", cap, kind="global",
                        fuse_with_previous=True),
          PipelineStage("dedup", dedup, kind="global")],
-        run_id="oracle", fuse="narrow")
+        run_id="oracle")
     out = (spark.read.parquet(res.stages[-1].output_path)
            .select("doc_id", "source").localCheckpoint())
     shutil.rmtree(work, ignore_errors=True)

@@ -654,8 +654,8 @@ class TestCurateFullPipeline:
         assert rc == 0
         out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert out["rows_out"] == 0
-        # default --fuse narrow merges the adjacent partition stages
-        # c4_clean+quality into one lineage unit
+        # the adjacent partition stages c4_clean+quality share one
+        # lineage unit
         assert [s["name"] for s in out["stages"]] == [
             "c4_clean+quality", "span_dedup", "dedup", "sample",
             "select_budget", "pack"]
@@ -1016,7 +1016,7 @@ class TestRound5CorpusOps:
                    "--drop-noindex"])
         assert rc == 0
         out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        # narrow chain: drop_noindex fuses with quality under --fuse narrow
+        # partition chain: drop_noindex shares quality's unit
         assert out["stages"][0]["members"] == ["drop_noindex", "quality"]
         kept = {r["url"] for r in
                 spark.read.parquet(out["stages"][-1]["output"]).collect()}
@@ -1168,8 +1168,8 @@ class TestRound5CorpusOps:
         assert rc == 0
         out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         names = [s["name"] for s in out["stages"]]
-        # default --fuse narrow: the dedup_lines→c4_clean→quality narrow
-        # chain shares one lineage unit; sample (partition-kind but not
+        # the dedup_lines→c4_clean→quality partition chain shares one
+        # lineage unit; sample (partition-kind but not
         # adjacent to another partition stage) keeps its own
         assert names == ["normalize", "boilerplate",
                          "dedup_lines+c4_clean+quality", "span_dedup",

@@ -118,11 +118,13 @@ class TestComposedPipeline:
 
     def test_downstream_partition_stage_reuses_part_key(
             self, spark, pages, tmp_path):
-        """A partition stage following another partition stage keys on the
-        inherited part_key column, so its wave filter physically prunes the
-        upstream partitioned output."""
+        """A partition stage downstream of another partition stage (here
+        across a global unit that keeps the column) keys on the inherited
+        part_key column, so its wave filter physically prunes the upstream
+        partitioned output."""
         stages = [
             PipelineStage("quality", _quality, kind="partition"),
+            PipelineStage("dedup", _exact_dedup, kind="global"),
             PipelineStage("mark", lambda d: d.withColumn(
                 "n_words", F.size(F.split("text", " "))), kind="partition"),
         ]
@@ -130,28 +132,58 @@ class TestComposedPipeline:
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8,
                                          partitions_per_commit=4)
         res = pipe.run(pages, stages, run_id="r7")
-        assert res.stages[1].rows_in == res.stages[0].rows_out
-        out = spark.read.parquet(res.stages[1].output_path)
+        assert [s.name for s in res.stages] == ["quality", "dedup", "mark"]
+        assert res.stages[2].rows_in == res.stages[1].rows_out
+        out = spark.read.parquet(res.stages[2].output_path)
         assert "n_words" in out.columns and "part_key" in out.columns
-        # bucket assignment consistent across the two stages: every url in
-        # stage-2 bucket k came from stage-1 bucket k
+        # bucket assignment consistent across the stages: every url in
+        # the last stage's bucket k came from the first stage's bucket k
         a = {r["url"]: r["part_key"] for r in
              spark.read.parquet(res.stages[0].output_path)
              .select("url", "part_key").collect()}
         b = {r["url"]: r["part_key"] for r in
              out.select("url", "part_key").collect()}
-        assert a == b
+        # dedup drops rows, so the last stage holds a subset of the urls
+        assert len(b) == res.stages[1].rows_out > 0
+        assert b.items() <= a.items()
 
 
 def _mark_words(df):
     return df.withColumn("n_words", F.size(F.split("text", " ")))
 
 
+def _kinds(spec):
+    """Stages from a spec like 'P G* P': P/G = partition/global, a
+    trailing * marks fuse_with_previous; named by position (s0, s1, ...)."""
+    return [PipelineStage(f"s{i}", lambda d: d,
+                          kind="partition" if k[0] == "P" else "global",
+                          fuse_with_previous=k.endswith("*"))
+            for i, k in enumerate(spec.split())]
+
+
+class TestFuseUnits:
+    """The one unit rule, without Spark: a stage joins the preceding unit
+    when it is marked, or when it and every member of that unit are
+    partition stages."""
+
+    @pytest.mark.parametrize("spec, want", [
+        ("P P G P", [["s0", "s1"], ["s2"], ["s3"]]),
+        ("P* P", [["s0", "s1"]]),
+        ("G* P", [["s0"], ["s1"]]),
+        ("P G P*", [["s0"], ["s1", "s2"]]),
+        ("G G*", [["s0", "s1"]]),
+        ("G G", [["s0"], ["s1"]]),
+    ])
+    def test_unit_members(self, spec, want):
+        units = ResumableCurationPipeline._fuse_units(_kinds(spec))
+        assert [[m.name for m in u] for u in units] == want
+
+
 class TestFusedPipeline:
-    """Stage fusion (run(fuse=...)): adjacent narrow stages share one
-    lineage unit / one materialization; explicit fuse_with_previous folds
-    a stage into the preceding unit. Results must be identical to the
-    unfused run — fusion is a physical choice, never a semantic one."""
+    """Stage fusion: adjacent narrow stages share one lineage unit / one
+    materialization; explicit fuse_with_previous folds a stage into the
+    preceding unit. Results must be identical to the unfused statement of
+    the pipeline — fusion is a physical choice, never a semantic one."""
 
     def test_narrow_fuses_partition_chain_keeps_wave_resume(
             self, spark, pages, tmp_path):
@@ -165,9 +197,8 @@ class TestFusedPipeline:
                                          partitions_per_commit=2)
         # crash mid-way through the FUSED partition unit (by member name)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            pipe.run(pages, stages, run_id="r", fail_at=("mark", 5),
-                     fuse="narrow")
-        res = pipe.run(pages, stages, run_id="r", fuse="narrow")
+            pipe.run(pages, stages, run_id="r", fail_at=("mark", 5))
+        res = pipe.run(pages, stages, run_id="r")
         assert [s.name for s in res.stages] == ["quality+mark", "dedup"]
         assert res.stages[0].kind == "partition"
         assert res.stages[0].members == ["quality", "mark"]
@@ -192,7 +223,7 @@ class TestFusedPipeline:
         ]
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
                                          n_buckets=8)
-        res = pipe.run(pages, fused, run_id="r", fuse="narrow")
+        res = pipe.run(pages, fused, run_id="r")
         assert [s.name for s in res.stages] == ["quality+host_cap+dedup"]
         assert res.stages[0].kind == "global"
         got = sorted(r["url"] for r in
@@ -215,27 +246,13 @@ class TestFusedPipeline:
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8)
         # member name addresses the fused unit
         with pytest.raises(RuntimeError, match="dedup"):
-            pipe.run(pages, stages, run_id="r", fail_at=("dedup", None),
-                     fuse="narrow")
-        res = pipe.run(pages, stages, run_id="r", fuse="narrow")
+            pipe.run(pages, stages, run_id="r", fail_at=("dedup", None))
+        res = pipe.run(pages, stages, run_id="r")
         assert res.stages[0].resumed          # quality committed pre-crash
         assert not res.stages[1].resumed      # fused unit ran now
         assert res.stages[1].name == "host_cap+dedup"
         assert (spark.read.parquet(res.stages[-1].output_path).count()
                 == _expected(pages).count())
-
-    def test_max_fuses_everything(self, spark, pages, tmp_path):
-        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
-                                         n_buckets=8)
-        res = pipe.run(pages, STAGES, run_id="r", fuse="max")
-        assert len(res.stages) == 1
-        assert res.stages[0].members == ["quality", "host_cap", "dedup"]
-        assert res.rows_out == _expected(pages).count()
-
-    def test_unknown_policy_rejected(self, spark, pages, tmp_path):
-        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"))
-        with pytest.raises(ValueError, match="fuse policy"):
-            pipe.run(pages, STAGES, run_id="r", fuse="eager")
 
     def test_fused_unit_with_all_rows_dropped(self, spark, pages, tmp_path):
         """The empty-output schema fallback and the AQE observation guard
@@ -249,7 +266,7 @@ class TestFusedPipeline:
         ]
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
                                          n_buckets=4)
-        res = pipe.run(pages, stages, run_id="e", fuse="narrow")
+        res = pipe.run(pages, stages, run_id="e")
         assert res.stages[0].rows_in > 0 and res.stages[0].rows_out == 0
 
 

@@ -73,6 +73,24 @@ class TestSinkContract:
             assert raw == 1   # compaction stores one physical row
 
 
+class TestSinkBase:
+    def test_exists_has_no_fallback(self):
+        """exists() is abstract: a base fallback that turns any read error
+        into 'no store' would reset every incremental watermark to EPOCH
+        on a store that exists but cannot be read."""
+        from cloud_data_quality_spark.engine.sinks import SummarySink
+
+        class ReadWriteOnly(SummarySink):
+            def write(self, summary):
+                pass
+
+            def read(self, spark, deduped=True):
+                pass
+
+        with pytest.raises(TypeError, match="exists"):
+            ReadWriteOnly()
+
+
 class TestCompactingSinkPhysical:
     def test_one_physical_row_per_run_id(self, spark, tmp_path):
         sink = CompactingParquetSink(str(tmp_path / "dq_summary3"))
