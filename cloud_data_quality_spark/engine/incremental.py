@@ -39,8 +39,12 @@ test_quality_filter.TestResume::test_partition_aligned_waves_prune_the_scan).
 
 Atomicity note: parquet gives write-then-commit ordering (output before
 lineage append), so a crash mid-wave re-processes that wave's partitions —
-idempotent because dynamic partition overwrite replaces exactly the
-directories it rewrites. On Iceberg both writes share one transaction.
+idempotent because the unit write (``write_bucketed``) sets dynamic
+partition overwrite as a WRITER option, so it replaces exactly the
+directories it rewrites whatever the caller's session mode, and the
+session's ``partitionOverwriteMode`` is never touched. An aborted wave
+write commits no files and appends no lineage. On Iceberg both writes
+share one transaction.
 """
 
 from __future__ import annotations
@@ -51,7 +55,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -100,18 +104,36 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
      .write.mode("append").parquet(path))
 
 
+def read_lineage(spark: SparkSession, path: str, where: Column) -> list[Row]:
+    """The lineage rows at ``path`` that match ``where``, in one job.
+    Hadoop-FS existence probe (works for file://, hdfs://, s3a://...)
+    instead of catching a read exception keeps two failure modes distinct:
+    a missing lineage table means 'first run' (no rows), but a lineage
+    table that EXISTS and fails to read is corrupt state — silently
+    returning no rows there would re-run and double-write every partition,
+    so that error propagates."""
+    from .sinks import _hadoop_path_exists
+    if not _hadoop_path_exists(spark, path):
+        return []
+    return (spark.read.schema(LINEAGE_SCHEMA).parquet(path)
+            .where(where).collect())
+
+
 def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
     """Overwrite ``path`` with ``df``. A frame with a ``part_key`` column
     is written ``partitionBy("part_key")`` after clustering its rows by
     bucket: without the shuffle every write task opens a file in every
     partition dir (tasks × buckets small files — 512 at 32×16; measured
     ~1.6× slower than shuffling the kept rows once and writing one file per
-    bucket, and the small files then tax every downstream read). A frame
-    without ``part_key`` is a plain overwrite."""
+    bucket, and the small files then tax every downstream read). The
+    partitioned write overwrites dynamically — only the buckets it writes
+    are replaced — as an option of this writer, not of the session. A
+    frame without ``part_key`` is a plain overwrite."""
     if "part_key" not in df.columns:
         df.write.mode("overwrite").parquet(path)
         return
     (df.repartition(n_buckets, "part_key").write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
      .partitionBy("part_key").parquet(path))
 
 
@@ -142,25 +164,11 @@ class ResumableQualityRun:
         self.n_buckets = n_buckets
         self.partition_expr = partition_expr or f"pmod(xxhash64(url), {n_buckets})"
         self.partitions_per_commit = partitions_per_commit
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def _lineage_exists(self) -> bool:
-        """Hadoop-FS existence probe (works for file://, hdfs://, s3a://...).
-        Probing instead of catching a read exception keeps two failure modes
-        distinct: a missing lineage table means 'first run' (empty set), but
-        a lineage table that EXISTS and fails to read is corrupt state — a
-        silent empty set there would quietly re-run and double-write every
-        partition, so that error must propagate."""
-        from .sinks import _hadoop_path_exists
-        return _hadoop_path_exists(self.spark, self.lineage_path)
 
     def committed_partitions(self, run_id: str) -> set[int]:
-        if not self._lineage_exists():
-            return set()
-        lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
-        rows = (lineage.where((F.col("run_id") == run_id)
-                              & (F.col("status") == "committed"))
-                .select("part_key").distinct().collect())
+        rows = read_lineage(self.spark, self.lineage_path,
+                            (F.col("run_id") == run_id)
+                            & (F.col("status") == "committed"))
         return {r["part_key"] for r in rows}
 
     def _keyed(self, df: DataFrame) -> DataFrame:
@@ -223,7 +231,6 @@ class ResumableQualityRun:
         df: DataFrame,
         transform: Callable[[DataFrame], DataFrame],
         run_id: str,
-        fail_at_partition: int | None = None,  # test hook: simulate a crash
         committed: set[int] | None = None,
     ) -> ResumableResult:
         """Process every partition of ``run_id`` not yet committed.
@@ -237,16 +244,6 @@ class ResumableQualityRun:
         rows_in = rows_kept = 0
         processed: list[int] = []
         schema = None
-
-        if fail_at_partition is not None and fail_at_partition in remaining:
-            # Simulated crash: commit everything strictly before the crash
-            # point (one wave), then die — exercises partition-granular resume.
-            pre = [p for p in remaining if p < fail_at_partition]
-            if pre:
-                self._run_wave(df, transform, run_id, pre)
-            raise RuntimeError(
-                f"simulated crash before partition {fail_at_partition}")
-
         chunk = self.partitions_per_commit or len(remaining) or 1
         for i in range(0, len(remaining), chunk):
             wave = remaining[i:i + chunk]

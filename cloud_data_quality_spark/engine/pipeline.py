@@ -60,13 +60,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from cloud_data_quality_spark.engine.incremental import (
-    LINEAGE_SCHEMA,
     ResumableQualityRun,
     append_lineage,
     preserve_observations,
+    read_lineage,
     write_bucketed,
 )
-from cloud_data_quality_spark.engine.sinks import _hadoop_path_exists
 
 GLOBAL_PART_KEY = -1
 
@@ -140,12 +139,9 @@ class ResumableCurationPipeline:
         """Every lineage row of ``run_id``'s units, in one job. The filter
         keeps the trailing '/' so run 'r1' never sees run 'r10's units."""
         ledger: Ledger = {}
-        if _hadoop_path_exists(self.spark, self.lineage_path):
-            for r in (self.spark.read.schema(LINEAGE_SCHEMA)
-                      .parquet(self.lineage_path)
-                      .where(F.col("run_id").startswith(f"{run_id}/"))
-                      .collect()):
-                ledger.setdefault(r["run_id"], []).append(r)
+        for r in read_lineage(self.spark, self.lineage_path,
+                              F.col("run_id").startswith(f"{run_id}/")):
+            ledger.setdefault(r["run_id"], []).append(r)
         return ledger
 
     def _stage_run_id(self, run_id: str, idx: int, name: str) -> str:
@@ -168,7 +164,7 @@ class ResumableCurationPipeline:
 
     def _run_partition_stage(
         self, df: DataFrame, stage: PipelineStage, idx: int, run_id: str,
-        ledger: Ledger, fail_at_partition: int | None,
+        ledger: Ledger,
     ) -> tuple[StageResult, StructType | None]:
         base = self._stage_paths(run_id, idx, stage.name)
         # the first stage buckets by id hash; any stage whose input already
@@ -189,7 +185,6 @@ class ResumableCurationPipeline:
                  if r["status"] == "committed"]
         already = {r["part_key"] for r in prior}
         res = runner.run(df, stage.transform, run_id=stage_run_id,
-                         fail_at_partition=fail_at_partition,
                          committed=already)
         # report whole-stage totals (earlier commits + this run's waves),
         # not this process's delta — a resumed stage would otherwise claim
@@ -320,14 +315,13 @@ class ResumableCurationPipeline:
         df: DataFrame,
         stages: Sequence[PipelineStage],
         run_id: str,
-        fail_at: tuple[str, int | None] | None = None,  # test crash hook
     ) -> PipelineResult:
-        """Execute (or resume) the staged pipeline. ``fail_at=(stage_name,
-        partition|None)`` simulates a crash inside that stage — partition
-        stages crash before the given bucket, global stages crash before
-        their commit mark; naming a FUSED member crashes its whole unit.
-        Stages are grouped into units by _fuse_units; resume keys include
-        the unit name, so they follow from the stage list alone."""
+        """Execute (or resume) the staged pipeline. Stages are grouped
+        into units by _fuse_units; resume keys include the unit name, so
+        they follow from the stage list alone. A run that fails inside a
+        unit leaves that unit's committed waves (partition units) in the
+        lineage; rerunning with the same ``run_id`` skips every committed
+        unit and wave."""
         if not stages:
             raise ValueError("pipeline needs at least one stage")
         names = [s.name for s in stages]
@@ -338,19 +332,12 @@ class ResumableCurationPipeline:
         current = df
         for idx, members in enumerate(self._fuse_units(stages)):
             stage, pinned = self._unit_stage(members)
-            member_names = [m.name for m in members]
-            crash_here = fail_at is not None and fail_at[0] in member_names
             t0 = time.perf_counter()
             try:
                 if stage.kind == "partition":
                     res, written = self._run_partition_stage(
-                        current, stage, idx, run_id, ledger,
-                        fail_at_partition=fail_at[1] if crash_here else None)
+                        current, stage, idx, run_id, ledger)
                 elif stage.kind == "global":
-                    if crash_here:
-                        raise RuntimeError(
-                            f"simulated crash in global stage "
-                            f"{fail_at[0]!r} (unit {stage.name!r})")
                     res, written = self._run_global_stage(
                         current, stage, idx, run_id, ledger)
                 else:
@@ -360,7 +347,7 @@ class ResumableCurationPipeline:
                     f.unpersist()
                 pinned.clear()
             res.seconds = round(time.perf_counter() - t0, 3)
-            res.members = member_names
+            res.members = [m.name for m in members]
             result.stages.append(res)
             current = self._stage_output_frame(stage, current,
                                                res.output_path, written)

@@ -72,7 +72,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cloud_data_quality_spark.functions.dedup import word_shingles
+from cloud_data_quality_spark.functions.dedup import (
+    eager_checkpoint,
+    word_shingles,
+)
 
 _HASH_BITS = 60  # top 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -692,8 +695,7 @@ class SeenFingerprintStore:
         store and collapse to zero rows. A checkpoint's plan no longer
         references the table at all. Reliable checkpoint when a checkpoint
         dir is configured (cluster runs — survives executor loss),
-        localCheckpoint otherwise — same auto-selection as
-        duplicate_clusters.
+        localCheckpoint otherwise (dedup.eager_checkpoint).
 
         Ordering: `output_writer(survivors)` runs BEFORE the store append.
         If the output write fails, the store is untouched and a rerun
@@ -703,13 +705,10 @@ class SeenFingerprintStore:
         duplicates on rerun — the safe direction — and is closed entirely
         when the caller also passes a stable `wave_id` (replayed waves
         exclude their own fps, recompute identically, and overwrite)."""
-        spark = new_df.sparkSession
         seen = (self.read(exclude_wave=wave_id) if self.exists() else None)
         survivors = incremental_dedup(new_df, seen, text_col=text_col,
                                       id_col=id_col, fp_col=self.fp_col)
-        reliable = spark.sparkContext.getCheckpointDir() is not None
-        survivors = (survivors.checkpoint(eager=True) if reliable
-                     else survivors.localCheckpoint(eager=True))
+        survivors = eager_checkpoint(survivors)
         result = survivors.drop(self.fp_col)
         if output_writer is not None:
             output_writer(result)
@@ -850,7 +849,6 @@ class SeenMinhashStore:
         every plan reading the store table (documented recache trap)."""
         from cloud_data_quality_spark.functions.dedup import (
             duplicate_clusters, sketch_jaccard)
-        spark = new_df.sparkSession
         seen = self.read(exclude_wave=wave_id) if self.exists() else None
         wave = incremental_minhash_dedup(
             new_df, seen, text_col=text_col, id_col=id_col,
@@ -872,9 +870,7 @@ class SeenMinhashStore:
         losers = (labels.where(F.col("id") != F.col("cluster_id"))
                   .select(F.col("id").alias(id_col)))
         survivors = wave.join(losers, id_col, "left_anti")
-        reliable = spark.sparkContext.getCheckpointDir() is not None
-        survivors = (survivors.checkpoint(eager=True) if reliable
-                     else survivors.localCheckpoint(eager=True))
+        survivors = eager_checkpoint(survivors)
         result = survivors.drop("sig")
         if output_writer is not None:
             output_writer(result)

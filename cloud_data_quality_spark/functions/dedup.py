@@ -71,6 +71,18 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     return df
 
 
+def eager_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and truncate its lineage: a reliable
+    checkpoint into the session's checkpoint dir when one is configured
+    (sparkContext.setCheckpointDir — survives executor loss and pins no
+    executor memory, the right mode for long cluster runs), else
+    localCheckpoint (fastest, single-box / short jobs — an executor loss
+    restarts the whole computation)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 # ---------------------------------------------------------------- exact
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -502,8 +514,7 @@ def simhash_pairs(
 
 # --------------------------------------------------------------- clusters
 
-def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25,
-                       reliable_checkpoint: bool | None = None) -> DataFrame:
+def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25) -> DataFrame:
     """Connected components over a near-dup pair list (id_a, id_b) →
     (id, cluster_id) with cluster_id = min member id. This is the operator a
     training pipeline actually dedupes with: pairs chain (A~B, B~C ⇒ {A,B,C})
@@ -514,15 +525,9 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25,
     takes the min label among itself and its neighbors, then (2) pointer
     jumping — every node re-reads its label's CURRENT label, which halves
     path lengths, giving O(log diameter) rounds overall. Each labels frame
-    is checkpointed so the plan stays ONE round deep (iterative lineage
+    is checkpointed (eager_checkpoint: reliable iff a checkpoint dir is
+    configured) so the plan stays ONE round deep (iterative lineage
     otherwise doubles per round and the optimizer melts down).
-
-    reliable_checkpoint: True writes each round's labels to the session's
-    checkpoint dir (sparkContext.setCheckpointDir) — survives executor loss
-    and doesn't pin executor memory, the right mode for long cluster runs;
-    False uses localCheckpoint (fastest, single-box / short jobs — an
-    executor loss restarts the whole computation). Default (None) picks
-    reliable iff a checkpoint dir is configured.
 
     Convergence check: a per-round count of CHANGED labels — zero changes
     is exactly the fixpoint (no monotonicity argument needed, and unlike a
@@ -531,14 +536,6 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25,
     job as an Observation, so each round is exactly ONE job (no separate
     scalar agg pass over the checkpointed frame)."""
     from pyspark.sql import Observation
-    spark = pairs.sparkSession
-    if reliable_checkpoint is None:
-        reliable_checkpoint = (
-            spark.sparkContext.getCheckpointDir() is not None)
-
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if reliable_checkpoint
-                else df.localCheckpoint())
 
     # Materialize edges ONCE. `pairs` is usually the un-materialized MinHash
     # LSH pipeline (q_minhash_clusters / dedup_near_duplicates pass it
@@ -551,9 +548,8 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25,
         F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
     edges = pairs.select(both_dirs.alias("e")).select("e.src", "e.dst")
-    edges = (edges.checkpoint(eager=True) if reliable_checkpoint
-             else edges.localCheckpoint(eager=True))
-    labels = _checkpoint(
+    edges = eager_checkpoint(edges)
+    labels = eager_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("cluster_id", F.col("id")))
@@ -573,7 +569,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 25,
               .select(l1.id, l1["__old"],
                       F.coalesce("plabel", "cluster_id").alias("cluster_id")))
         obs = Observation()
-        mat = _checkpoint(l2.observe(
+        mat = eager_checkpoint(l2.observe(
             obs, F.sum(F.when(F.col("cluster_id") != F.col("__old"),
                               F.lit(1)).otherwise(F.lit(0)))
             .alias("changed")))

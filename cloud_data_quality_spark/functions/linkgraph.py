@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cloud_data_quality_spark.functions.dedup import eager_checkpoint
 from cloud_data_quality_spark.functions.hosts import url_host
 
 #: bigint micro-units per node of initial rank; 10^6 keeps 6 digits of
@@ -88,8 +89,7 @@ def host_degrees(edges: DataFrame) -> DataFrame:
 
 
 def host_pagerank(edges: DataFrame, iterations: int = 5,
-                  damping_pct: int = 85,
-                  reliable_checkpoint: bool | None = None) -> DataFrame:
+                  damping_pct: int = 85) -> DataFrame:
     """Integer-exact PageRank over (src, dst) host edges → (host,
     rank_micro). Per iteration every host's rank becomes
 
@@ -102,23 +102,14 @@ def host_pagerank(edges: DataFrame, iterations: int = 5,
     Plan shape: edges⋈out_deg is materialized ONCE before the loop; each
     round is one host-keyed join + one partial-aggregated shuffle + one
     left join back to the node list, checkpointed so the optimizer never
-    sees more than one round of lineage (duplicate_clusters' policy:
-    reliable checkpoint iff a checkpoint dir is configured, else local)."""
+    sees more than one round of lineage (dedup.eager_checkpoint: reliable
+    checkpoint iff a checkpoint dir is configured, else local)."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    spark = edges.sparkSession
-    if reliable_checkpoint is None:
-        reliable_checkpoint = (
-            spark.sparkContext.getCheckpointDir() is not None)
-
-    def _pin(df: DataFrame) -> DataFrame:
-        return (df.checkpoint(eager=True) if reliable_checkpoint
-                else df.localCheckpoint(eager=True))
-
-    nodes = _pin(edges.select(F.col("src").alias("host"))
+    nodes = eager_checkpoint(edges.select(F.col("src").alias("host"))
                  .union(edges.select("dst")).distinct())
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    edges_deg = _pin(edges.join(out_deg, "src"))
+    edges_deg = eager_checkpoint(edges.join(out_deg, "src"))
     base = (100 - damping_pct) * RANK_SCALE // 100
     ranks = nodes.withColumn("rank_micro", F.lit(RANK_SCALE).cast("long"))
     for _ in range(iterations):
@@ -127,7 +118,7 @@ def host_pagerank(edges: DataFrame, iterations: int = 5,
                    .select(F.col("dst"),
                            F.expr("rank_micro div out_deg").alias("c"))
                    .groupBy("dst").agg(F.sum("c").alias("sc")))
-        ranks = _pin(
+        ranks = eager_checkpoint(
             nodes.join(contrib, nodes.host == contrib.dst, "left")
             .select(nodes.host,
                     (F.lit(base)

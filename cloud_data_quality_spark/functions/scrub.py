@@ -66,10 +66,3 @@ def scrub_text(col: Column) -> Column:
     the chain is the identity on them; NULL stays NULL on both branches)."""
     return F.when(col.rlike(SCRUB_DETECT_PATTERN),
                   scrub_toxicity(scrub_pii(col))).otherwise(col)
-
-
-def has_pii(col: Column) -> Column:
-    cond = F.lit(False)
-    for _, pattern, _ in SCRUB_PATTERNS:
-        cond = cond | col.rlike(pattern)
-    return cond

@@ -117,7 +117,7 @@ def write_shards(
     `{output_dir}/data/shard_id=K/`, plus one manifest row per shard in
     `{output_dir}/manifest`. Returns the full manifest DataFrame.
 
-    Resume: shards already present in the manifest are filtered out
+    Resume: shards already present in the manifest are anti-joined out
     before the shuffle and their files are never rewritten — a killed run
     reissued with the same arguments completes only the missing shards.
     Re-running a complete set is a no-op that returns the manifest.
@@ -127,18 +127,23 @@ def write_shards(
     manifest_dir = f"{output_dir}/manifest"
     spark = df.sparkSession
 
-    committed: set[int] = set()
+    # committed shards leave by a broadcast left-anti join against the
+    # manifest — no driver-side id list, and still before the shuffle
+    committed = None
     if _hadoop_path_exists(spark, manifest_dir):
-        committed = {
-            r["shard_id"]
-            for r in spark.read.schema(MANIFEST_SCHEMA)
-            .parquet(manifest_dir).select("shard_id").collect()}
+        committed = F.broadcast(
+            spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+            .select(F.col("shard_id").alias("__done")))
+
+    def uncommitted(frame: DataFrame) -> DataFrame:
+        if committed is None:
+            return frame
+        return frame.join(committed, F.col("shard_id") == F.col("__done"),
+                          "left_anti")
 
     shard = F.expr(f"({position_col} - 1) div {docs_per_shard}") \
         .cast("bigint")
-    pending = df.withColumn("shard_id", shard)
-    if committed:
-        pending = pending.where(~F.col("shard_id").isin(*committed))
+    pending = uncommitted(df.withColumn("shard_id", shard))
     # one task per shard hash bucket; partitionBy splits a task's rows by
     # shard value, so each shard lands in exactly one file, rows in
     # position order. Dynamic overwrite replaces exactly the re-written
@@ -151,10 +156,8 @@ def write_shards(
      .partitionBy("shard_id")
      .parquet(data_dir))
 
-    new_rows = shard_manifest_frame(
-        df, docs_per_shard, position_col, id_col, text_col)
-    if committed:
-        new_rows = new_rows.where(~F.col("shard_id").isin(*committed))
+    new_rows = uncommitted(shard_manifest_frame(
+        df, docs_per_shard, position_col, id_col, text_col))
     sizes = _shard_bytes(spark, data_dir)
     size_map = F.create_map(
         *[F.lit(x) for kv in sizes.items() for x in kv]) \

@@ -101,18 +101,6 @@ def alpha_ratio(col: Column) -> Column:
     return (alpha.cast("double") / F.nullif(F.length(col), F.lit(0))).cast("double")
 
 
-def lines(col: Column) -> Column:
-    return F.split(col, "\n")
-
-
-def duplicate_line_fraction(col: Column) -> Column:
-    """Gopher repetition signal: 1 - distinct_lines/lines."""
-    ls = lines(col)
-    n = F.size(ls)
-    nd = F.size(F.array_distinct(ls))
-    return (F.lit(1.0) - nd.cast("double") / F.nullif(n, F.lit(0))).cast("double")
-
-
 def duplicate_token_fraction(col: Column) -> Column:
     """Repetition over whitespace tokens: 1 - distinct_tokens/tokens."""
     toks = tokens(col)

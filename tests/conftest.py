@@ -3,14 +3,42 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.sources.session import get_spark
+
+INJECTED_FAULT = "injected fault"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def fail_on_part_key(transform, k: int):
+    """``transform``, then a real task failure: computing any output row
+    whose ``part_key`` is ``k`` raises through ``F.raise_error``, so the
+    Spark job that writes the output aborts. The fault rewrites
+    ``part_key`` in place, a projection the optimizer can neither prune
+    nor turn into a partition filter."""
+    def faulty(df):
+        key = F.col("part_key")
+        fault = F.raise_error(F.lit(f"{INJECTED_FAULT} at part_key {k}"))
+        return transform(df).withColumn(
+            "part_key", F.when(key == k, fault).otherwise(key))
+    return faulty
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="cdq_tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def static_overwrite(spark):
+    """The session in Spark's default STATIC partition-overwrite mode for
+    one test; the previous mode is restored afterwards."""
+    prev = spark.conf.get(OVERWRITE_MODE)
+    spark.conf.set(OVERWRITE_MODE, "STATIC")
+    yield spark
+    spark.conf.set(OVERWRITE_MODE, prev)
 
 
 @pytest.fixture(scope="session")

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
+from conftest import INJECTED_FAULT, OVERWRITE_MODE, fail_on_part_key
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.engine.pipeline import (
@@ -48,6 +52,18 @@ def _expected(pages):
     return _exact_dedup(_cap_hosts(_quality(pages)))
 
 
+def _faulty(stages, name, k):
+    """``stages`` with stage ``name``'s transform failing on part_key k."""
+    return [dataclasses.replace(s, transform=fail_on_part_key(s.transform, k))
+            if s.name == name else s for s in stages]
+
+
+def _committed(pipe, run_id, unit):
+    """Buckets of ``unit`` that the lineage records as committed."""
+    return {r["part_key"] for r in pipe._read_ledger(run_id)
+            .get(f"{run_id}/{unit}", ()) if r["status"] == "committed"}
+
+
 class TestComposedPipeline:
     def test_end_to_end_matches_unstaged(self, spark, pages, tmp_path):
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
@@ -70,10 +86,11 @@ class TestComposedPipeline:
         work = str(tmp_path / "w2")
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8,
                                          partitions_per_commit=2)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            pipe.run(pages, STAGES, run_id="r2", fail_at=("quality", 5))
+        # waves [0,1] and [2,3] commit; wave [4,5]'s write job aborts
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(pages, _faulty(STAGES, "quality", 5), run_id="r2")
+        assert _committed(pipe, "r2", "00_quality") == {0, 1, 2, 3}
         res = pipe.run(pages, STAGES, run_id="r2")
-        # buckets 0-4 committed pre-crash and were NOT re-processed
         q = res.stages[0]
         assert not q.resumed  # partially done, finished now
         got = sorted(r["url"] for r in
@@ -86,8 +103,8 @@ class TestComposedPipeline:
     def test_crash_in_global_stage_resumes(self, spark, pages, tmp_path):
         work = str(tmp_path / "w3")
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8)
-        with pytest.raises(RuntimeError, match="host_cap"):
-            pipe.run(pages, STAGES, run_id="r3", fail_at=("host_cap", None))
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(pages, _faulty(STAGES, "host_cap", 0), run_id="r3")
         res = pipe.run(pages, STAGES, run_id="r3")
         assert res.stages[0].resumed        # quality fully committed pre-crash
         assert not res.stages[1].resumed    # host_cap ran this time
@@ -195,9 +212,10 @@ class TestFusedPipeline:
         work = str(tmp_path / "w")
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8,
                                          partitions_per_commit=2)
-        # crash mid-way through the FUSED partition unit (by member name)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            pipe.run(pages, stages, run_id="r", fail_at=("mark", 5))
+        # a member of the FUSED partition unit fails in wave [4,5]
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(pages, _faulty(stages, "mark", 5), run_id="r")
+        assert _committed(pipe, "r", "00_quality+mark") == {0, 1, 2, 3}
         res = pipe.run(pages, stages, run_id="r")
         assert [s.name for s in res.stages] == ["quality+mark", "dedup"]
         assert res.stages[0].kind == "partition"
@@ -244,9 +262,9 @@ class TestFusedPipeline:
         ]
         work = str(tmp_path / "w")
         pipe = ResumableCurationPipeline(spark, work, n_buckets=8)
-        # member name addresses the fused unit
-        with pytest.raises(RuntimeError, match="dedup"):
-            pipe.run(pages, stages, run_id="r", fail_at=("dedup", None))
+        # a failing member fails its whole fused unit
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(pages, _faulty(stages, "dedup", 0), run_id="r")
         res = pipe.run(pages, stages, run_id="r")
         assert res.stages[0].resumed          # quality committed pre-crash
         assert not res.stages[1].resumed      # fused unit ran now
@@ -351,6 +369,23 @@ class TestRunIsolationNoStaleRows:
         assert again.rows_out == first.rows_out
 
 
+class TestSessionOverwriteMode:
+    def test_run_leaves_the_session_mode_alone(self, static_overwrite,
+                                                pages, tmp_path):
+        """Unit writes overwrite dynamically as a writer option: the
+        session keeps its STATIC mode, and a multi-wave partition unit
+        still keeps every wave's rows."""
+        spark = static_overwrite
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=4, partitions_per_commit=2)
+        stages = [PipelineStage("s", lambda d: d, kind="partition"),
+                  PipelineStage("dedup", _exact_dedup, kind="global")]
+        res = pipe.run(pages, stages, run_id="s")
+        assert spark.conf.get(OVERWRITE_MODE) == "STATIC"
+        assert (spark.read.parquet(res.stages[0].output_path).count()
+                == res.stages[0].rows_out == pages.count())
+
+
 def _count_jobs(spark, group, fn):
     """(fn(), number of Spark jobs fn started) — counted by job group."""
     sc = spark.sparkContext
@@ -393,9 +428,9 @@ class TestLedger:
 
     def test_fresh_object_resumes_a_crash(self, spark, pages, tmp_path):
         work = str(tmp_path / "w")
-        with pytest.raises(RuntimeError, match="host_cap"):
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
             ResumableCurationPipeline(spark, work, n_buckets=8).run(
-                pages, STAGES, run_id="k", fail_at=("host_cap", None))
+                pages, _faulty(STAGES, "host_cap", 0), run_id="k")
         res = ResumableCurationPipeline(spark, work, n_buckets=8).run(
             pages, STAGES, run_id="k")
         assert [s.resumed for s in res.stages] == [True, False, False]
@@ -433,8 +468,9 @@ class TestLedger:
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
                                          n_buckets=8, partitions_per_commit=2)
         stages = STAGES[:1]
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            pipe.run(pages, stages, run_id="p", fail_at=("quality", 5))
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(pages, _faulty(stages, "quality", 5), run_id="p")
+        assert _committed(pipe, "p", "00_quality") == {0, 1, 2, 3}
         q = pipe.run(pages, stages, run_id="p").stages[0]
         assert not q.resumed
         assert q.rows_in == pages.count()

@@ -213,3 +213,40 @@ class TestRound5SessionThreePlanShapes:
         # cap filter executing BEFORE the list aggregation means it prints
         # AFTER it
         assert i_cap > i_collect
+
+
+class TestResumePlanShapes:
+    def test_resumed_shard_write_anti_joins_the_manifest(
+            self, spark, tmp_path, monkeypatch):
+        """A resumed write_shards drops committed shards with a broadcast
+        left-anti join against the manifest, below the shard shuffle; no
+        driver-side IN-list of shard ids reaches the plan."""
+        import re
+
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from cloud_data_quality_spark.functions.selection import (
+            global_enumerate)
+        from cloud_data_quality_spark.functions.shards import write_shards
+        docs = spark.createDataFrame(
+            [(f"u{i:04d}", f"doc {i}") for i in range(200)],
+            "url string, text string")
+        corpus = global_enumerate(docs, ["url"]).localCheckpoint()
+        out = str(tmp_path / "s")
+        write_shards(corpus, out, 32)
+        written = []
+        original = DataFrameWriter.parquet
+
+        def record(self, path, *args, **kwargs):
+            written.append((path, self._df))
+            return original(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", record)
+        write_shards(corpus, out, 32)
+        plans = {path: plan_of(df) for path, df in written}
+        plan = plans[f"{out}/data"]
+        assert not re.search(r"shard_id#\d+L? (IN|INSET)", plan), plan
+        i_shuffle = plan.find("Exchange hashpartitioning(shard_id")
+        i_anti = plan.find("BroadcastHashJoin")
+        assert i_shuffle != -1 and i_anti > i_shuffle, plan
+        assert "LeftAnti" in plan[i_anti:].splitlines()[0]

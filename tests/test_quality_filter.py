@@ -4,6 +4,8 @@ invariants, determinism across parallelism, resume."""
 from __future__ import annotations
 
 import pytest
+from conftest import INJECTED_FAULT, OVERWRITE_MODE, fail_on_part_key
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.engine.incremental import ResumableQualityRun
@@ -115,6 +117,11 @@ class TestSummary:
         assert "words" in reasons
 
 
+def _urls(spark, n):
+    return spark.range(n).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"))
+
+
 class TestResume:
     def test_crash_and_resume_at_partition_granularity(self, spark, pages_parquet,
                                                        tmp_path):
@@ -124,11 +131,13 @@ class TestResume:
             output_path=str(tmp_path / "out"),
             lineage_path=str(tmp_path / "lineage"),
             n_buckets=4,
+            partitions_per_commit=1,
         )
         transform = lambda d: annotate_quality(d).where(F.col("keep"))  # noqa: E731
 
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            runner.run(df, transform, run_id="r1", fail_at_partition=2)
+        # waves [0] and [1] commit; wave [2]'s write job aborts
+        with pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            runner.run(df, fail_on_part_key(transform, 2), run_id="r1")
         committed = runner.committed_partitions("r1")
         assert committed == {0, 1}
 
@@ -214,6 +223,33 @@ class TestResume:
         (tmp_path / "lineage3" / "part-0.parquet").write_text("not parquet")
         with pytest.raises(Exception):
             runner.committed_partitions("rx")
+
+    def test_run_leaves_the_session_mode_alone(self, static_overwrite,
+                                                tmp_path):
+        spark = static_overwrite
+        df = _urls(spark, 200)
+        runner = ResumableQualityRun(
+            spark, output_path=str(tmp_path / "out4"),
+            lineage_path=str(tmp_path / "lineage4"), n_buckets=2)
+        runner.run(df, lambda d: d, run_id="s")
+        assert spark.conf.get(OVERWRITE_MODE) == "STATIC"
+
+    def test_multi_wave_run_in_static_session_keeps_every_row(
+            self, static_overwrite, tmp_path):
+        """Each wave replaces only its own bucket directories, whatever
+        the session's partition-overwrite mode when the runner is built
+        or when it writes."""
+        spark = static_overwrite
+        df = _urls(spark, 400)
+        runner = ResumableQualityRun(
+            spark, output_path=str(tmp_path / "out5"),
+            lineage_path=str(tmp_path / "lineage5"), n_buckets=4,
+            partitions_per_commit=1)
+        spark.conf.set(OVERWRITE_MODE, "STATIC")
+        res = runner.run(df, lambda d: d, run_id="w")
+        assert res.processed_partitions == [0, 1, 2, 3]
+        assert spark.read.parquet(str(tmp_path / "out5")).count() \
+            == res.rows_kept == 400
 
     def test_rerun_is_noop(self, spark, pages_parquet, tmp_path):
         df = spark.read.parquet(pages_parquet).limit(200)
@@ -363,9 +399,11 @@ class TestMediaFilter:
         ]
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
                                          n_buckets=2, id_col="url")
-        with _pytest.raises(RuntimeError, match="media_filter"):
-            pipe.run(df, stages, run_id="m",
-                     fail_at=("media_filter", None))
+        faulty = [stages[0], PipelineStage(
+            "media_filter", fail_on_part_key(stages[1].transform, 0),
+            kind="global")]
+        with _pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
+            pipe.run(df, faulty, run_id="m")
         res = pipe.run(df, stages, run_id="m")
         assert res.stages[0].resumed
         kept = {r["url"] for r in
