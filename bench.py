@@ -493,7 +493,7 @@ def verify_all(sf_dir: str) -> dict:
     n_pass = sum(1 for r in out.values()
                  if r["err"] is None and r["rows_match"] and r["schema_match"]
                  and r["hash_match"] is not False)
-    out["_meta"] = {"sf_dir": sf_dir, "when_epoch": time.time(),
+    out["_meta"] = {"sf_dir": sf_dir,
                     "n_queries": len(out), "n_pass": n_pass,
                     "n_oracled": sum(1 for n in QUERIES if n in ORACLES)}
     (REPO / "CORRECTNESS_full.json").write_text(json.dumps(out, indent=1))

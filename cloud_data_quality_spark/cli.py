@@ -175,6 +175,28 @@ def _require_unique_ids(df, id_col: str, op: str) -> None:
             f"({n_rows} rows, {n_ids} distinct non-null ids)")
 
 
+def _near_dedup(df, *, text_col: str, id_col: str,
+                jaccard_threshold: float, keep_best: bool):
+    """MinHash near-dup removal (`corpus --op near-dedup` and curate's
+    near_dedup unit): LSH pairs over the text, then one member per
+    cluster — the min id, or with keep_best the longest text."""
+    from pyspark.sql import functions as F
+
+    from cloud_data_quality_spark.functions.dedup import (
+        dedup_near_duplicates,
+        minhash_lsh_pairs,
+    )
+    pairs = minhash_lsh_pairs(
+        df, text_col=text_col, id_col=id_col,
+        jaccard_threshold=jaccard_threshold,
+        broadcast_verify=True).select("id_a", "id_b")
+    if not keep_best:
+        return dedup_near_duplicates(df, pairs, id_col=id_col)
+    scored = df.withColumn("__len", F.length(F.col(text_col)))
+    return dedup_near_duplicates(scored, pairs, id_col=id_col,
+                                 score_col="__len").drop("__len")
+
+
 def _corpus(args) -> int:
     from pyspark.sql import functions as F
 
@@ -245,20 +267,9 @@ def _corpus(args) -> int:
         out = C.c4_clean_stage(df, text_col=args.text_col,
                                id_col=args.id_col)
     elif args.op == "near-dedup":
-        from cloud_data_quality_spark.functions.dedup import (
-            dedup_near_duplicates,
-            minhash_lsh_pairs,
-        )
-        pairs = minhash_lsh_pairs(
-            df, text_col=args.text_col, id_col=args.id_col,
-            jaccard_threshold=args.jaccard_threshold,
-            broadcast_verify=True).select("id_a", "id_b")
-        if args.keep_best:
-            scored = df.withColumn("__len", F.length(F.col(args.text_col)))
-            out = dedup_near_duplicates(scored, pairs, id_col=args.id_col,
-                                        score_col="__len").drop("__len")
-        else:
-            out = dedup_near_duplicates(df, pairs, id_col=args.id_col)
+        out = _near_dedup(df, text_col=args.text_col, id_col=args.id_col,
+                          jaccard_threshold=args.jaccard_threshold,
+                          keep_best=args.keep_best)
     elif args.op == "script-stats":
         out = C.script_stats(df, text_col=args.text_col,
                              id_col=args.id_col)
@@ -532,22 +543,8 @@ def _curate(args) -> int:
         # dedup_exact, not a hand-rolled fingerprint window: it keeps the
         # min-id representative with the NULL-text sentinel guard (NULL
         # fingerprints would otherwise all share one window partition and
-        # silently collapse to a single row). When near-dedup follows,
-        # the MinHash signature arrays are computed IN THIS SAME narrow
-        # pass and ride the stage's parquet output — the near-dedup stage
-        # then runs zero text scans and zero md5 (one shingle computation
-        # feeding both dedups; the materialization doubles as the cache
-        # barrier the pushdown pathology needs).
-        out = dedup_exact(d, text_col=args.text_col, id_col=args.id_col)
-        if args.near_dedup > 0:
-            from pyspark.sql import functions as F
-
-            from cloud_data_quality_spark.functions.dedup import (
-                minhash_columns)
-            hs, sig = minhash_columns(F.col(args.text_col))
-            out = out.select("*", hs.alias("__mh_hs"),
-                             sig.alias("__mh_sig"))
-        return out
+        # silently collapse to a single row)
+        return dedup_exact(d, text_col=args.text_col, id_col=args.id_col)
 
     def dropnoindex(d):
         from pyspark.sql import functions as F
@@ -570,33 +567,9 @@ def _curate(args) -> int:
                             max_dim=args.media_max_dim)
 
     def neardedup(d):
-        from cloud_data_quality_spark.functions.dedup import (
-            dedup_near_duplicates,
-            minhash_lsh_pairs,
-            minhash_pairs_from_columns,
-        )
-        helper = [c for c in ("__mh_hs", "__mh_sig") if c in d.columns]
-        if len(helper) == 2:
-            # signatures precomputed by the dedup stage (one shingle pass)
-            pairs = minhash_pairs_from_columns(
-                d, id_col=args.id_col, hs_col="__mh_hs",
-                sig_col="__mh_sig", jaccard_threshold=args.near_dedup,
-                broadcast_verify=True).select("id_a", "id_b")
-        else:
-            pairs = minhash_lsh_pairs(
-                d, text_col=args.text_col, id_col=args.id_col,
-                jaccard_threshold=args.near_dedup,
-                broadcast_verify=True).select("id_a", "id_b")
-        if helper:
-            d = d.drop(*helper)
-        if args.keep_best:
-            from pyspark.sql import functions as F
-            scored = d.withColumn("__len",
-                                  F.length(F.col(args.text_col)))
-            return dedup_near_duplicates(
-                scored, pairs, id_col=args.id_col,
-                score_col="__len").drop("__len")
-        return dedup_near_duplicates(d, pairs, id_col=args.id_col)
+        return _near_dedup(d, text_col=args.text_col, id_col=args.id_col,
+                           jaccard_threshold=args.near_dedup,
+                           keep_best=args.keep_best)
 
     def select_top(d):
         from pyspark.sql import functions as F

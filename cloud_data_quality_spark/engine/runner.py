@@ -42,7 +42,6 @@ import json
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -178,18 +177,31 @@ class DqEngine:
     def entity_last_modified(self, binding: CompiledBinding) -> datetime | None:
         """S4: table last-modified — the reference reads __TABLES__
         (create_rule_binding_view.sql:78-83); for file sources use the newest
-        file mtime, for catalog tables this would be Iceberg's snapshot
-        committed_at."""
+        file mtime under the path, listed recursively through the Hadoop FS
+        API so file://, hdfs:// and s3a:// paths resolve as the read does
+        (None for a missing path); for catalog tables this would be
+        Iceberg's snapshot committed_at."""
         if binding.source_format == "table":
             return None
-        path = Path(binding.table_name.format(**self.table_name_vars))
-        if not path.exists():
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(
+            binding.table_name.format(**self.table_name_vars))
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
             return None
-        files = list(path.glob("**/*")) if path.is_dir() else [path]
-        mtimes = [f.stat().st_mtime for f in files if f.is_file()]
-        if not mtimes:
+        # listStatus, not listFiles: the located statuses listFiles builds
+        # read each file's owner and permissions, which the local FS
+        # without native Hadoop gets by running a shell per file (~10 ms)
+        newest, todo = None, [path]
+        while todo:
+            for status in fs.listStatus(todo.pop()):
+                if status.isDirectory():
+                    todo.append(status.getPath())
+                else:
+                    mtime = status.getModificationTime()
+                    newest = mtime if newest is None else max(newest, mtime)
+        if newest is None:
             return None
-        return datetime.fromtimestamp(max(mtimes), tz=timezone.utc)
+        return datetime.fromtimestamp(newest / 1000, tz=timezone.utc)
 
     def publish_to_target(self, target_path: str, invocation_id: str) -> int:
         """S6: copy this invocation's summary rows to the user-facing target

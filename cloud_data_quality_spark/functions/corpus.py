@@ -76,6 +76,7 @@ from cloud_data_quality_spark.functions.dedup import (
     eager_checkpoint,
     word_shingles,
 )
+from cloud_data_quality_spark.functions.text import tokens
 
 _HASH_BITS = 60  # top 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -86,17 +87,10 @@ def _span_fp(span: Column) -> Column:
     return F.md5(F.lower(F.trim(span)))
 
 
-def _clean_tokens(text: Column) -> Column:
-    """Alias kept for history: tokens() itself now filters the phantom
-    empty tokens (see functions/text.tokens)."""
-    from cloud_data_quality_spark.functions.text import tokens
-    return tokens(text)
-
-
 def _chunk_spans(text: Column, chunk_words: int) -> Column:
     """Consecutive chunk_words-word spans (last span may be shorter).
     Empty/NULL text → empty array: sequence(0, -1) would DESCEND."""
-    words = _clean_tokens(text)
+    words = tokens(text)
     n_chunks = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
     return F.when(n_chunks <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -208,7 +202,7 @@ def substring_dedup(
     100 TB that beats persisting the exploded word table, and an aligned
     partitioner carries the second scan's join for free.
     """
-    base = (df.select(F.col(id_col), _clean_tokens(F.col(text_col))
+    base = (df.select(F.col(id_col), tokens(F.col(text_col))
                       .alias("words"))
             .where(F.size("words") > 0))
 
@@ -442,7 +436,7 @@ def chunk_documents(
     if not 0 <= overlap_tokens < budget_tokens:
         raise ValueError("need 0 <= overlap_tokens < budget_tokens")
     stride = budget_tokens - overlap_tokens
-    toks = _clean_tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     # number of stride-steps whose window is non-empty:
     # ceil(max(size - overlap, 0) / stride), min 1 when the doc has tokens
     n_chunks = F.greatest(
@@ -1218,7 +1212,6 @@ def tfidf_top_terms(
     doc), never a global sort."""
     from pyspark.sql.window import Window
 
-    from cloud_data_quality_spark.functions.text import tokens
     terms = df.select(F.col(id_col),
                       F.explode(tokens(F.col(text_col))).alias("term"))
     if stopwords:
@@ -1345,7 +1338,6 @@ def build_vocabulary(
     generated GROUP BY queries (clouddq/classes/dq_rule.py rule SQL); this
     is the corpus-scale equivalent over token space.
     """
-    from cloud_data_quality_spark.functions.text import tokens
     freq = (df.select(F.explode(tokens(F.col(text_col))).alias("term"))
             .groupBy("term")
             .agg(F.count(F.lit(1)).cast("bigint").alias("freq")))
@@ -1378,7 +1370,6 @@ def oov_stats(
     partial-aggregated count shuffle on the id → broadcast-safe left join
     back to the input's id spine so empty/NULL-text docs keep a row.
     """
-    from cloud_data_quality_spark.functions.text import tokens
     toks = df.select(F.col(id_col),
                      F.explode(tokens(F.col(text_col))).alias("term"))
     iv = F.broadcast(
@@ -1528,8 +1519,6 @@ def bm25_topk(
     from exact integers, so scores match bit-for-bit cross-engine before
     the 4-dp round.
     """
-    from cloud_data_quality_spark.functions.text import tokens
-
     toks = tokens(F.col(text_col))
 
     def _tf(term: str) -> Column:
@@ -1630,8 +1619,6 @@ def inverted_index(
     posting lists are sorted with sort_array so output is deterministic
     under any partitioning. All shuffles key on term — uniform after the
     hot-term cap."""
-    from cloud_data_quality_spark.functions.text import tokens
-
     pairs = (df.select(F.col(id_col).alias("__doc"),
                        F.explode(tokens(F.col(text_col))).alias("term"))
              .groupBy("term", "__doc").agg(F.lit(1).alias("__one")))
@@ -1680,8 +1667,6 @@ def readability_stats(
     Scale shape: pure Column expressions — zero shuffle, zero Python; one
     higher-order filter for the vowel-less-word count, everything else
     plain regexp counting."""
-    from cloud_data_quality_spark.functions.text import tokens
-
     t = F.lower(F.col(text_col))
     toks = tokens(F.col(text_col))
     n_words = F.size(toks).cast("bigint")

@@ -35,7 +35,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from cloud_data_quality_spark.functions.text import fingerprint, tokens
 
@@ -232,34 +231,32 @@ def minhash_lsh_pairs(
     keys.
 
     broadcast_verify: hint the shingle table broadcast into the verify joins.
-    AQE underestimates cached array columns, so small corpora benefit (two
-    shuffle exchanges saved); leave False at scale — the decision is the
-    caller's (a plan-time count() here would trigger an extra job per call)."""
+    Small corpora benefit (two shuffle exchanges saved); leave False at
+    scale — the decision is the caller's (a plan-time count() here would
+    trigger an extra job per call)."""
     base = (
         ensure_min_partitions(df.where(F.col(text_col).isNotNull()))
         .select(F.col(id_col).alias("id"),
                 *minhash_columns(F.col(text_col), n, k))
     )
     # shingling + md5 per doc is the expensive narrow stage and the plan
-    # reads it from three subtrees (bucket explode + both verify sides) —
-    # cache it rather than recompute (measured at sf0.1: cached 3.0 s/query
-    # vs 6.3 s recomputing; at 10^9 docs checkpoint signatures to a real
-    # table instead of pinning executor memory). storageLevel consults the
-    # CacheManager by plan, so a repeat call skips the persist instead of
-    # logging "already cached" warnings and re-pinning.
-    if base.storageLevel == StorageLevel.NONE:
-        base = base.persist()
-    return _lsh_pairs_from_base(base, jaccard_threshold, broadcast_verify)
+    # reads it from three subtrees (bucket explode + both verify sides):
+    # materialize it once. The checkpoint also cuts the lineage, so the
+    # pairs plan re-runs neither the Arrow shingle UDF nor pins a cached
+    # relation that no caller would unpersist.
+    return minhash_pairs_from_columns(
+        eager_checkpoint(base), id_col="id",
+        jaccard_threshold=jaccard_threshold,
+        broadcast_verify=broadcast_verify)
 
 
 def minhash_columns(text: Column, n: int = 3, k: int = 8) -> list[Column]:
     """The per-doc MinHash payload as two Columns — `hs` (every shingle's
     60-bit md5 prefix as a long: the exact-Jaccard verify payload at ~1/5
     the bytes of 32-hex strings) and `sig` (the bottom-k of the sorted
-    hashes: the LSH bucket keys). Exposed so a pipeline stage that already
-    scans the text (e.g. curate's exact dedup) can compute the near-dedup
-    signatures IN THE SAME narrow pass and materialize them for the
-    near-dedup stage — one shingle computation feeding both dedups.
+    hashes: the LSH bucket keys). minhash_lsh_pairs computes them from
+    the text; exposed so a caller that stores them can run
+    minhash_pairs_from_columns over the stored arrays.
 
     Arrow-backed since r7 (12× per core vs the interpreted HOF chain —
     see minhash_sig_longs); both fields come off ONE struct-returning
@@ -296,28 +293,19 @@ def minhash_pairs_from_columns(
     jaccard_threshold: float = 0.5,
     broadcast_verify: bool = False,
 ) -> DataFrame:
-    """minhash_lsh_pairs over PRECOMPUTED signature columns (from
-    minhash_columns, typically materialized by an upstream stage): zero
-    text scans, zero md5 — the bucket join and the exact-Jaccard verify
-    run straight off the stored arrays. Identical results to
-    minhash_lsh_pairs by construction (same expressions, same 60-bit
-    truncation, same threshold contract)."""
+    """minhash_lsh_pairs over signature columns already at hand (from
+    minhash_columns): a stored table of them, or the materialized base
+    minhash_lsh_pairs builds. Zero text scans, zero md5 — the bucket join
+    and the exact-Jaccard verify run straight off the arrays. Identical
+    results to minhash_lsh_pairs by construction (same expressions, same
+    60-bit truncation, same threshold contract)."""
     base = df.select(F.col(id_col).alias("id"),
                      F.col(hs_col).alias("hs"), F.col(sig_col).alias("sig"))
-    if base.storageLevel == StorageLevel.NONE:
-        base = base.persist()
-    return _lsh_pairs_from_base(base, jaccard_threshold, broadcast_verify)
-
-
-def _lsh_pairs_from_base(
-    base: DataFrame, jaccard_threshold: float, broadcast_verify: bool,
-) -> DataFrame:
-    """Bucket join + exact-Jaccard verify over a (id, hs, sig) base."""
-    # empty-shingle filter sits ABOVE the cache barrier: written below the
-    # projection, Catalyst pushes `size(hs) >= 1` into the parquet scan,
-    # re-inlining the whole shingle tree into the pre-repartition
-    # single-file stage (measured: 3.6 s single-threaded at sf0.1). Above
-    # the InMemoryRelation it is a cheap size() over cached arrays.
+    # empty-shingle filter sits ABOVE the materialized base: written below
+    # minhash_lsh_pairs' projection, Catalyst pushes `size(hs) >= 1` into
+    # the parquet scan, re-inlining the whole shingle tree into the
+    # pre-repartition single-file stage (measured: 3.6 s single-threaded
+    # at sf0.1). Here it is a cheap size() over stored arrays.
     base = base.where(F.size("hs") >= 1)
     buckets = base.select("id", F.explode("sig").alias("h"))
     cand = (

@@ -1096,6 +1096,31 @@ class TestRound5CorpusOps:
                 spark.read.parquet(nd["output"]).collect()}
         assert kept == {"u2", "u3"}  # u1 lost to its longer near-dup u2
 
+    def test_curate_units_write_only_the_input_columns(self, spark,
+                                                       tmp_path, capsys):
+        """No unit hands hidden state to a later one: with --near-dedup on,
+        every unit writes the input's columns plus part_key, nothing more
+        (near_dedup computes its own MinHash signatures)."""
+        import json as _json
+        base = ("plenty of common english stopwords flow through this "
+                "sentence and it reads just fine for the filter")
+        inp = str(tmp_path / "docs.parquet")
+        spark.createDataFrame(
+            [("u1", base + " tail one"),
+             ("u2", base + " tail one extra words here")],
+            "url string, text string").write.parquet(inp)
+        rc = main(["curate", "--input", inp,
+                   "--work-dir", str(tmp_path / "w"), "--run-id", "cols",
+                   "--buckets", "4", "--id-col", "url",
+                   "--near-dedup", "0.5", "--keep-best"])
+        assert rc == 0
+        out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert [s["name"] for s in out["stages"]] == \
+            ["quality", "dedup", "near_dedup"]
+        for s in out["stages"]:
+            assert sorted(spark.read.parquet(s["output"]).columns) == \
+                ["part_key", "text", "url"], s["name"]
+
     def test_near_dedup_op(self, spark, tmp_path, capsys):
         inp = str(tmp_path / "docs.parquet")
         base = "one two three four five six seven eight nine ten"

@@ -163,9 +163,9 @@ class TestShingleDedup:
 
 
 class TestSharedSignatureBase:
-    """minhash_pairs_from_columns (r6): near-dedup over signature columns
-    precomputed by an upstream stage — curate's exact-dedup stage computes
-    them in its own narrow pass, so the pipeline shingles each doc ONCE."""
+    """minhash_pairs_from_columns: near-dedup over stored signature
+    columns (from minhash_columns) — the same bucket join + verify body
+    minhash_lsh_pairs runs over its materialized base."""
 
     def test_arrow_twin_equals_jvm_expressions(self, spark):
         """The Arrow-backed minhash_columns / minhash_sig_longs (r7) must
@@ -230,10 +230,13 @@ class TestSharedSignatureBase:
         path = str(tmp_path / "sigs")
         docs.select("*", hs, sig).write.parquet(path)
         stored = spark.read.parquet(path)
-        plan = minhash_pairs_from_columns(stored) \
-            ._jdf.queryExecution().optimizedPlan().toString()
-        assert "md5" not in plan
-        assert "text#" not in plan  # text column pruned entirely
+        qe = minhash_pairs_from_columns(stored)._jdf.queryExecution()
+        assert "md5" not in qe.optimizedPlan().toString()
+        # text column pruned entirely: no scan reads it
+        schemas = [line.split("ReadSchema:")[1] for line in
+                   qe.executedPlan().toString().splitlines()
+                   if "ReadSchema:" in line]
+        assert schemas and not any("text" in r for r in schemas), schemas
 
 
 class TestEmbeddings:

@@ -130,6 +130,32 @@ class TestSourcesAndPublish:
         assert pub.count() == 1
         assert pub.collect()[0]["invocation_id"] == r2.invocation_id
 
+    def test_last_modified_of_a_file_uri_entity(self, spark, tmp_path):
+        """S4 for non-local paths: an entity given as a file:// URI (as
+        hdfs:// or s3a:// ones are) gets the newest file mtime under it,
+        listed through the Hadoop FS API."""
+        path = tmp_path / "t.parquet"
+        spark.createDataFrame([(1, "a"), (2, None)], "id bigint, v string") \
+            .write.parquet(str(path))
+        reg = ConfigRegistry()
+        reg.entities["T"] = Entity.from_dict("T", {
+            "table_name": path.as_uri(),
+            "columns": {"ID": {"data_type": "INT64"},
+                        "V": {"data_type": "STRING"}}})
+        reg.row_filters["NONE"] = RowFilter.from_dict(
+            "NONE", {"filter_sql_expr": "True"})
+        reg.rules["R"] = Rule.from_dict("R", {"rule_type": "NOT_NULL"})
+        reg.rule_bindings["RB"] = RuleBinding.from_dict("RB", {
+            "entity_id": "T", "column_id": "V", "row_filter_id": "NONE",
+            "rule_ids": ["R"]})
+        row = DqEngine(spark, reg).run(["RB"], execution_ts=TS,
+                                       write_summary=False).summary.collect()[0]
+        assert row["failed_count"] == 1
+        newest = max(f.stat().st_mtime for f in path.rglob("*")
+                     if f.is_file())
+        assert row["last_modified"] is not None
+        assert abs(row["last_modified"].timestamp() - newest) < 1
+
 
 class TestSkew:
     def test_hot_host_fixture_and_two_phase_agg(self, spark, pages_parquet):

@@ -250,3 +250,19 @@ class TestResumePlanShapes:
         i_anti = plan.find("BroadcastHashJoin")
         assert i_shuffle != -1 and i_anti > i_shuffle, plan
         assert "LeftAnti" in plan[i_anti:].splitlines()[0]
+
+
+class TestMinhashPlanShapes:
+    def test_pairs_plan_reads_a_materialized_signature_base(self, spark):
+        """minhash_lsh_pairs shingles each doc once, before it returns: the
+        pairs plan reads the checkpointed (id, hs, sig) base, so it holds
+        neither the Arrow shingle UDF nor a cached relation."""
+        from cloud_data_quality_spark.functions.dedup import minhash_lsh_pairs
+        docs = spark.read.parquet(f"{SF}/documents.parquet") \
+            .select("doc_id", "text")
+        pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.5,
+                                  broadcast_verify=True)
+        pairs.collect()
+        plan = plan_of(pairs)
+        assert "ArrowEvalPython" not in plan, plan
+        assert "InMemoryRelation" not in plan, plan
