@@ -197,6 +197,11 @@ def _near_dedup(df, *, text_col: str, id_col: str,
                                  score_col="__len").drop("__len")
 
 
+#: corpus ops that run against a cross-run dedup store (--store)
+_STORE_OPS = ("incremental-dedup", "incremental-minhash-dedup",
+              "compact-store", "compact-minhash-store")
+
+
 def _corpus(args) -> int:
     from pyspark.sql import functions as F
 
@@ -204,13 +209,16 @@ def _corpus(args) -> int:
     from cloud_data_quality_spark.sources.session import get_spark
 
     spark = get_spark(app_name="cdq_corpus", master=args.master)
-    if args.op in ("compact-store", "compact-minhash-store"):
+    store = None
+    if args.op in _STORE_OPS:
         if not args.store:
             raise SystemExit(f"{args.op} needs --store")
-        store = (C.SeenMinhashStore(spark, args.store, n_buckets=args.buckets)
-                 if args.op == "compact-minhash-store"
+        store = (C.SeenMinhashStore(spark, args.store, n_buckets=args.buckets,
+                                    jaccard_threshold=args.jaccard_threshold)
+                 if "minhash" in args.op
                  else C.SeenFingerprintStore(spark, args.store,
                                              n_buckets=args.buckets))
+    if args.op.startswith("compact-"):
         removed = store.compact()
         print(json.dumps({"op": args.op, "store": args.store,
                           "rows_removed": removed}))
@@ -403,15 +411,6 @@ def _corpus(args) -> int:
             F.sum("__len").alias("char_sum"))
         out = counts.join(prof, args.group_col)
     else:  # incremental-dedup / incremental-minhash-dedup
-        if not args.store:
-            raise SystemExit(f"{args.op} needs --store")
-        if args.op == "incremental-minhash-dedup":
-            store = C.SeenMinhashStore(
-                spark, args.store, n_buckets=args.buckets,
-                jaccard_threshold=args.jaccard_threshold)
-        else:
-            store = C.SeenFingerprintStore(spark, args.store,
-                                           n_buckets=args.buckets)
         # dedup_wave writes the output BEFORE appending fps to the store:
         # a failed output write leaves the store untouched (rerun re-emits)
         # instead of permanently suppressing the wave's documents. A stable

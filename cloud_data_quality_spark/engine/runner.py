@@ -39,6 +39,7 @@ per run regardless of binding and rule count (statement rules aside).
 from __future__ import annotations
 
 import json
+import re
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -124,8 +125,12 @@ class DqEngine:
     # ---------- sources ----------
 
     def read_entity(self, binding: CompiledBinding) -> DataFrame:
-        name = binding.table_name.format(**self.table_name_vars)
-        fmt = binding.source_format
+        return self._read_source(binding.entity_id, binding.table_name,
+                                 binding.source_format)
+
+    def _read_source(self, entity_id: str, table_name: str,
+                     fmt: str) -> DataFrame:
+        name = table_name.format(**self.table_name_vars)
         if fmt == "table":
             df = self.spark.table(name)
         elif fmt == "csv":
@@ -136,7 +141,7 @@ class DqEngine:
             df = self.spark.read.orc(name)
         else:
             df = self.spark.read.parquet(name)
-        self._validate_entity_schema(binding.entity_id, name, df)
+        self._validate_entity_schema(entity_id, name, df)
         return df
 
     def _validate_entity_schema(self, entity_id: str, name: str,
@@ -156,23 +161,27 @@ class DqEngine:
                 f"Entity {entity_id}: declared columns {missing} not present "
                 f"in {name} (actual: {sorted(actual)})")
 
-    def register_entity_views(self) -> None:
-        """Expose every configured entity as a temp view named by its
-        entity_id, so CUSTOM_SQL_EXPR rules can use IN/EXISTS subqueries
-        against reference tables (R6 — integrity_reference_data.yaml shape;
-        Spark supports these subqueries in DataFrame expressions natively)."""
-        from cloud_data_quality_spark.compiler.binding import CompiledBinding
+    def register_entity_views(self, bindings: list[CompiledBinding]) -> None:
+        """Expose each configured entity that the bindings' rule or filter
+        SQL names as a temp view named by its entity_id, so CUSTOM_SQL_EXPR
+        rules can use IN/EXISTS subqueries against reference tables (R6 —
+        integrity_reference_data.yaml shape; Spark supports these subqueries
+        in DataFrame expressions natively). Entities no SQL names are not
+        read: an entity the run does not use cannot fail it, and a pass's
+        own entity is not read a second time for a view nothing queries."""
+        sql = " ".join(
+            text for b in bindings
+            for text in (b.filter_sql,
+                         *(r.predicate_sql or r.statement_sql or ""
+                           for r in b.all_rules)))
         for entity in self.registry.entities.values():
+            if not re.search(rf"\b{re.escape(entity.entity_id)}\b", sql,
+                             re.IGNORECASE):
+                continue
             entity = entity.for_environment(self.environment_target)
-            df = self.read_entity(CompiledBinding(
-                rule_binding_id="", entity_id=entity.entity_id,
-                table_name=entity.qualified_table_name,
-                source_format=entity.source_format,
-                column_id="", filter_sql="true", partition_null_guards=(),
-                incremental_column=None, reference_columns=(),
-                simple_rules=(), statement_rules=(), batch_rules=(),
-                metadata={}, configs_hashsum=""))
-            df.createOrReplaceTempView(entity.entity_id)
+            self._read_source(entity.entity_id, entity.qualified_table_name,
+                              entity.source_format) \
+                .createOrReplaceTempView(entity.entity_id)
 
     def entity_last_modified(self, binding: CompiledBinding) -> datetime | None:
         """S4: table last-modified — the reference reads __TABLES__
@@ -509,11 +518,11 @@ class DqEngine:
         rows keep deterministic order (results collected in group order)."""
         execution_ts = execution_ts or datetime.now(timezone.utc)
         invocation_id = invocation_id or uuid.uuid4().hex
-        self.register_entity_views()
-        rows: list[dict] = []
         groups = self._entity_groups(rule_binding_ids)
-        hwms = self.high_watermarks(
-            [b for g in groups for b in g]) if incremental else {}
+        all_bindings = [b for g in groups for b in g]
+        self.register_entity_views(all_bindings)
+        rows: list[dict] = []
+        hwms = self.high_watermarks(all_bindings) if incremental else {}
 
         def run_group(bindings: list[CompiledBinding]) -> list[dict]:
             return self.run_entity(
@@ -551,9 +560,10 @@ class DqEngine:
         output is written. Returns one dict per binding (grouped by entity,
         as run() orders its summary rows) with what WOULD run; config or
         analysis errors raise exactly as a real run would."""
-        self.register_entity_views()
+        groups = self._entity_groups(rule_binding_ids)
+        self.register_entity_views([b for g in groups for b in g])
         out: list[dict] = []
-        for bindings in self._entity_groups(rule_binding_ids):
+        for bindings in groups:
             df = self.read_entity(bindings[0])  # declared-schema check here
             q, projected = self.entity_frame(bindings, df=df)
             plan_head = projected._jdf.queryExecution() \

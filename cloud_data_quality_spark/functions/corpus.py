@@ -28,19 +28,15 @@
                           long-doc sibling of sequence packing).
 * repetition_stats      — Gopher within-doc n-gram repetition fractions
                           (one narrow Arrow stage; REPETITION_OK rule twin).
-* incremental_dedup /
-  SeenFingerprintStore  — cross-run exact dedup against an fp-bucketed
-                          catalog table of everything previously crawled.
-* incremental_minhash_dedup /
-  SeenMinhashStore      — cross-run NEAR-dup dedup: the store keeps each
-                          historical doc's bottom-k MinHash sketch exploded
-                          into band rows (h, doc_id, sig), bucketed on the
-                          band hash; a nightly wave band-joins against the
-                          store (zero store-side Exchange), candidates are
-                          verified with the bottom-k Jaccard estimator, and
-                          near-recrawls are dropped — the operation a real
-                          crawl pipeline runs nightly that the exact store
-                          misses (every boilerplate-tweaked recrawl).
+* incremental_dedup / incremental_minhash_dedup, and their stores
+  SeenFingerprintStore / SeenMinhashStore
+                        — cross-run exact / NEAR-dup dedup of each crawl
+                          wave against all prior waves. Both stores share
+                          one contract (_CatalogStore): a catalog table
+                          bucketed on its join key (fp, or the MinHash band
+                          hash h) so the wave joins it with zero store-side
+                          Exchange, wave_id-tagged replay-safe appends, and
+                          crash-safe compaction.
 
 Scale posture (10^12 docs):
 * span_dedup's only wide stages are (a) one shuffle on the md5 span
@@ -73,10 +69,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.functions.dedup import (
+    dedup_near_duplicates,
     eager_checkpoint,
+    ensure_min_partitions,
+    minhash_sig_longs,
+    sketch_jaccard,
     word_shingles,
 )
-from cloud_data_quality_spark.functions.text import tokens
+from cloud_data_quality_spark.functions.text import fingerprint, tokens
 
 _HASH_BITS = 60  # top 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -584,150 +584,71 @@ def incremental_dedup(
     seen_fps: DataFrame | None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fp_col: str = "fp",
 ) -> DataFrame:
     """Cross-run exact dedup: within the incoming wave keep the min-id
     representative per fingerprint, then drop every document whose
     fingerprint appears in `seen_fps` (the accumulated store of all prior
     runs — see SeenFingerprintStore). Returns the surviving rows WITH their
-    fingerprint column, so the caller can append exactly those fps to the
-    store: survivor fps are new by construction, so the store needs no
-    dedupe on append.
+    `fp` column, so the caller can append exactly those fps to the store:
+    survivor fps are new by construction, so the store needs no dedupe on
+    append.
 
     Same shape as dedup_exact (groupBy-min + semi join — O(1) aggregation
     state per key, no window) plus one anti join on the uniform md5 key.
     NULL-text docs are never duplicates: they get a per-id sentinel key and
     always survive."""
-    from cloud_data_quality_spark.functions.text import fingerprint
     with_fp = new_df.withColumn(
-        fp_col,
+        "fp",
         F.coalesce(fingerprint(F.col(text_col)),
                    F.concat(F.lit("__null__"), F.col(id_col).cast("string"))))
-    canon = with_fp.groupBy(fp_col).agg(F.min(id_col).alias(id_col))
-    wave = with_fp.join(canon, [fp_col, id_col], "left_semi")
+    canon = with_fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
+    wave = with_fp.join(canon, ["fp", id_col], "left_semi")
     if seen_fps is not None:
-        wave = wave.join(seen_fps.select(fp_col), fp_col, "left_anti")
+        wave = wave.join(seen_fps.select("fp"), "fp", "left_anti")
     return wave
-
-
-class SeenFingerprintStore:
-    """Accumulated fingerprint memory for incremental dedup across crawl
-    waves, backed by a catalog table BUCKETED on the fingerprint.
-
-    Why bucketed: at 10^12 documents the store dwarfs every nightly wave.
-    A plain parquet store would shuffle BOTH sides of the anti join every
-    night; a table bucketed on fp joins with no Exchange on the store side —
-    only the wave (orders of magnitude smaller) shuffles, into the store's
-    bucket layout. test_corpus pins that plan shape mechanically.
-
-    Appends use saveAsTable(mode=append), which preserves the bucket spec;
-    each wave's survivors are disjoint from the store by construction
-    (incremental_dedup anti-joined them), so appends never need a merge.
-
-    Replay safety: every appended row carries a `wave_id` tag (NULL for
-    untagged batch runs). A caller that may re-run the same wave (streaming
-    foreachBatch replay after a crash) passes its wave_id to dedup_wave;
-    the store read then EXCLUDES that wave's own fingerprints, so the
-    replay recomputes the identical survivor set instead of anti-joining
-    everything away against its own half-committed append. Re-appending
-    under the same wave_id only duplicates fp rows, which is harmless for
-    anti-join existence semantics."""
-
-    def __init__(self, spark, table: str, n_buckets: int = 64,
-                 fp_col: str = "fp"):
-        self.spark = spark
-        self.table = table
-        self.n_buckets = n_buckets
-        self.fp_col = fp_col
-
-    def exists(self) -> bool:
-        _recover_compaction(self.spark, self.table)
-        return self.spark.catalog.tableExists(self.table)
-
-    def read(self, exclude_wave: str | None = None) -> DataFrame:
-        # appends may come from another session over the same catalog (e.g.
-        # foreachBatch's cloned micro-batch session): this session's
-        # table-relation cache would keep serving the stale file listing,
-        # silently missing recent fingerprints — refresh before reading
-        self.spark.catalog.refreshTable(self.table)
-        df = self.spark.table(self.table)
-        if exclude_wave is not None and "wave_id" in df.columns:
-            # narrow filter — does not disturb the bucketed no-Exchange join
-            df = df.where(~F.col("wave_id").eqNullSafe(F.lit(exclude_wave)))
-        return df.select(self.fp_col)
-
-    def append(self, fps: DataFrame, wave_id: str | None = None) -> None:
-        out = fps.select(self.fp_col)
-        # schema back-compat: a store created before wave tagging has only
-        # the fp column — appending a 2-column frame into it would fail at
-        # every wave. Match the existing table's shape (read() already
-        # guards the other direction); such stores simply don't get replay
-        # exclusion until recreated.
-        if not self.exists() or \
-                "wave_id" in self.spark.table(self.table).columns:
-            out = out.withColumn("wave_id", F.lit(wave_id).cast("string"))
-        (out.write
-         .bucketBy(self.n_buckets, self.fp_col).sortBy(self.fp_col)
-         .mode("append").format("parquet").saveAsTable(self.table))
-
-    def compact(self) -> int:
-        """Remove replay-duplicated rows (full-row distinct, bucket spec
-        preserved). See _compact_catalog_table for the swap caveat."""
-        return _compact_catalog_table(self.spark, self.table,
-                                      self.fp_col, self.n_buckets)
-
-    def dedup_wave(self, new_df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", wave_id: str | None = None,
-                   output_writer=None) -> DataFrame:
-        """One crawl wave end-to-end: dedup against the store (if any),
-        write the survivors out, record their fingerprints, return them.
-
-        The survivor frame is CHECKPOINTED (lineage truncated) before the
-        store append. persist()+count() is NOT enough: saveAsTable(append)
-        recaches every cached plan that reads the target table, so the
-        'pinned' survivors would silently recompute against the updated
-        store and collapse to zero rows. A checkpoint's plan no longer
-        references the table at all. Reliable checkpoint when a checkpoint
-        dir is configured (cluster runs — survives executor loss),
-        localCheckpoint otherwise (dedup.eager_checkpoint).
-
-        Ordering: `output_writer(survivors)` runs BEFORE the store append.
-        If the output write fails, the store is untouched and a rerun
-        re-emits the wave; the opposite order would suppress the wave's
-        documents from every future run without ever emitting them. The
-        remaining window (output written, append crashed) re-emits
-        duplicates on rerun — the safe direction — and is closed entirely
-        when the caller also passes a stable `wave_id` (replayed waves
-        exclude their own fps, recompute identically, and overwrite)."""
-        seen = (self.read(exclude_wave=wave_id) if self.exists() else None)
-        survivors = incremental_dedup(new_df, seen, text_col=text_col,
-                                      id_col=id_col, fp_col=self.fp_col)
-        survivors = eager_checkpoint(survivors)
-        result = survivors.drop(self.fp_col)
-        if output_writer is not None:
-            output_writer(result)
-        self.append(survivors, wave_id=wave_id)
-        return result
 
 
 # ---------------------------------------------- incremental NEAR-dup dedup
 
+def _band_rows(df: DataFrame, id_col: str) -> DataFrame:
+    """(h, doc_id, sig) band rows of a frame carrying a bottom-k `sig`:
+    each sketch hash a join/bucket key, the full sketch alongside for
+    verification. An empty sketch gives no rows, so never a near-dup."""
+    return df.select(F.explode("sig").alias("h"),
+                     F.col(id_col).alias("doc_id"), F.col("sig"))
+
+
+def _sketch_pairs(a: DataFrame, b: DataFrame, jaccard_threshold: float,
+                  k: int = 8, ordered: bool = False) -> DataFrame:
+    """Verified near-dup pairs (id_a, id_b) between two band-row frames:
+    band join on h, one candidate per (id_a, id_b) — two docs sharing m
+    band hashes would otherwise be estimator-scored m times — then the
+    bottom-k sketch estimator. `ordered` keeps only id_a < id_b, for a
+    frame joined with itself. Only projections sit between a bucketed
+    store scan and the join, so the store side keeps its bucket layout."""
+    a = a.select("h", F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
+    b = b.select("h", F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
+    cand = a.join(b, "h")
+    if ordered:
+        cand = cand.where(F.col("id_a") < F.col("id_b"))
+    return (cand.select("id_a", "sig_a", "id_b", "sig_b")
+            .dropDuplicates(["id_a", "id_b"])
+            .where(sketch_jaccard(F.col("sig_a"), F.col("sig_b"), k)
+                   >= jaccard_threshold)
+            .select("id_a", "id_b"))
+
+
 def minhash_band_rows(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       k: int = 8) -> DataFrame:
-    """Per-document MinHash band rows (h, doc_id, sig): the bottom-k 60-bit
-    sketch (dedup.minhash_sig_longs) exploded so each of the k sketch
-    hashes is a join/bucket key, with the full sketch carried alongside for
-    candidate verification. Docs too short to shingle get an empty sketch →
-    zero band rows (they can never near-dup). This is BOTH the wave-side
-    probe frame and the store's persisted row format: k rows × (8-byte key
-    + 64-byte sketch) per document — bounded, unlike full shingle sets."""
-    from cloud_data_quality_spark.functions.dedup import (
-        ensure_min_partitions, minhash_sig_longs)
+    """Per-document MinHash band rows (h, doc_id, sig) of the bottom-k
+    60-bit sketch (dedup.minhash_sig_longs) — the store's persisted row
+    format: k rows × (8-byte key + 64-byte sketch) per document, bounded,
+    unlike full shingle sets."""
     base = (ensure_min_partitions(df.where(F.col(text_col).isNotNull()))
-            .select(F.col(id_col).alias("doc_id"),
+            .select(F.col(id_col),
                     minhash_sig_longs(F.col(text_col), n, k).alias("sig")))
-    return base.select(F.explode("sig").alias("h"), "doc_id", "sig")
+    return _band_rows(base, id_col)
 
 
 def incremental_minhash_dedup(
@@ -738,7 +659,6 @@ def incremental_minhash_dedup(
     n: int = 3,
     k: int = 8,
     jaccard_threshold: float = 0.5,
-    sig_col: str = "sig",
 ) -> DataFrame:
     """Cross-run NEAR-dup filter: drop every wave document whose bottom-k
     Jaccard estimate against ANY historical document reaches the threshold.
@@ -746,8 +666,8 @@ def incremental_minhash_dedup(
     prior waves (see SeenMinhashStore / minhash_band_rows); None = first
     run, nothing to compare.
 
-    Returns the surviving wave rows WITH their sketch column attached, so
-    the caller can explode exactly those sketches into the store.
+    Returns the surviving wave rows WITH their `sig` sketch column, so the
+    caller can explode exactly those sketches into the store.
 
     Plan shape at 10^12 docs: the wave's sketches are a narrow pass
     (shingle→md5→bottom-k per doc, no shuffle); the band join keys on
@@ -756,123 +676,166 @@ def incremental_minhash_dedup(
     candidate rows only — the corpus-sized shingle sets never leave their
     documents, never get stored, never get shuffled. Docs with empty
     sketches produce no band rows and always survive."""
-    from cloud_data_quality_spark.functions.dedup import (
-        ensure_min_partitions, minhash_sig_longs, sketch_jaccard)
     wave = ensure_min_partitions(new_df).withColumn(
-        sig_col, F.when(F.col(text_col).isNotNull(),
-                        minhash_sig_longs(F.col(text_col), n, k))
-                  .otherwise(F.array().cast("array<bigint>")))
+        "sig", F.when(F.col(text_col).isNotNull(),
+                      minhash_sig_longs(F.col(text_col), n, k))
+                .otherwise(F.array().cast("array<bigint>")))
     if store_bands is None:
         return wave
-    wave_bands = wave.select(F.col(id_col), F.explode(sig_col).alias("h"),
-                             F.col(sig_col))
-    store = store_bands.select(F.col("h"), F.col("doc_id").alias("__sid"),
-                               F.col("sig").alias("__sig_b"))
-    # distinct (wave doc, store doc) before verifying: two docs sharing m
-    # band hashes would otherwise be estimator-scored m times
-    cand = (wave_bands.join(store, "h")
-            .select(id_col, sig_col, "__sid", "__sig_b")
-            .dropDuplicates([id_col, "__sid"]))
-    matched = (cand.where(sketch_jaccard(F.col(sig_col), F.col("__sig_b"), k)
-                          >= jaccard_threshold)
-               .select(id_col).distinct())
+    matched = (_sketch_pairs(_band_rows(wave, id_col), store_bands,
+                             jaccard_threshold, k)
+               .select(F.col("id_a").alias(id_col)).distinct())
     return wave.join(matched, id_col, "left_anti")
 
 
-class SeenMinhashStore:
-    """Accumulated MinHash band memory for cross-run NEAR-dup dedup — the
-    near-dup sibling of SeenFingerprintStore. A catalog table of
-    (h, doc_id, sig, wave_id) BUCKETED on the band hash h.
+# ------------------------------------------------- cross-run dedup stores
 
-    Why this exists: a 10^12-doc crawl pipeline near-dedups every nightly
-    wave against ALL history, and recrawls are rarely byte-identical
-    (timestamps, ads, boilerplate churn) — an exact-fingerprint store
-    misses every one of them. Persisting the bottom-k sketch (64 bytes/doc
-    at k=8) instead of shingle sets keeps the store linear in documents,
-    and bucketing on the uniform md5-space band hash means the nightly
-    band join reads the store with ZERO Exchange — only the wave (orders
-    of magnitude smaller) shuffles into the store's bucket layout.
+class _CatalogStore:
+    """The cross-run dedup store: a catalog table of rows remembered from
+    every prior wave, BUCKETED on its join key, plus a `wave_id` tag.
 
-    Same replay contract as SeenFingerprintStore: rows are tagged with the
-    caller's wave_id; a replayed wave excludes its own band rows from the
-    store read, recomputes the identical survivor set, and re-appends
-    (duplicate band rows under one wave_id are harmless for candidate
-    generation — dropDuplicates collapses them)."""
+    Why bucketed: at 10^12 documents the store dwarfs every nightly wave.
+    A table bucketed on the join key is read with no Exchange on the store
+    side — only the wave shuffles, into the store's bucket layout
+    (test_corpus pins that plan shape for both stores). Appends use
+    saveAsTable(mode=append), which keeps the bucket spec; survivors are
+    new against the store by construction, so appends need no merge.
 
-    def __init__(self, spark, table: str, n_buckets: int = 64,
-                 n: int = 3, k: int = 8, jaccard_threshold: float = 0.5):
+    Replay safety (CloudDQ's MERGE-on-dq_run_id contract, per wave): every
+    appended row carries the caller's `wave_id` (NULL for untagged batch
+    runs). A caller that may re-run a wave (streaming foreachBatch replay
+    after a crash) passes its wave_id to dedup_wave; the store read then
+    EXCLUDES that wave's own rows, so the replay recomputes the identical
+    survivor set instead of deduping everything away against its own
+    half-committed append. Re-appending under the same wave_id only
+    duplicates rows, which changes no existence test; compact() removes
+    them.
+
+    A store class sets the key, the stored columns and the payload column
+    its survivors carry, and supplies how it computes survivors
+    (_survivors) and which rows it stores (_rows)."""
+
+    KEY: str                   # bucket and join column
+    COLUMNS: tuple[str, ...]   # stored columns, besides wave_id
+    PAYLOAD: str               # survivors' store payload, not returned
+
+    def __init__(self, spark, table: str, n_buckets: int = 64):
         self.spark = spark
         self.table = table
         self.n_buckets = n_buckets
-        self.n = n
-        self.k = k
-        self.jaccard_threshold = jaccard_threshold
 
     def exists(self) -> bool:
         _recover_compaction(self.spark, self.table)
         return self.spark.catalog.tableExists(self.table)
 
     def read(self, exclude_wave: str | None = None) -> DataFrame:
-        self.spark.catalog.refreshTable(self.table)  # cloned-session appends
+        # appends may come from another session over the same catalog (e.g.
+        # foreachBatch's cloned micro-batch session): this session's
+        # table-relation cache would keep serving the stale file listing,
+        # silently missing recent rows — refresh before reading
+        self.spark.catalog.refreshTable(self.table)
         df = self.spark.table(self.table)
-        if exclude_wave is not None:
+        if exclude_wave is not None and "wave_id" in df.columns:
+            # narrow filter — does not disturb the bucketed no-Exchange join
             df = df.where(~F.col("wave_id").eqNullSafe(F.lit(exclude_wave)))
-        return df.select("h", "doc_id", "sig")
+        return df.select(*self.COLUMNS)
 
-    def append(self, band_rows: DataFrame, wave_id: str | None = None) -> None:
-        (band_rows.select("h", "doc_id", "sig")
-         .withColumn("wave_id", F.lit(wave_id).cast("string"))
-         .write.bucketBy(self.n_buckets, "h").sortBy("h")
+    def append(self, rows: DataFrame, wave_id: str | None = None) -> None:
+        out = rows.select(*self.COLUMNS)
+        # schema back-compat: a store created before wave tagging has no
+        # wave_id column — appending one into it would fail at every wave.
+        # Match the existing table's shape (read() guards the other
+        # direction); such stores get no replay exclusion until recreated.
+        if not self.exists() or \
+                "wave_id" in self.spark.table(self.table).columns:
+            out = out.withColumn("wave_id", F.lit(wave_id).cast("string"))
+        (out.write
+         .bucketBy(self.n_buckets, self.KEY).sortBy(self.KEY)
          .mode("append").format("parquet").saveAsTable(self.table))
 
     def compact(self) -> int:
-        """Remove replay-duplicated band rows (full-row distinct, bucket
-        spec preserved). See _compact_catalog_table for the swap caveat."""
+        """Remove replay-duplicated rows (full-row distinct, bucket spec
+        preserved). See _compact_catalog_table for the swap caveat."""
         return _compact_catalog_table(self.spark, self.table,
-                                      "h", self.n_buckets)
+                                      self.KEY, self.n_buckets)
 
     def dedup_wave(self, new_df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", wave_id: str | None = None,
                    output_writer=None) -> DataFrame:
-        """One crawl wave: (1) within-wave near-dedup — sketch-verified
-        band pairs closed into clusters, one canonical (min id) doc kept
-        per cluster; (2) cross-run near-dedup against the store; (3) write
-        survivors (BEFORE the append — same crash-ordering argument as
-        SeenFingerprintStore.dedup_wave); (4) append survivors' band rows.
-        Survivors are checkpointed first: saveAsTable(append) would recache
-        every plan reading the store table (documented recache trap)."""
-        from cloud_data_quality_spark.functions.dedup import (
-            duplicate_clusters, sketch_jaccard)
+        """One crawl wave end-to-end: dedup against the store (if any),
+        write the survivors out, record their rows, return them.
+
+        The survivor frame is CHECKPOINTED (lineage truncated) before the
+        store append. persist()+count() is NOT enough: saveAsTable(append)
+        recaches every cached plan that reads the target table, so the
+        'pinned' survivors would silently recompute against the updated
+        store and collapse to zero rows. A checkpoint's plan no longer
+        references the table at all (dedup.eager_checkpoint).
+
+        Ordering: `output_writer(survivors)` runs BEFORE the store append.
+        If the output write fails, the store is untouched and a rerun
+        re-emits the wave; the opposite order would suppress the wave's
+        documents from every future run without ever emitting them. The
+        remaining window (output written, append crashed) re-emits
+        duplicates on rerun — the safe direction — and is closed entirely
+        when the caller also passes a stable `wave_id` (replayed waves
+        exclude their own rows, recompute identically, and overwrite)."""
         seen = self.read(exclude_wave=wave_id) if self.exists() else None
-        wave = incremental_minhash_dedup(
-            new_df, seen, text_col=text_col, id_col=id_col,
-            n=self.n, k=self.k, jaccard_threshold=self.jaccard_threshold)
-        # within-wave: band self-join on the already-computed sketches,
-        # estimator verify, connected components, keep min-id canonicals
-        bands = wave.select(F.col(id_col).alias("id"),
-                            F.explode("sig").alias("h"), F.col("sig"))
-        pairs = (bands.alias("a").join(bands.alias("b"), "h")
-                 .where(F.col("a.id") < F.col("b.id"))
-                 .select(F.col("a.id").alias("id_a"),
-                         F.col("b.id").alias("id_b"),
-                         F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
-                 .dropDuplicates(["id_a", "id_b"]))
-        pairs = (pairs.where(sketch_jaccard(F.col("sa"), F.col("sb"), self.k)
-                             >= self.jaccard_threshold)
-                 .select("id_a", "id_b"))
-        labels = duplicate_clusters(pairs)
-        losers = (labels.where(F.col("id") != F.col("cluster_id"))
-                  .select(F.col("id").alias(id_col)))
-        survivors = wave.join(losers, id_col, "left_anti")
-        survivors = eager_checkpoint(survivors)
-        result = survivors.drop("sig")
+        survivors = eager_checkpoint(
+            self._survivors(new_df, seen, text_col, id_col))
+        result = survivors.drop(self.PAYLOAD)
         if output_writer is not None:
             output_writer(result)
-        new_bands = survivors.select(F.explode("sig").alias("h"),
-                                     F.col(id_col).alias("doc_id"),
-                                     F.col("sig"))
-        self.append(new_bands, wave_id=wave_id)
+        self.append(self._rows(survivors, id_col), wave_id=wave_id)
         return result
+
+
+class SeenFingerprintStore(_CatalogStore):
+    """Cross-run EXACT dedup: the store remembers the fingerprint `fp` of
+    every surviving document, bucketed on fp. A wave keeps its min-id doc
+    per fingerprint and drops every fingerprint the store has seen
+    (incremental_dedup)."""
+
+    KEY, COLUMNS, PAYLOAD = "fp", ("fp",), "fp"
+
+    def _survivors(self, new_df, seen, text_col, id_col):
+        return incremental_dedup(new_df, seen, text_col=text_col,
+                                 id_col=id_col)
+
+    def _rows(self, survivors, id_col):
+        return survivors
+
+
+class SeenMinhashStore(_CatalogStore):
+    """Cross-run NEAR-dup dedup: the store remembers the (h, doc_id, sig)
+    band rows of every surviving document, bucketed on the band hash h.
+
+    Why: recrawls are rarely byte-identical (timestamps, ads, boilerplate
+    churn), so the exact store misses every one of them. Persisting the
+    bottom-k sketch (64 bytes/doc at k=8) instead of shingle sets keeps
+    the store linear in documents. A wave first drops docs near-duplicate
+    to the store (incremental_minhash_dedup), then keeps one canonical
+    (min id) doc per within-wave near-dup cluster. Replayed band rows are
+    harmless: candidate generation collapses them."""
+
+    KEY, COLUMNS, PAYLOAD = "h", ("h", "doc_id", "sig"), "sig"
+
+    def __init__(self, spark, table: str, n_buckets: int = 64,
+                 jaccard_threshold: float = 0.5):
+        super().__init__(spark, table, n_buckets)
+        self.jaccard_threshold = jaccard_threshold
+
+    def _survivors(self, new_df, seen, text_col, id_col):
+        wave = incremental_minhash_dedup(
+            new_df, seen, text_col=text_col, id_col=id_col,
+            jaccard_threshold=self.jaccard_threshold)
+        bands = _band_rows(wave, id_col)
+        pairs = _sketch_pairs(bands, bands, self.jaccard_threshold,
+                              ordered=True)
+        return dedup_near_duplicates(wave, pairs, id_col=id_col)
+
+    def _rows(self, survivors, id_col):
+        return _band_rows(survivors, id_col)
 
 
 # ------------------------------------------------------ C4 line-level clean
@@ -990,7 +953,6 @@ def duplicated_ngram_stats(
     ~ corpus token count, the inherent cost of any cross-doc frequency
     computation (same class as span_dedup); there is no driver-side state
     and nothing is broadcast."""
-    from cloud_data_quality_spark.functions.dedup import word_shingles
     base = (df.where(F.col(text_col).isNotNull()
                      & F.col(id_col).isNotNull())
             .select(id_col,

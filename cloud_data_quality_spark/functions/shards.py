@@ -26,9 +26,10 @@ orphan shard files that the next run overwrites.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from cloud_data_quality_spark.engine.incremental import preserve_observations
 from cloud_data_quality_spark.engine.sinks import _hadoop_path_exists
 
 #: 60-bit md5 prefix — fits a BIGINT exactly, replayable in DuckDB as
@@ -149,12 +150,18 @@ def write_shards(
     # position order. Dynamic overwrite replaces exactly the re-written
     # shard directories (a crashed run's partial shard heals here).
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    (pending.repartition(n_parts, "shard_id")
-     .sortWithinPartitions("shard_id", position_col)
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("shard_id")
-     .parquet(data_dir))
+    # the write's own row count says whether any shard is new: pending and
+    # the manifest rows below leave by the same anti join, so no rows
+    # written means no manifest rows — and the manifest aggregate runs once
+    written = Observation()
+    with preserve_observations(spark):
+        (pending.observe(written, F.count(F.lit(1)).alias("n"))
+         .repartition(n_parts, "shard_id")
+         .sortWithinPartitions("shard_id", position_col)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("shard_id")
+         .parquet(data_dir))
 
     new_rows = uncommitted(shard_manifest_frame(
         df, docs_per_shard, position_col, id_col, text_col))
@@ -165,6 +172,6 @@ def write_shards(
     manifest_update = new_rows.withColumn(
         "bytes", F.coalesce(size_map[F.col("shard_id")], F.lit(0))
         .cast("bigint"))
-    if manifest_update.limit(1).count() > 0:
+    if written.get["n"] > 0:
         manifest_update.write.mode("append").parquet(manifest_dir)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)

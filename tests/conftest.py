@@ -25,6 +25,17 @@ def fail_on_part_key(transform, k: int):
     return faulty
 
 
+
+def count_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn started) — counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="cdq_tests", master="local[4]", shuffle_partitions=4)

@@ -943,24 +943,31 @@ class TestTopFractionByScore:
 
 
 class TestCompactionCrashSafety:
-    def test_crash_between_renames_self_heals(self, spark):
+    @pytest.mark.parametrize("store_cls,rows,schema", [
+        pytest.param("SeenFingerprintStore", [("a",), ("b",)], "fp string",
+                     id="SeenFingerprintStore"),
+        pytest.param("SeenMinhashStore", [(1, 10, [1, 2]), (2, 11, [2, 3])],
+                     "h long, doc_id long, sig array<long>",
+                     id="SeenMinhashStore"),
+    ])
+    def test_crash_between_renames_self_heals(self, spark, store_cls, rows,
+                                              schema):
         """A compact() that died after rename-aside leaves only
         {table}__old; the stores' exists() renames it back, so the next
         wave dedups against full history instead of rebuilding empty."""
         import shutil
-        from cloud_data_quality_spark.functions.corpus import (
-            SeenFingerprintStore)
+        import cloud_data_quality_spark.functions.corpus as C
         table = "crash_store_t"
         for t in (table, f"{table}__old", f"{table}__compacting"):
             spark.sql(f"drop table if exists {t}")
             shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-        store = SeenFingerprintStore(spark, table, n_buckets=4)
-        store.append(spark.createDataFrame([("a",), ("b",)], "fp string"),
-                     wave_id="w")
+        store = getattr(C, store_cls)(spark, table, n_buckets=4)
+        store.append(spark.createDataFrame(rows, schema), wave_id="w")
         # simulate the crash point: store renamed aside, new table missing
         spark.sql(f"alter table {table} rename to {table}__old")
         assert store.exists()  # recovery ran
-        assert sorted(r["fp"] for r in store.read().collect()) == ["a", "b"]
+        assert sorted(tuple(r) for r in store.read().collect()) == \
+            sorted(rows)
         spark.sql(f"drop table {table}")
 
     def test_concurrent_append_aborts_compaction(self, spark, monkeypatch):

@@ -7,6 +7,7 @@ from __future__ import annotations
 from datetime import datetime, timezone
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.config.loader import ConfigRegistry
@@ -63,6 +64,50 @@ class TestReferenceIntegrity:
         small = li.where(F.col("l_partkey") < 10).count()
         assert rows["PARTKEY_FAKE_REF"]["success_count"] == small
         assert rows["PARTKEY_FAKE_REF"]["failed_count"] == li.count() - small
+
+
+class TestUnusedEntities:
+    """A run reads its bindings' own entities and the entities their SQL
+    names — never the rest of the registry, so a broken entity the run
+    does not use cannot fail it."""
+
+    @staticmethod
+    def _registry(other_table: str) -> ConfigRegistry:
+        reg = ConfigRegistry()
+        reg.entities["PART"] = Entity.from_dict("PART", {
+            "table_name": f"{SF}/part.parquet",
+            "columns": {"P_PARTKEY": {"data_type": "INT64"}}})
+        reg.entities["OTHER"] = Entity.from_dict("OTHER", {
+            "table_name": other_table,
+            "columns": {"ID": {"data_type": "INT64"}}})
+        reg.row_filters["NONE"] = RowFilter.from_dict(
+            "NONE", {"filter_sql_expr": "True"})
+        reg.rules["NN"] = Rule.from_dict("NN", {"rule_type": "NOT_NULL"})
+        for rbid, eid, col in (("RB_GOOD", "PART", "P_PARTKEY"),
+                               ("RB_OTHER", "OTHER", "ID")):
+            reg.rule_bindings[rbid] = RuleBinding.from_dict(rbid, {
+                "entity_id": eid, "column_id": col,
+                "row_filter_id": "NONE", "rule_ids": ["NN"]})
+        return reg
+
+    @pytest.mark.parametrize("other_table", [
+        pytest.param("{other_dir}/other.parquet", id="unset-variable"),
+        pytest.param(f"{SF}/no_such_table.parquet", id="missing-path"),
+    ])
+    def test_broken_unused_entity_does_not_fail_the_run(
+            self, spark, other_table):
+        eng = DqEngine(spark, self._registry(other_table))
+        assert [r["rule_binding_id"] for r in eng.dry_run(["RB_GOOD"])] \
+            == ["RB_GOOD"]
+        res = eng.run(["RB_GOOD"], execution_ts=TS, write_summary=False)
+        row = res.summary.collect()[0]
+        assert row["rows_validated"] == \
+            spark.read.parquet(f"{SF}/part.parquet").count()
+
+    def test_missing_own_entity_still_fails(self, spark):
+        eng = DqEngine(spark, self._registry(f"{SF}/no_such_table.parquet"))
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            eng.run(["RB_OTHER"], execution_ts=TS, write_summary=False)
 
 
 class TestSourcesAndPublish:

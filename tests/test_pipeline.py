@@ -5,7 +5,12 @@ from __future__ import annotations
 import dataclasses
 
 import pytest
-from conftest import INJECTED_FAULT, OVERWRITE_MODE, fail_on_part_key
+from conftest import (
+    INJECTED_FAULT,
+    OVERWRITE_MODE,
+    count_jobs,
+    fail_on_part_key,
+)
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
@@ -386,17 +391,6 @@ class TestSessionOverwriteMode:
                 == res.stages[0].rows_out == pages.count())
 
 
-def _count_jobs(spark, group, fn):
-    """(fn(), number of Spark jobs fn started) — counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestLedger:
     """Lineage is read once per run into an in-memory ledger that answers
     every resume question; appends and unit read-backs start no jobs of
@@ -412,10 +406,10 @@ class TestLedger:
             self, spark, pages, tmp_path):
         work = tmp_path / "w"
         pipe = ResumableCurationPipeline(spark, str(work), n_buckets=8)
-        first, fresh = _count_jobs(
+        first, fresh = count_jobs(
             spark, f"fresh-{work}",
             lambda: pipe.run(pages, STAGES, run_id="j"))
-        again, resumed = _count_jobs(
+        again, resumed = count_jobs(
             spark, f"resumed-{work}",
             lambda: pipe.run(pages, STAGES, run_id="j"))
         assert not any(s.resumed for s in first.stages)

@@ -8,6 +8,7 @@ import shutil
 from pathlib import Path
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.functions.selection import global_enumerate
@@ -114,3 +115,21 @@ class TestWriteShards:
     def test_bad_docs_per_shard_rejected(self, spark, corpus):
         with pytest.raises(ValueError, match="docs_per_shard"):
             shard_manifest_frame(corpus, 0)
+
+    # Jobs per call before the data write's observed row count replaced
+    # the `limit(1).count()` probe of the manifest update, which ran the
+    # whole-corpus manifest aggregate a second time (measured on this
+    # fixture: 6 fresh and 6 on a complete-set rerun; 4 and 3 after).
+    PARENT_FRESH_JOBS = 6
+    PARENT_RERUN_JOBS = 6
+
+    def test_manifest_aggregate_runs_once_per_call(
+            self, spark, corpus, tmp_path):
+        out = str(tmp_path / "jobs")
+        manifest, fresh = count_jobs(
+            spark, f"fresh-{out}", lambda: write_shards(corpus, out, PER_SHARD))
+        again, rerun = count_jobs(
+            spark, f"rerun-{out}", lambda: write_shards(corpus, out, PER_SHARD))
+        assert manifest.count() == again.count() == 8
+        assert fresh <= self.PARENT_FRESH_JOBS - 1
+        assert rerun <= self.PARENT_RERUN_JOBS - 1
