@@ -76,7 +76,14 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     (sparkContext.setCheckpointDir — survives executor loss and pins no
     executor memory, the right mode for long cluster runs), else
     localCheckpoint (fastest, single-box / short jobs — an executor loss
-    restarts the whole computation)."""
+    restarts the whole computation).
+
+    The package's one way to pin a frame that more than one job or plan
+    branch reads: nothing registers with the session's CacheManager, so a
+    long session accumulates no cache entries to release. The single
+    exception is engine/pipeline.ResumableCurationPipeline._unit_stage's
+    fused-unit barrier, a persist that run() releases after the unit's
+    write (lost blocks recompute instead of failing the unit)."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
@@ -285,6 +292,27 @@ def minhash_columns_jvm(text: Column, n: int = 3, k: int = 8) -> list[Column]:
     ]
 
 
+def _verified_jaccard(joined: DataFrame,
+                      jaccard_threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs (id_a, id_b, sh_a, sh_b) →
+    (id_a, id_b, jaccard) with jaccard = round(|A∩B| / |A∪B|, 6) ≥
+    jaccard_threshold."""
+    # cheap size-bound prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so
+    # pairs failing the ratio can't reach the threshold — skip their
+    # array_intersect entirely (identical result set, big constant win)
+    size_ok = (F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
+               / F.greatest(F.size("sh_a"), F.size("sh_b"))
+               >= jaccard_threshold)
+    joined = joined.where(size_ok)
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    jac = inter.cast("double") / F.nullif(union, F.lit(0))
+    return (
+        joined.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
 def minhash_pairs_from_columns(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -325,20 +353,7 @@ def minhash_pairs_from_columns(
         .join(sh.withColumnRenamed("id", "id_b")
                 .withColumnRenamed("hs", "sh_b"), "id_b")
     )
-    # cheap size-bound prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so
-    # pairs failing the ratio can't reach the threshold — skip their
-    # array_intersect entirely (identical result set, big constant win)
-    size_ok = (F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-               / F.greatest(F.size("sh_a"), F.size("sh_b"))
-               >= jaccard_threshold)
-    joined = joined.where(size_ok)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / F.nullif(union, F.lit(0))
-    return (
-        joined.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
+    return _verified_jaccard(joined, jaccard_threshold)
 
 
 def ngram_jaccard_pairs(
@@ -386,20 +401,7 @@ def ngram_jaccard_pairs(
                 F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # cheap size-bound prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so
-    # pairs failing the ratio can't reach the threshold — skip their
-    # array_intersect entirely (identical result set, big constant win)
-    size_ok = (F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-               / F.greatest(F.size("sh_a"), F.size("sh_b"))
-               >= jaccard_threshold)
-    joined = joined.where(size_ok)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = inter.cast("double") / F.nullif(union, F.lit(0))
-    return (
-        joined.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
+    return _verified_jaccard(joined, jaccard_threshold)
 
 
 # ---------------------------------------------------------------- simhash
@@ -684,14 +686,11 @@ def containment_pairs(
     base = (df.where(F.col(text_col).isNotNull())
             .select(F.col(id_col).alias("id"),
                     word_shingles(F.col(text_col), n).alias("sh")))
-    # persist the exploded shingles: they feed the DF-count agg AND both
+    # pin the exploded shingles: they feed the DF-count agg AND both
     # self-join sides — without the pin the tokenize/shingle subtree
     # re-evaluates up to three times (same materialize-once argument as
     # duplicate_clusters' edges)
-    shingles = base.select("id", F.explode("sh").alias("s"))
-    from pyspark.storagelevel import StorageLevel
-    if shingles.storageLevel == StorageLevel.NONE:
-        shingles = shingles.persist()
+    shingles = eager_checkpoint(base.select("id", F.explode("sh").alias("s")))
     rare = (shingles.groupBy("s")
             .agg(F.count(F.lit(1)).alias("df_count"))
             .where(F.col("df_count") <= max_shingle_df)

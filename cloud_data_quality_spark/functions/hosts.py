@@ -116,17 +116,6 @@ def drop_blocklisted(
     return out.drop("__bl_host")
 
 
-def drop_blocklisted_exact(
-    df: DataFrame, blocklist: list[str], url_col: str = "url",
-) -> DataFrame:
-    """Exact-host blocklist as a pure narrow filter (no joins at all) —
-    the fastest path when suffix semantics aren't needed and the list is a
-    driver-side Python list: the literal array ships in the plan."""
-    host = url_host(F.col(url_col))
-    arr = F.array(*[F.lit(d.lower()) for d in blocklist])
-    return df.where(~F.array_contains(arr, host))
-
-
 def cap_per_host(
     df: DataFrame,
     max_per_host: int,

@@ -3,11 +3,13 @@
 Media travels as opaque `binary` columns with typed metadata (the pages table
 carries `html:binary`). The Spark-side plumbing — schema, partition-preserving
 mapInPandas stages, Arrow batch shapes, bounded batch sizes for large blobs —
-is real and tested. Image HEADER decode (width/height/channels/format for
-PNG/GIF/JPEG) is real too: it's pure byte-slicing at documented offsets, no
-codec library needed (`parse_image_header`). Full pixel decode and video
-frame extraction still need a codec this container doesn't ship
-(Pillow/av) — those steps fall back to a clearly-flagged deterministic fake.
+is real and tested. Header decode (PNG/GIF/JPEG images, WAV audio,
+MP4 video) is real too: pure byte-slicing at documented offsets, no codec
+library needed. Every metadata stage shares one shell (`_blob_header_stage`);
+blobs no parser recognizes become format='INVALID' rows with NULL fields.
+Full pixel decode and video frame extraction still need a codec this
+container doesn't ship (Pillow/av); `frame_sample_stub` keeps the frame
+stage's plumbing shape.
 
 At scale the rules are: (1) never collect blobs; (2) bound
 spark.sql.execution.arrow.maxRecordsPerBatch so a batch of blobs fits in the
@@ -19,7 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -126,64 +128,62 @@ def _try_import_pillow():
         return None
 
 
-def image_metadata(df: DataFrame, blob_col: str = "html",
-                   deterministic_fake: bool = True) -> DataFrame:
-    """Per-blob metadata via mapInPandas. PNG/GIF/JPEG headers are decoded
-    for real (`parse_image_header` — pure byte-slicing, no codec library);
-    Pillow, when present, extends coverage to every format it knows. Blobs
-    that parse as none of these either get a deterministic fake derived
-    from the byte digest (deterministic_fake=True, the plumbing-test mode,
-    flagged format='FAKE') or a format='INVALID' row with NULL dims
-    (strict mode — the production posture: invalid media is data to
-    filter, not an exception to crash 10^12 rows on)."""
-    pillow = _try_import_pillow()
+def _blob_header_stage(df: DataFrame, blob_col: str, meta_schema: str,
+                       parse: Callable[[bytes], tuple | None],
+                       format_col: str, sha_col: str) -> DataFrame:
+    """`df` plus the `meta_schema` columns, filled per blob in one
+    mapInPandas pass. `parse(bytes)` returns the values of every
+    meta_schema field except `sha_col`, in schema order, or None for an
+    unrecognized blob — which becomes a `format_col`='INVALID' row with
+    NULL fields (invalid media is data to filter, not an exception to
+    crash 10^12 rows on). `sha_col` is the sha256 of the bytes; a NULL
+    blob yields all-NULL fields."""
     out_schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [IMAGE_META_SCHEMA]
-    )
+        + [meta_schema])
+    fields = [f.split()[0] for f in meta_schema.split(", ")]
+    parsed_fields = [k for k in fields if k != sha_col]
+    invalid = tuple("INVALID" if k == format_col else None
+                    for k in parsed_fields)
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
         for pdf in batches:
-            metas = {"width": [], "height": [], "channels": [],
-                     "format": [], "content_sha256": []}
+            metas = {k: [] for k in fields}
             for blob in pdf[blob_col]:
                 if blob is None:
                     for k in metas:
                         metas[k].append(None)
                     continue
                 b = bytes(blob)
-                digest = hashlib.sha256(b).hexdigest()
-                metas["content_sha256"].append(digest)
-                parsed = parse_image_header(b)
-                if parsed is None and pillow is not None:
-                    try:
-                        img = pillow.open(io.BytesIO(b))
-                        parsed = (img.width, img.height,
-                                  len(img.getbands()), img.format or "UNKNOWN")
-                    except Exception:
-                        parsed = None
-                if parsed is not None:
-                    w, h, ch, fmt = parsed
-                    metas["width"].append(w)
-                    metas["height"].append(h)
-                    metas["channels"].append(ch)
-                    metas["format"].append(fmt)
-                elif deterministic_fake:
-                    # fake dims derived from the digest so values are
-                    # stable for plumbing tests on non-image blobs
-                    metas["width"].append(int(digest[:4], 16) % 4096)
-                    metas["height"].append(int(digest[4:8], 16) % 4096)
-                    metas["channels"].append(3)
-                    metas["format"].append("FAKE")
-                else:
-                    metas["width"].append(None)
-                    metas["height"].append(None)
-                    metas["channels"].append(None)
-                    metas["format"].append("INVALID")
+                metas[sha_col].append(hashlib.sha256(b).hexdigest())
+                for k, v in zip(parsed_fields, parse(b) or invalid):
+                    metas[k].append(v)
             yield pdf.assign(**metas)
 
     return df.mapInPandas(stage, schema=out_schema)
+
+
+def image_metadata(df: DataFrame, blob_col: str = "html") -> DataFrame:
+    """Per-blob image metadata via mapInPandas. PNG/GIF/JPEG headers are
+    decoded for real (`parse_image_header` — pure byte-slicing, no codec
+    library); Pillow, when present, extends coverage to every format it
+    knows. Anything else is a format='INVALID' row with NULL dims."""
+    pillow = _try_import_pillow()
+
+    def parse(b: bytes) -> tuple[int, int, int, str] | None:
+        parsed = parse_image_header(b)
+        if parsed is None and pillow is not None:
+            import io
+            try:
+                img = pillow.open(io.BytesIO(b))
+                parsed = (img.width, img.height,
+                          len(img.getbands()), img.format or "UNKNOWN")
+            except Exception:
+                parsed = None
+        return parsed
+
+    return _blob_header_stage(df, blob_col, IMAGE_META_SCHEMA, parse,
+                              "format", "content_sha256")
 
 
 def media_filter(
@@ -205,8 +205,8 @@ def media_filter(
     Gates, applied only to rows whose blob is NON-NULL (text-only rows
     pass untouched — no media means nothing to filter):
 
-    * undecodable blobs (no PNG/GIF/JPEG header, strict mode — no fake)
-      drop when drop_undecodable;
+    * undecodable blobs (no PNG/GIF/JPEG header) drop when
+      drop_undecodable;
     * images with width or height outside [min_dim, max_dim] drop
       (favicon/tracking-pixel floor, decompression-bomb ceiling);
     * when `formats` is given, anything not in it drops;
@@ -223,7 +223,7 @@ def media_filter(
     duplicate blob (a site logo repeated 10^7 times) shuffles 64 bytes
     per row, never the blob."""
     cols = df.columns
-    meta = image_metadata(df, blob_col=blob_col, deterministic_fake=False)
+    meta = image_metadata(df, blob_col=blob_col)
     has_blob = F.col(blob_col).isNotNull()
     decodable_ok = ((F.col("width") >= min_dim)
                     & (F.col("width") <= max_dim)
@@ -338,61 +338,18 @@ def make_wav(sample_rate: int, channels: int, bits: int,
             + b"data" + struct.pack("<I", data_size))
 
 
-def audio_metadata(df: DataFrame, blob_col: str = "html",
-                   deterministic_fake: bool = True) -> DataFrame:
+def audio_metadata(df: DataFrame, blob_col: str = "html") -> DataFrame:
     """Per-blob audio metadata via mapInPandas — the audio twin of
     image_metadata. WAV headers are decoded for real
     (`parse_audio_header`); full sample decode (MP3/FLAC/OGG) needs a
-    codec this container doesn't ship, so non-WAV blobs get either a
-    digest-derived deterministic fake (plumbing-test mode,
-    audio_format='FAKE') or an audio_format='INVALID' row with NULL
-    fields (strict mode — invalid media is data to filter, not an
-    exception to crash 10^12 rows on)."""
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [AUDIO_META_SCHEMA]
-    )
+    codec this container doesn't ship, so non-WAV blobs become
+    audio_format='INVALID' rows with NULL fields."""
+    def parse(b: bytes) -> tuple | None:
+        parsed = parse_audio_header(b)
+        return None if parsed is None else (*parsed, "WAV")
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = {"sample_rate": [], "audio_channels": [],
-                     "bits_per_sample": [], "n_frames": [],
-                     "duration_ms": [], "audio_format": [],
-                     "audio_sha256": []}
-            for blob in pdf[blob_col]:
-                if blob is None:
-                    for k in metas:
-                        metas[k].append(None)
-                    continue
-                b = bytes(blob)
-                digest = hashlib.sha256(b).hexdigest()
-                metas["audio_sha256"].append(digest)
-                parsed = parse_audio_header(b)
-                if parsed is not None:
-                    sr, ch, bits, nf, dur = parsed
-                    metas["sample_rate"].append(sr)
-                    metas["audio_channels"].append(ch)
-                    metas["bits_per_sample"].append(bits)
-                    metas["n_frames"].append(nf)
-                    metas["duration_ms"].append(dur)
-                    metas["audio_format"].append("WAV")
-                elif deterministic_fake:
-                    sr = 8000 + int(digest[:4], 16) % 40000
-                    nf = int(digest[4:10], 16) % 100_000
-                    metas["sample_rate"].append(sr)
-                    metas["audio_channels"].append(1 + int(digest[10], 16) % 2)
-                    metas["bits_per_sample"].append(16)
-                    metas["n_frames"].append(nf)
-                    metas["duration_ms"].append(nf * 1000 // sr)
-                    metas["audio_format"].append("FAKE")
-                else:
-                    for k in ("sample_rate", "audio_channels",
-                              "bits_per_sample", "n_frames", "duration_ms"):
-                        metas[k].append(None)
-                    metas["audio_format"].append("INVALID")
-            yield pdf.assign(**metas)
-
-    return df.mapInPandas(stage, schema=out_schema)
+    return _blob_header_stage(df, blob_col, AUDIO_META_SCHEMA, parse,
+                              "audio_format", "audio_sha256")
 
 
 VIDEO_META_SCHEMA = ("v_timescale int, v_duration bigint, "
@@ -505,55 +462,16 @@ def make_mp4(timescale: int, duration: int, width: int,
     return ftyp + moov
 
 
-def video_metadata(df: DataFrame, blob_col: str = "html",
-                   deterministic_fake: bool = True) -> DataFrame:
+def video_metadata(df: DataFrame, blob_col: str = "html") -> DataFrame:
     """Per-blob video metadata via mapInPandas — completes the
     image/audio/video header-decode trio. MP4/ISO-BMFF headers are decoded
     for real (`parse_video_header`); frame/sample decode needs a codec
     (av/ffmpeg) this container doesn't ship — frame_sample_stub keeps that
-    stage's plumbing shape. Strict mode emits video_format='INVALID' with
-    NULL fields for unrecognized blobs."""
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [VIDEO_META_SCHEMA]
-    )
+    stage's plumbing shape. Unrecognized blobs become
+    video_format='INVALID' rows with NULL fields."""
+    def parse(b: bytes) -> tuple | None:
+        parsed = parse_video_header(b)
+        return None if parsed is None else (*parsed, "MP4")
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = {"v_timescale": [], "v_duration": [],
-                     "v_duration_ms": [], "v_width": [], "v_height": [],
-                     "video_format": [], "video_sha256": []}
-            for blob in pdf[blob_col]:
-                if blob is None:
-                    for k in metas:
-                        metas[k].append(None)
-                    continue
-                b = bytes(blob)
-                digest = hashlib.sha256(b).hexdigest()
-                metas["video_sha256"].append(digest)
-                parsed = parse_video_header(b)
-                if parsed is not None:
-                    ts, dur, ms, w, h = parsed
-                    metas["v_timescale"].append(ts)
-                    metas["v_duration"].append(dur)
-                    metas["v_duration_ms"].append(ms)
-                    metas["v_width"].append(w)
-                    metas["v_height"].append(h)
-                    metas["video_format"].append("MP4")
-                elif deterministic_fake:
-                    ts = 600
-                    dur = int(digest[:6], 16) % 10_000_000
-                    metas["v_timescale"].append(ts)
-                    metas["v_duration"].append(dur)
-                    metas["v_duration_ms"].append(dur * 1000 // ts)
-                    metas["v_width"].append(16 * (1 + int(digest[6], 16)))
-                    metas["v_height"].append(16 * (1 + int(digest[7], 16)))
-                    metas["video_format"].append("FAKE")
-                else:
-                    for k in ("v_timescale", "v_duration", "v_duration_ms",
-                              "v_width", "v_height"):
-                        metas[k].append(None)
-                    metas["video_format"].append("INVALID")
-            yield pdf.assign(**metas)
-
-    return df.mapInPandas(stage, schema=out_schema)
+    return _blob_header_stage(df, blob_col, VIDEO_META_SCHEMA, parse,
+                              "video_format", "video_sha256")

@@ -41,9 +41,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql.window import Window
 
+from cloud_data_quality_spark.functions.dedup import eager_checkpoint
 from cloud_data_quality_spark.functions.text import tokens
 
 UNK = "<unk>"
@@ -86,17 +86,16 @@ def trigram_backoff_logprob(
     vocab = (freq_raw.orderBy(F.col("c").desc(), F.col("w_raw"))
              .limit(vocab_size).select("w_raw", F.lit(True).alias("__in_v")))
 
-    mapped = (toks.join(F.broadcast(vocab), "w_raw", "left")
-              .select(id_col, "pos",
-                      F.when(F.col("__in_v"), F.col("w_raw"))
-                      .otherwise(F.lit(UNK)).alias("w")))
-    # persist barrier: uni/bi/tri counts AND the scoring rows all consume
-    # `mapped` — without the pin Catalyst re-inlines the scan+tokenize+vocab
-    # subtree into every consumer (measured 28 scans of the corpus in the
-    # executed plan; with the pin, ONE scan + cache reads). Spill-to-disk:
-    # the mapped stream is (id, pos, word) — narrow rows, safe at scale.
-    if mapped.storageLevel == StorageLevel.NONE:
-        mapped = mapped.persist(StorageLevel.MEMORY_AND_DISK)
+    # pin: uni/bi/tri counts AND the scoring rows all consume `mapped` —
+    # without it Catalyst re-inlines the scan+tokenize+vocab subtree into
+    # every consumer (measured 28 scans of the corpus in the executed plan;
+    # with the pin, ONE scan + checkpoint reads). The mapped stream is
+    # (id, pos, word) — narrow rows, safe at scale.
+    mapped = eager_checkpoint(
+        toks.join(F.broadcast(vocab), "w_raw", "left")
+        .select(id_col, "pos",
+                F.when(F.col("__in_v"), F.col("w_raw"))
+                .otherwise(F.lit(UNK)).alias("w")))
 
     w_doc = Window.partitionBy(id_col).orderBy("pos")
     tri = (mapped

@@ -24,10 +24,11 @@ This module implements the distributed prefix-sum instead:
 
 The sorted frame is pinned between the two passes so both read the SAME
 physical partitioning (pass 1's ids must mean the same thing in pass 2):
-reliable `checkpoint(eager=True)` when a checkpoint dir is configured
-(the cluster posture — survives executor loss, where a recomputed persist
-partition would re-sample range boundaries), spill-safe persist otherwise
-— same auto-selection as functions/dedup.duplicate_clusters.
+`dedup.eager_checkpoint` freezes it — a reliable checkpoint when a
+checkpoint dir is configured (the cluster posture: survives executor loss,
+where a recomputed partition would re-sample range boundaries), a local
+checkpoint otherwise. `global_enumerate` shares passes 1–3
+(`_partition_offsets`).
 
 Token counts are integers, the cumsum is exact int64, and ties in the
 score order are broken by the unique id — so the kept set is deterministic
@@ -42,12 +43,15 @@ No per-row driver traffic, no single-partition window, no skew hotspot
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark import StorageLevel, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from cloud_data_quality_spark.functions.dedup import eager_checkpoint
 
 
 def _ranked(df: DataFrame, score_col: str, id_col: str,
@@ -64,6 +68,37 @@ def _ranked(df: DataFrame, score_col: str, id_col: str,
                                 F.col(id_col).asc())
             .sortWithinPartitions(F.col(score_col).desc(),
                                   F.col(id_col).asc()))
+
+
+def _partition_offsets(frozen: DataFrame,
+                       weight: Callable[[pd.DataFrame], int]
+                       ) -> dict[int, int]:
+    """Exclusive prefix offsets of `weight` summed per physical partition
+    of `frozen`, keyed by partition id: ONE mapInPandas pass emitting one
+    (pid, total) row per partition, a #partitions-row collect, and a
+    driver-side prefix in partition order. `frozen` must be pinned
+    (eager_checkpoint) so a second pass over it sees the same ids."""
+    def totals(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = TaskContext.get().partitionId()
+        total = 0
+        for pdf in it:
+            total += weight(pdf)
+        yield pd.DataFrame({"pid": [pid], "total": [total]})
+
+    rows = frozen.mapInPandas(totals, schema="pid int, total bigint") \
+        .collect()
+    offsets: dict[int, int] = {}
+    acc = 0
+    for r in sorted(rows, key=lambda r: r["pid"]):
+        offsets[int(r["pid"])] = acc
+        acc += int(r["total"])
+    return offsets
+
+
+def _with_long(df: DataFrame, name: str) -> StructType:
+    """`df`'s schema plus a bigint column — a fresh StructType (add()
+    mutates in place, and df.schema is cached on the DataFrame)."""
+    return StructType(list(df.schema.fields) + [StructField(name, LongType())])
 
 
 def select_token_budget(df: DataFrame, budget_tokens: int,
@@ -90,80 +125,47 @@ def select_token_budget(df: DataFrame, budget_tokens: int,
             f"frame has {cols}")
     # Both mapInPandas passes must observe the IDENTICAL physical
     # partitioning: pass-2's per-partition offsets are keyed by pass-1's
-    # partition ids. persist() alone doesn't guarantee that — a lost cached
-    # partition recomputes through repartitionByRange, which re-SAMPLES its
-    # range boundaries, silently shifting rows between partitions. When a
-    # reliable checkpoint dir is configured (the cluster posture — same
-    # selection logic as dedup.duplicate_clusters), checkpoint(eager=True)
-    # freezes the partitioning against executor loss; single-box/test runs
-    # fall back to spill-safe persist.
-    ranked = _ranked(df.where(F.col(token_col).isNotNull()),
-                     score_col, id_col, n_partitions)
-    spark = df.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-    if reliable:
-        ranked = ranked.checkpoint(eager=True)
-    else:
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        schema_totals = "pid int, total bigint"
+    # partition ids. A recomputed partition would run repartitionByRange
+    # again, which re-SAMPLES its range boundaries and silently shifts rows
+    # between partitions — so the ranked frame is frozen first.
+    ranked = eager_checkpoint(_ranked(df.where(F.col(token_col).isNotNull()),
+                                      score_col, id_col, n_partitions))
 
-        def part_totals(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pid = TaskContext.get().partitionId()
-            total = 0
-            for pdf in it:
-                t = pdf[token_col].astype("int64")
-                # a negative token count is upstream corruption — and it
-                # would make the cumsum non-monotone, breaking both the
-                # whole-partition skip and the strict-prefix early return.
-                # Fail loudly here (free: this pass reads every row anyway).
-                if (t < 0).any():
-                    bad = pdf.loc[t < 0, id_col].iloc[0]
-                    raise ValueError(
-                        f"select_token_budget: negative {token_col!r} for "
-                        f"{id_col}={bad!r} — token counts must be >= 0")
-                total += int(t.sum())
-            yield pd.DataFrame({"pid": [pid], "total": [total]})
+    def tokens(pdf: pd.DataFrame) -> int:
+        t = pdf[token_col].astype("int64")
+        # a negative token count is upstream corruption — and it would make
+        # the cumsum non-monotone, breaking both the whole-partition skip
+        # and the strict-prefix early return. Fail loudly here (free: this
+        # pass reads every row anyway).
+        if (t < 0).any():
+            bad = pdf.loc[t < 0, id_col].iloc[0]
+            raise ValueError(
+                f"select_token_budget: negative {token_col!r} for "
+                f"{id_col}={bad!r} — token counts must be >= 0")
+        return int(t.sum())
 
-        totals = {int(r["pid"]): int(r["total"])
-                  for r in ranked.mapInPandas(part_totals,
-                                              schema=schema_totals).collect()}
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid]
+    offsets = _partition_offsets(ranked, tokens)
+    budget = int(budget_tokens)
 
-        # build a fresh StructType — StructType.add mutates in place, and
-        # df.schema is cached on the DataFrame object
-        from pyspark.sql.types import LongType, StructField, StructType
-        out_schema = StructType(list(ranked.schema.fields)
-                                + [StructField("cum_tokens", LongType())])
-        budget = int(budget_tokens)
-
-        def keep_within(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pid = TaskContext.get().partitionId()
-            cum = offsets.get(pid, 0)
-            if cum > budget:  # whole partition past the budget: emit nothing
+    def keep_within(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = TaskContext.get().partitionId()
+        cum = offsets.get(pid, 0)
+        if cum > budget:  # whole partition past the budget: emit nothing
+            return
+        for pdf in it:
+            c = pdf[token_col].astype("int64").cumsum() + cum
+            cum = int(c.iloc[-1]) if len(c) else cum
+            kept = pdf[c <= budget].copy()
+            kept["cum_tokens"] = c[c <= budget]
+            if len(kept):
+                yield kept
+            if cum > budget:
                 return
-            for pdf in it:
-                c = pdf[token_col].astype("int64").cumsum() + cum
-                cum = int(c.iloc[-1]) if len(c) else cum
-                kept = pdf[c <= budget].copy()
-                kept["cum_tokens"] = c[c <= budget]
-                if len(kept):
-                    yield kept
-                if cum > budget:
-                    return
 
-        # the selection itself is tiny relative to the sort; materialize it
-        # so the caller's downstream plan doesn't re-run both passes
-        out = ranked.mapInPandas(keep_within, schema=out_schema)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        if not reliable:
-            ranked.unpersist()
-    return out
+    # the selection itself is tiny relative to the sort; materialize it so
+    # the caller's downstream plan doesn't re-run both passes
+    return eager_checkpoint(ranked.mapInPandas(
+        keep_within, schema=_with_long(ranked, "cum_tokens")))
 
 
 def quantile_buckets(df: DataFrame, score_col: str,
@@ -191,10 +193,10 @@ def quantile_buckets(df: DataFrame, score_col: str,
     max_distinct — pass a rounded score, not a raw double. Labeling is a
     narrow CASE projection; no sort, no window, no second shuffle.
 
-    The input is persisted (spill-to-disk) for the duration: boundaries
-    and labels MUST derive from one materialization. The returned frame
-    keeps that cache alive — callers labeling a truly corpus-sized frame
-    should pre-materialize upstream and may unpersist after consuming."""
+    The non-NULL input is frozen once (eager_checkpoint): boundaries and
+    labels MUST derive from one materialization, and the returned frame
+    reads that checkpoint — nothing is left cached for the caller to
+    release."""
     if len(labels) != len(cuts) + 1:
         raise ValueError(
             f"need len(labels) == len(cuts)+1, got {len(labels)} labels "
@@ -204,14 +206,12 @@ def quantile_buckets(df: DataFrame, score_col: str,
     fracs = [n / d for n, d in cuts]
     if sorted(fracs) != fracs or len(set(fracs)) != len(fracs):
         raise ValueError(f"cuts must be strictly increasing, got {cuts}")
-    # persist: the input lineage feeds BOTH the driver-side frequency
-    # collect and the returned labeled frame — without the pin an
-    # expensive upstream (the unigram-NLL pipeline) runs twice, and a
-    # nondeterministic lineage could label rows against boundaries from a
-    # DIFFERENT materialization (same reason select_token_budget pins its
-    # ranked frame)
-    clean = df.where(F.col(score_col).isNotNull()) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # pin: the input lineage feeds BOTH the driver-side frequency collect
+    # and the returned labeled frame — without it an expensive upstream
+    # (the unigram-NLL pipeline) runs twice, and a nondeterministic lineage
+    # could label rows against boundaries from a DIFFERENT materialization
+    # (same reason select_token_budget pins its ranked frame)
+    clean = eager_checkpoint(df.where(F.col(score_col).isNotNull()))
     freq = (clean.groupBy(score_col)
             .agg(F.count(F.lit(1)).alias("__c"))
             .orderBy(score_col))
@@ -301,44 +301,18 @@ def global_enumerate(df: DataFrame, order_cols: list[str],
     in-partition sort, then the same two-pass distributed prefix count as
     select_token_budget — pass 1 collects ONE row per partition (bounded
     by partition count, never data), the driver prefix-sums offsets, pass
-    2 adds offset + local index. With a checkpoint dir configured (the
-    cluster posture) `ordered` is reliably frozen and pass 2 is safely
-    recomputable; the single-box fallback instead localCheckpoints the
-    output so a cache eviction can't recompute pass 2 against re-sampled
-    range boundaries."""
+    2 adds offset + local index. `ordered` is frozen with eager_checkpoint
+    between the passes (range boundaries are never re-sampled), and the
+    numbered output is checkpointed too, so downstream reads never re-run
+    pass 2."""
     for c in order_cols:
         if c not in df.columns:
             raise ValueError(f"order column {c!r} not in {df.columns}")
-    spark = df.sparkSession
-    nparts = n_partitions or spark.sparkContext.defaultParallelism
-    ordered = (df.repartitionByRange(nparts, *[F.col(c).asc()
-                                               for c in order_cols])
-               .sortWithinPartitions(*[F.col(c).asc() for c in order_cols]))
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-    if reliable:
-        ordered = ordered.checkpoint(eager=True)
-    else:
-        ordered = ordered.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def part_counts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        n = 0
-        for pdf in it:
-            n += len(pdf)
-        yield pd.DataFrame({"pid": [pid], "n": [n]})
-
-    counts = {int(r["pid"]): int(r["n"])
-              for r in ordered.mapInPandas(
-                  part_counts, schema="pid int, n bigint").collect()}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    from pyspark.sql.types import LongType, StructField, StructType
-    out_schema = StructType(list(ordered.schema.fields)
-                            + [StructField(position_col, LongType())])
+    nparts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    ordered = eager_checkpoint(
+        df.repartitionByRange(nparts, *[F.col(c).asc() for c in order_cols])
+        .sortWithinPartitions(*[F.col(c).asc() for c in order_cols]))
+    offsets = _partition_offsets(ordered, len)
 
     def number(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pid = TaskContext.get().partitionId()
@@ -349,8 +323,5 @@ def global_enumerate(df: DataFrame, order_cols: list[str],
             pos += len(pdf)
             yield out
 
-    out = ordered.mapInPandas(number, schema=out_schema)
-    if not reliable:
-        out = out.localCheckpoint(eager=True)
-        ordered.unpersist()
-    return out
+    return eager_checkpoint(ordered.mapInPandas(
+        number, schema=_with_long(ordered, position_col)))

@@ -812,7 +812,7 @@ def _img_blob_hex_sql(hexfn: str) -> str:
     16/20, color type 6=RGBA), GIF89a logical screen (u16-LE dims at 6/8),
     JPEG SOI + JFIF APP0 (skipped by its declared length) + SOF0 (u16-BE
     height/width, 3 components). Every 11th doc is garbage bytes — the
-    strict-mode INVALID row, not an exception."""
+    INVALID row, not an exception."""
     w = "((doc_id % 613) + 16)"
     h = "(((doc_id * 7) % 509) + 16)"
     wbe = f"lpad({hexfn}({w}), 4, '0')"
@@ -837,13 +837,12 @@ def q_image_metadata(spark, sf_dir):
     """Real image-header decode (multimodal.parse_image_header): blobs are
     synthesized JVM-side via unhex() from the shared hex fragment, then
     width/height/channels/format are parsed from the actual bytes in the
-    strict-mode mapInPandas stage (no deterministic fake, no codec
-    library). The oracle knows the dims it encoded, so any parser drift —
+    mapInPandas header stage (no codec library). The oracle knows the dims it encoded, so any parser drift —
     endianness, offset, marker walk — value-mismatches."""
     from cloud_data_quality_spark.functions.multimodal import image_metadata
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(f"unhex({_img_blob_hex_sql('hex')})").alias("blob"))
-    out = image_metadata(docs, blob_col="blob", deterministic_fake=False)
+    out = image_metadata(docs, blob_col="blob")
     # this DuckDB build hashes VARCHAR only, so byte-equality of the blob
     # is pinned via sha256 over its lowercase hex (the Python-side
     # content_sha256 over raw bytes is pytest-pinned instead)
@@ -1373,7 +1372,7 @@ def _wav_blob_hex_sql(hexfn: str) -> str:
     evaluated by BOTH engines, byte-identical to multimodal.make_wav:
     RIFF size + 'WAVE', canonical 'fmt ' (LE u16/u32 fields), 'data' with
     a declared-but-absent payload (the header-scan posture). Every 11th
-    doc is garbage bytes — the strict-mode INVALID row."""
+    doc is garbage bytes — the INVALID row."""
     c = "(1 + (doc_id % 2))"
     bits = "(8 * (1 + (doc_id % 3)))"
     ba = f"({c} * (1 + (doc_id % 3)))"
@@ -1401,13 +1400,13 @@ def q_audio_metadata(spark, sf_dir):
     """Real WAV/RIFF header decode (multimodal.parse_audio_header): blobs
     synthesized JVM-side via unhex() from the shared hex fragment, then
     sample_rate/channels/bits/n_frames/duration parsed from the actual
-    bytes in the strict-mode mapInPandas stage. The oracle knows the
+    bytes in the mapInPandas header stage. The oracle knows the
     parameters it encoded, so any parser drift — endianness, chunk-walk
     offsets, integer-division duration — value-mismatches."""
     from cloud_data_quality_spark.functions.multimodal import audio_metadata
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(f"unhex({_wav_blob_hex_sql('hex')})").alias("blob"))
-    out = audio_metadata(docs, blob_col="blob", deterministic_fake=False)
+    out = audio_metadata(docs, blob_col="blob")
     return out.select(
         "doc_id",
         F.col("sample_rate").cast("int").alias("sample_rate"),
@@ -1453,7 +1452,7 @@ def _mp4_blob_hex_sql(hexfn: str) -> str:
     """Hex of a synthesized ISO-BMFF header per doc_id — byte-identical to
     multimodal.make_mp4 (ftyp + moov(mvhd v0 + trak(tkhd v0))). All
     variable fields are BE u32s, so lpad(hex(x), 8, '0') splices them with
-    no byte swapping. Every 11th doc is garbage — strict-mode INVALID."""
+    no byte swapping. Every 11th doc is garbage — an INVALID row."""
     ts = "(600 + (doc_id % 5) * 300)"
     dur = "((doc_id % 100000) * 97 + 1)"
     w = "(160 + (doc_id % 120) * 16)"
@@ -1490,7 +1489,7 @@ def q_video_metadata(spark, sf_dir):
     from cloud_data_quality_spark.functions.multimodal import video_metadata
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(f"unhex({_mp4_blob_hex_sql('hex')})").alias("blob"))
-    out = video_metadata(docs, blob_col="blob", deterministic_fake=False)
+    out = video_metadata(docs, blob_col="blob")
     return out.select(
         "doc_id",
         F.col("v_timescale").cast("int").alias("v_timescale"),
@@ -2523,7 +2522,7 @@ def q_media_filter_docs(spark, sf_dir):
     out = media_filter(docs, blob_col="blob", id_col="doc_id",
                        min_dim=_MEDIA_MIN_DIM, max_dim=_MEDIA_MAX_DIM)
     from cloud_data_quality_spark.functions.multimodal import image_metadata
-    return (image_metadata(out, blob_col="blob", deterministic_fake=False)
+    return (image_metadata(out, blob_col="blob")
             .select("doc_id", "format", "width", "height"))
 
 

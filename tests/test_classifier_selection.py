@@ -166,13 +166,13 @@ class TestTokenBudgetSelection:
         assert got == [1]
 
     def test_reliable_checkpoint_when_dir_configured(self, spark, tmp_path):
-        """With a checkpoint dir set (the cluster posture) the ranked frame
-        is reliably checkpointed between the two mapInPandas passes — a
-        persist partition lost to executor failure would recompute through
-        repartitionByRange, re-SAMPLE its range boundaries, and silently
-        shift rows between pass-1's offsets and pass-2's ids. Same
-        auto-selection as dedup.duplicate_clusters; results must be
-        identical to the persist path."""
+        """With a checkpoint dir set (the cluster posture) eager_checkpoint
+        reliably checkpoints the ranked frame between the two mapInPandas
+        passes — a partition lost to executor failure would otherwise
+        recompute through repartitionByRange, re-SAMPLE its range
+        boundaries, and silently shift rows between pass-1's offsets and
+        pass-2's ids. Results must be identical to the local-checkpoint
+        path."""
         rows = [(i, (i * 37) % 101, (i * 13) % 50 + 1) for i in range(300)]
         df = self._frame(spark, rows)
         want = {(r["doc_id"], r["cum_tokens"])

@@ -270,8 +270,9 @@ class TestMultimodal:
         out = image_metadata(df, blob_col="html").collect()
         assert len(out) == 50
         assert all(r["content_sha256"] is not None for r in out)
-        # html blobs aren't images → deterministic fake, clearly flagged
-        assert all(r["format"] == "FAKE" for r in out)
+        # html blobs aren't images → INVALID rows with NULL dims
+        assert all(r["format"] == "INVALID" for r in out)
+        assert all(r["width"] is None for r in out)
 
     def test_parse_image_header_roundtrip(self):
         """The header parser reads real bytes at the formats' documented
@@ -313,7 +314,7 @@ class TestMultimodal:
                  (3, make_jpeg(64, 48)), (4, b"\x00not an image"), (5, None)]
         df = spark.createDataFrame(blobs, "id int, blob binary")
         out = {r["id"]: r for r in image_metadata(
-            df, blob_col="blob", deterministic_fake=False).collect()}
+            df, blob_col="blob").collect()}
         assert (out[1]["width"], out[1]["height"], out[1]["channels"],
                 out[1]["format"]) == (101, 55, 4, "PNG")
         assert (out[2]["width"], out[2]["height"],
@@ -446,11 +447,8 @@ class TestAudioMetadata:
         from cloud_data_quality_spark.functions.multimodal import (
             audio_metadata)
         df = spark.read.parquet(pages_parquet).limit(20)
-        fake = audio_metadata(df, blob_col="html").collect()
-        assert all(r["audio_format"] == "FAKE" for r in fake)
-        assert all(r["audio_sha256"] is not None for r in fake)
-        strict = audio_metadata(df, blob_col="html",
-                                deterministic_fake=False).collect()
+        strict = audio_metadata(df, blob_col="html").collect()
+        assert all(r["audio_sha256"] is not None for r in strict)
         assert all(r["audio_format"] == "INVALID" for r in strict)
         assert all(r["sample_rate"] is None for r in strict)
 
@@ -491,13 +489,8 @@ class TestVideoMetadata:
         from cloud_data_quality_spark.functions.multimodal import (
             video_metadata)
         df = spark.read.parquet(pages_parquet).limit(20)
-        fake = video_metadata(df, blob_col="html").collect()
-        assert all(r["video_format"] == "FAKE" for r in fake)
-        assert all(r["video_sha256"] is not None for r in fake)
-        assert all(r["v_duration_ms"] ==
-                   r["v_duration"] * 1000 // r["v_timescale"] for r in fake)
-        strict = video_metadata(df, blob_col="html",
-                                deterministic_fake=False).collect()
+        strict = video_metadata(df, blob_col="html").collect()
+        assert all(r["video_sha256"] is not None for r in strict)
         assert all(r["video_format"] == "INVALID" for r in strict)
         assert all(r["v_width"] is None for r in strict)
 
