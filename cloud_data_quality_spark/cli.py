@@ -575,6 +575,7 @@ def _curate(args) -> int:
 
         from cloud_data_quality_spark.functions.corpus import (
             top_fraction_by_score)
+        from cloud_data_quality_spark.functions.dedup import eager_checkpoint
         from cloud_data_quality_spark.functions.webtext_rules import (
             perplexity_batch)
 
@@ -586,7 +587,10 @@ def _curate(args) -> int:
         def _neg_ppl(s: pd.Series) -> pd.Series:
             return -perplexity_batch(s)
 
-        scored = d.withColumn("__q", _neg_ppl(F.col(args.text_col)))
+        # pinned: the threshold pass and the unit's write both read the
+        # scores, and each read would otherwise run the Python UDF again
+        scored = eager_checkpoint(
+            d.withColumn("__q", _neg_ppl(F.col(args.text_col))))
         # approx mode: threshold from one partial-agg pass, no ordering —
         # the only viable shape when the kept set itself is corpus-sized
         return top_fraction_by_score(

@@ -66,6 +66,7 @@ from cloud_data_quality_spark.engine.incremental import (
     read_lineage,
     write_bucketed,
 )
+from cloud_data_quality_spark.sources.session import local_frame
 
 GLOBAL_PART_KEY = -1
 
@@ -244,8 +245,8 @@ class ResumableCurationPipeline:
             probe = input_df
             if stage.kind == "partition" and "part_key" not in probe.columns:
                 probe = probe.withColumn("part_key", F.lit(0).cast("int"))
-            return self.spark.createDataFrame(
-                [], stage.transform(probe).schema)
+            return local_frame(self.spark, [],
+                               stage.transform(probe).schema)
 
     # ---------- fusion ----------
 

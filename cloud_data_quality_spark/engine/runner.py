@@ -59,6 +59,7 @@ from cloud_data_quality_spark.compiler.binding import (
 )
 from cloud_data_quality_spark.config.loader import ConfigRegistry
 from cloud_data_quality_spark.config.model import RuleType
+from cloud_data_quality_spark.engine.incremental import preserve_observations
 from cloud_data_quality_spark.engine.summary import (
     RuleCounts,
     build_summary_row,
@@ -215,11 +216,16 @@ class DqEngine:
     def publish_to_target(self, target_path: str, invocation_id: str) -> int:
         """S6: copy this invocation's summary rows to the user-facing target
         table (reference: dq_target_table_utils.py:41-106 filters by
-        invocation_id + partition date and WRITE_APPENDs)."""
+        invocation_id + partition date and WRITE_APPENDs). Returns the number
+        of rows appended, observed on the write itself: no second pass over
+        the summary store."""
         summary = self.read_summary(deduped=True)
-        rows = summary.where(F.col("invocation_id") == invocation_id)
-        rows.write.mode("append").parquet(target_path)
-        return rows.count()
+        obs = Observation()
+        rows = summary.where(F.col("invocation_id") == invocation_id) \
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+        with preserve_observations(self.spark):
+            rows.write.mode("append").parquet(target_path)
+            return obs.get["n"]
 
     # ---------- watermark (reference: clouddq/lib.py:274-306) ----------
 

@@ -31,6 +31,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from cloud_data_quality_spark.sources.session import local_frame
+
 SUMMARY_SCHEMA = T.StructType([
     T.StructField("execution_ts", T.TimestampType()),
     T.StructField("invocation_id", T.StringType()),
@@ -130,10 +132,10 @@ def build_summary_row(
 
 
 def summary_frame(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
-    """Summary-row dicts → a SUMMARY_SCHEMA frame. Plain tuples, NOT a pandas
-    frame: pandas coerces None in integer columns to NaN, which
-    createDataFrame rejects for LongType when the session doesn't have Arrow
-    enabled (the driver's session may not)."""
-    return spark.createDataFrame(
-        [tuple(r[f.name] for f in SUMMARY_SCHEMA.fields) for r in rows],
-        schema=SUMMARY_SCHEMA)
+    """Summary-row dicts → a one-partition SUMMARY_SCHEMA frame through
+    ``local_frame``: one JSON literal the JVM parses, so neither building
+    nor writing it starts a Python worker, and a summary write leaves one
+    file per run."""
+    return local_frame(
+        spark, [tuple(r[f.name] for f in SUMMARY_SCHEMA.fields) for r in rows],
+        SUMMARY_SCHEMA)

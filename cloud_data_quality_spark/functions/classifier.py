@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cloud_data_quality_spark.functions import text as TX
 from cloud_data_quality_spark.functions.qc_artifact import (
@@ -37,6 +38,7 @@ from cloud_data_quality_spark.functions.qc_artifact import (
     QC_WEIGHTS_MICRO,
     feature_bucket,
 )
+from cloud_data_quality_spark.sources.session import local_frame
 
 #: md5 buckets memoized per unique feature string across batches — web text
 #: token vocabularies are Zipfian, so the cache hit rate approaches 1 after
@@ -136,10 +138,19 @@ def ngram_features(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
+def weight_table(spark: SparkSession, weights) -> DataFrame:
+    """A bucket-indexed weight artifact as a (bucket, wm) DataFrame built
+    in the JVM (``local_frame``): joins against it start no Python
+    worker."""
+    return local_frame(
+        spark, [(i, int(w)) for i, w in enumerate(weights)],
+        T.StructType([T.StructField("bucket", T.LongType()),
+                      T.StructField("wm", T.LongType())]))
+
+
 def classifier_weights(spark: SparkSession) -> DataFrame:
     """The embedded artifact as a QC_BUCKETS-row DataFrame (bucket, wm)."""
-    rows = [(int(i), int(w)) for i, w in enumerate(QC_WEIGHTS_MICRO)]
-    return spark.createDataFrame(rows, "bucket bigint, wm bigint")
+    return weight_table(spark, QC_WEIGHTS_MICRO)
 
 
 def classifier_scores(df: DataFrame, text_col: str = "text",

@@ -18,6 +18,7 @@ from cloud_data_quality_spark.functions import text as TX
 from cloud_data_quality_spark.functions.classifier import (
     feature_bucket_col,
     ngram_features,
+    weight_table,
 )
 from cloud_data_quality_spark.functions.dsir_artifact import (
     DSIR_WEIGHTS_MICRO,
@@ -26,8 +27,7 @@ from cloud_data_quality_spark.functions.dsir_artifact import (
 
 def dsir_weights(spark: SparkSession) -> DataFrame:
     """The embedded artifact as a 2048-row (bucket, wm) DataFrame."""
-    rows = [(int(i), int(w)) for i, w in enumerate(DSIR_WEIGHTS_MICRO)]
-    return spark.createDataFrame(rows, "bucket bigint, wm bigint")
+    return weight_table(spark, DSIR_WEIGHTS_MICRO)
 
 
 def dsir_scores(df: DataFrame, text_col: str = "text",

@@ -34,6 +34,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from cloud_data_quality_spark.sources.session import local_frame
 
 #: scheme://[userinfo@]HOST[:port][/...] — capture group 1 is the host.
 #: RE2-compatible (no lookaround/backrefs) so the DuckDB oracle replays the
@@ -101,8 +104,9 @@ def drop_blocklisted(
                 "__bl_domain", r"\."))).alias("d")).collect()[0]
             max_suffix_depth = int(row["d"] or 0) or MAX_SUFFIX_DEPTH
     else:
-        bl = spark.createDataFrame(
-            [(d.lower(),) for d in blocklist], "__bl_domain string")
+        bl = local_frame(spark, [(d.lower(),) for d in blocklist],
+                         T.StructType([T.StructField("__bl_domain",
+                                                     T.StringType())]))
         if suffix_match and max_suffix_depth is None:
             max_suffix_depth = max(
                 (len(d.split(".")) for d in blocklist), default=0) \

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cloud_data_quality_spark.config.loader import ConfigRegistry
 from cloud_data_quality_spark.config.model import (
@@ -24,6 +25,7 @@ from cloud_data_quality_spark.engine.runner import DqEngine
 from cloud_data_quality_spark.functions import text as TX
 from cloud_data_quality_spark.plans import oracle_fragments as OF
 from cloud_data_quality_spark.plans.base import TS, Case, _t
+from cloud_data_quality_spark.sources.session import local_frame
 
 # --------------------------------------------------------------------------
 # CloudDQ rule-engine queries (compiled + executed through DqEngine)
@@ -391,8 +393,9 @@ def q_integrity_lineitem_part(spark, sf_dir):
                       "left_semi").count()
     orphans = li.join(F.broadcast(part), li.l_partkey == part.p_partkey,
                       "left_anti").count()
-    return spark.createDataFrame(
-        [(int(matched), int(orphans))], "n_matched bigint, n_orphans bigint")
+    return local_frame(spark, [(int(matched), int(orphans))], T.StructType([
+        T.StructField("n_matched", T.LongType()),
+        T.StructField("n_orphans", T.LongType())]))
 
 
 ORACLE_INTEGRITY_LINEITEM_PART = """

@@ -7,6 +7,7 @@ from __future__ import annotations
 from datetime import datetime, timezone
 
 import pytest
+from conftest import count_jobs
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
@@ -160,7 +161,8 @@ class TestSourcesAndPublish:
     def test_last_modified_and_publish(self, spark, contact_registry,
                                        contact_details, tmp_path):
         """S4 + S6: last_modified populated from source files; publish copies
-        exactly one invocation's rows to the target."""
+        exactly one invocation's rows to the target and returns their
+        count without a second pass."""
         eng = DqEngine(spark, contact_registry,
                        summary_path=str(tmp_path / "summary"))
         r1 = eng.run(["T1_VALUE_NOT_NULL"], execution_ts=TS)
@@ -169,8 +171,13 @@ class TestSourcesAndPublish:
         row = r1.summary.collect()[0]
         assert row["last_modified"] is not None
         target = str(tmp_path / "target")
-        n = eng.publish_to_target(target, r2.invocation_id)
+        n, jobs = count_jobs(
+            spark, f"publish-{tmp_path}",
+            lambda: eng.publish_to_target(target, r2.invocation_id))
         assert n == 1
+        # the count comes from an Observation on the append: a count()
+        # after it re-read the summary store in 3 more jobs (6 in all)
+        assert jobs <= 3
         pub = spark.read.parquet(target)
         assert pub.count() == 1
         assert pub.collect()[0]["invocation_id"] == r2.invocation_id
