@@ -203,8 +203,11 @@ _STORE_OPS = ("incremental-dedup", "incremental-minhash-dedup",
 
 
 def _corpus(args) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from cloud_data_quality_spark.engine.incremental import (
+        preserve_observations)
     from cloud_data_quality_spark.functions import corpus as C
     from cloud_data_quality_spark.sources.session import get_spark
 
@@ -225,7 +228,26 @@ def _corpus(args) -> int:
         return 0
     if not args.input or not args.output:
         raise SystemExit(f"{args.op} needs --input and --output")
-    df = spark.read.parquet(args.input)
+    obs_in, obs_out, n = Observation(), Observation(), F.count("*").alias("n")
+    df = spark.read.parquet(args.input).observe(obs_in, n)
+
+    def write(out):
+        out.observe(obs_out, n).write.mode("overwrite").parquet(args.output)
+
+    # no counting pass: rows_in comes from the first job that reads the
+    # input (an eager checkpoint inside the op, or the write)
+    with preserve_observations(spark):
+        _corpus_op(args, spark, df, store, write)
+    print(json.dumps({"op": args.op, "rows_in": obs_in.get["n"],
+                      "rows_out": obs_out.get["n"], "output": args.output}))
+    return 0
+
+
+def _corpus_op(args, spark, df, store, write) -> None:
+    """Run corpus op ``args.op`` over ``df``; its output goes to ``write``."""
+    from pyspark.sql import functions as F
+
+    from cloud_data_quality_spark.functions import corpus as C
     if args.op == "span-dedup":
         if (args.delimiter is None) == (args.chunk_words is None):
             raise SystemExit("span-dedup needs exactly one of "
@@ -415,20 +437,10 @@ def _corpus(args) -> int:
         # a failed output write leaves the store untouched (rerun re-emits)
         # instead of permanently suppressing the wave's documents. A stable
         # --wave-id additionally makes full reruns replay-idempotent.
-        out = store.dedup_wave(
-            df, text_col=args.text_col, id_col=args.id_col,
-            wave_id=args.wave_id,
-            output_writer=lambda s: s.write.mode("overwrite")
-                                     .parquet(args.output))
-        n = spark.read.parquet(args.output).count()
-        print(json.dumps({"op": args.op, "rows_in": df.count(),
-                          "rows_out": n, "output": args.output}))
-        return 0
-    out.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(json.dumps({"op": args.op, "rows_in": df.count(), "rows_out": n,
-                      "output": args.output}))
-    return 0
+        store.dedup_wave(df, text_col=args.text_col, id_col=args.id_col,
+                         wave_id=args.wave_id, output_writer=write)
+        return
+    write(out)
 
 
 def _curate(args) -> int:

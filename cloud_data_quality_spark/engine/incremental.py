@@ -27,6 +27,9 @@ Mechanism (works on plain parquet; maps 1:1 onto Iceberg):
   time (``~part_key.isin(done)``) — with a partition-aligned key the scan
   prunes them physically too.
 
+``part_key`` is this writer's: an input column of that name is overwritten
+with the bucket. Curate's global units (engine/pipeline.py) drop it.
+
 Commit granularity vs scan count is an explicit dial:
 ``partitions_per_commit=None`` (default) commits everything in one wave —
 one scan, lineage lands only when the whole wave finishes.
@@ -40,12 +43,11 @@ test_quality_filter.TestResume::test_partition_aligned_waves_prune_the_scan).
 
 Atomicity note: parquet gives write-then-commit ordering (output before
 lineage append), so a crash mid-wave re-processes that wave's partitions —
-idempotent because the unit write (``write_bucketed``) sets dynamic
-partition overwrite as a WRITER option, so it replaces exactly the
-directories it rewrites whatever the caller's session mode, and the
-session's ``partitionOverwriteMode`` is never touched. An aborted wave
-write commits no files and appends no lineage. On Iceberg both writes
-share one transaction.
+idempotent because the wave write sets dynamic partition overwrite as a
+WRITER option, so it replaces exactly the directories it rewrites whatever
+the caller's session mode, and the session's ``partitionOverwriteMode`` is
+never touched. An aborted wave write commits no files and appends no
+lineage. On Iceberg both writes share one transaction.
 """
 
 from __future__ import annotations
@@ -142,24 +144,6 @@ def read_lineage(spark: SparkSession, path: str, where: Column) -> list[Row]:
             .where(where).collect())
 
 
-def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
-    """Overwrite ``path`` with ``df``. A frame with a ``part_key`` column
-    is written ``partitionBy("part_key")`` after clustering its rows by
-    bucket: without the shuffle every write task opens a file in every
-    partition dir (tasks × buckets small files — 512 at 32×16; measured
-    ~1.6× slower than shuffling the kept rows once and writing one file per
-    bucket, and the small files then tax every downstream read). The
-    partitioned write overwrites dynamically — only the buckets it writes
-    are replaced — as an option of this writer, not of the session. A
-    frame without ``part_key`` is a plain overwrite."""
-    if "part_key" not in df.columns:
-        df.write.mode("overwrite").parquet(path)
-        return
-    (df.repartition(n_buckets, "part_key").write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("part_key").parquet(path))
-
-
 @dataclass
 class ResumableResult:
     run_id: str
@@ -213,10 +197,12 @@ class ResumableQualityRun:
         exactly once in the write job — Observation metrics accumulate per
         evaluation, so a transform that consumes its input through MULTIPLE
         subtrees of one plan (e.g. a self-join dedup reading `keyed` twice
-        without a persist/checkpoint barrier) double-counts n_in. Filters,
-        projections, Arrow-UDF stages, aggregations, and joins AGAINST OTHER
-        tables are all fine; self-referencing plans must persist the input
-        first (the cached scan evaluates once).
+        without a persist/checkpoint barrier) double-counts n_in, as does
+        `repartitionByRange` on it (its bounds sampling re-runs the subtree
+        in the same plan). Filters, projections, Arrow-UDF stages,
+        aggregations, and joins AGAINST OTHER tables are all fine;
+        self-referencing plans must persist the input first (the cached
+        scan evaluates once).
         """
         keyed = self._keyed(df).where(F.col("part_key").isin(list(wave)))
         obs_in, obs_out = Observation(), Observation()
@@ -237,8 +223,15 @@ class ResumableQualityRun:
         wave: Sequence[int],
     ) -> tuple[int, int, StructType]:
         out, obs_in, obs_out = self.wave_plan(df, transform, wave)
+        # rows are clustered by bucket first: else every write task opens a
+        # file in every bucket dir (tasks × buckets small files, 512 at
+        # 32×16: measured ~1.6× slower, and they tax every later read).
+        # Dynamic overwrite, a writer option (never the session's), replaces
+        # only the wave's buckets.
         with preserve_observations(self.spark):
-            write_bucketed(out, self.output_path, self.n_buckets)
+            (out.repartition(self.n_buckets, "part_key").write
+             .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+             .partitionBy("part_key").parquet(self.output_path))
             n_in, n_kept = obs_in.get, obs_out.get
         ts = time.time()
         append_lineage(self.spark, self.lineage_path, [

@@ -20,20 +20,21 @@ Composition contract:
   ``{work_dir}/{idx:02d}_{name}/out`` — the explicit unit boundary is what
   makes resume possible AND caps lineage recomputation: a 5-stage pipeline
   over 100 TB never re-runs a finished unit's compute, it re-reads its
-  (column-pruned, partition-pruned) output. Adjacent narrow zero-shuffle
-  stages do NOT deserve a boundary each — a parquet write+read per trivial
-  Column rewrite is pure I/O tax at any scale — so partition-stage chains
-  always merge (keeping wave resume), and
+  (column-pruned) output. Adjacent narrow zero-shuffle stages do NOT
+  deserve a boundary each — a parquet write+read per trivial Column
+  rewrite is pure I/O tax at any scale — so partition-stage chains always
+  merge (keeping wave resume), and
   ``PipelineStage(fuse_with_previous=True)`` lets the author fold a stage
   whose recompute is provably cheaper than its materialization into the
   preceding unit. The unit plan, and with it every resume key, depends on
   the stage list alone;
-* stage i>0 reads stage i-1's committed output. Partition stages keep the
-  ``part_key`` column through their write (``partitionBy("part_key")``), so
-  the NEXT partition stage uses ``partition_expr="part_key"`` — aligned
-  with the physical directory layout, meaning a resumed wave's ``.isin``
-  filter lands in the scan's PartitionFilters and prunes files, not rows
-  (the same plan-pinned property as test_quality_filter.TestResume);
+* stage i>0 reads stage i-1's committed output. ``part_key`` belongs to
+  the pipeline: a partition unit overwrites any input column of that name
+  with the bucket ``pmod(xxhash64(id_col), n_buckets)`` and writes
+  ``partitionBy("part_key")``; a global unit drops it before its transform
+  runs and, committing all-or-nothing, writes one plain overwrite. So a
+  partition unit after a global unit gets the first unit's buckets, but
+  its waves (``partitions_per_commit``) cannot prune the global output;
 * a stage's completion is recorded in the shared pipeline lineage
   (``{work_dir}/lineage``) as one row per partition (partition stages) or
   one row with ``part_key = -1`` (global stages). Lineage is read once per
@@ -41,8 +42,9 @@ Composition contract:
   ledger is the only resume source — never output-directory existence,
   which a half-written stage also has;
 * the next unit reads a unit's output with the schema the unit just wrote
-  (data columns, then ``part_key``, as partition discovery orders it), so
-  only a fully resumed unit pays a schema-inference job.
+  (for a partition unit: data columns, then ``part_key``, as partition
+  discovery orders it), so only a fully resumed unit pays a
+  schema-inference job.
 
 Reference basis: CloudDQ's resumability is a high-watermark + MERGE
 idempotency on dq_run_id (clouddq/lib.py:274-306, dq_summary.sql:15-26);
@@ -64,7 +66,6 @@ from cloud_data_quality_spark.engine.incremental import (
     append_lineage,
     preserve_observations,
     read_lineage,
-    write_bucketed,
 )
 from cloud_data_quality_spark.sources.session import local_frame
 
@@ -81,7 +82,8 @@ class PipelineStage:
     kind='partition': transform is applied per bucket wave (it must be
     per-partition closed — no cross-partition joins on the corpus itself;
     joins against OTHER tables, Arrow stages, filters are all fine).
-    kind='global': transform sees the full stage input in one plan.
+    kind='global': transform sees the full stage input in one plan, less
+    the pipeline's ``part_key`` bucket column.
 
     fuse_with_previous=True folds this stage into the PREVIOUS execution
     unit whatever the two stages' kinds — the author's statement
@@ -168,17 +170,12 @@ class ResumableCurationPipeline:
         ledger: Ledger,
     ) -> tuple[StageResult, StructType | None]:
         base = self._stage_paths(run_id, idx, stage.name)
-        # the first stage buckets by id hash; any stage whose input already
-        # carries part_key (a previous stage's partitioned output) reuses it
-        # → wave filters prune the upstream output PHYSICALLY
-        expr = "part_key" if "part_key" in df.columns else \
-            f"pmod(xxhash64({self.id_col}), {self.n_buckets})"
         runner = ResumableQualityRun(
             self.spark,
             output_path=f"{base}/out",
             lineage_path=self.lineage_path,
             n_buckets=self.n_buckets,
-            partition_expr=expr,
+            partition_expr=f"pmod(xxhash64({self.id_col}), {self.n_buckets})",
             partitions_per_commit=self.partitions_per_commit,
         )
         stage_run_id = self._stage_run_id(run_id, idx, stage.name)
@@ -198,7 +195,7 @@ class ResumableCurationPipeline:
 
     def _run_global_stage(
         self, df: DataFrame, stage: PipelineStage, idx: int, run_id: str,
-        ledger: Ledger,
+        ledger: Ledger, n_in: int | None,
     ) -> tuple[StageResult, StructType | None]:
         base = self._stage_paths(run_id, idx, stage.name)
         out_path = f"{base}/out"
@@ -211,17 +208,22 @@ class ResumableCurationPipeline:
                                rows_out=prior[0]["n_kept"],
                                resumed=True), None
         obs_in, obs_out = Observation(), Observation()
-        keyed = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
+        df = df.drop("part_key")
+        # a later unit reads exactly the previous unit's rows_out; only a
+        # first unit observes its input (when that count is true: wave_plan)
+        if n_in is None:
+            df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
         # the transform CALL must sit inside preserve_observations too: a
         # transform with eager internal jobs (selection's prefix-sum pass,
         # a checkpoint) executes the observed input subtree right there —
         # on an empty corpus AQE would drop the CollectMetrics during
         # those jobs, long before the guarded write
         with preserve_observations(self.spark):
-            out = stage.transform(keyed).observe(
+            out = stage.transform(df).observe(
                 obs_out, F.count(F.lit(1)).alias("n"))
-            write_bucketed(out, out_path, self.n_buckets)
-            n_in, n_out = obs_in.get["n"], obs_out.get["n"]
+            out.write.mode("overwrite").parquet(out_path)
+        n_in = obs_in.get["n"] if n_in is None else n_in
+        n_out = obs_out.get["n"]
         self._mark_stage(stage_run_id, n_in, n_out)
         return StageResult(stage.name, "global", out_path, n_in, n_out,
                            resumed=False), out.schema
@@ -234,17 +236,18 @@ class ResumableCurationPipeline:
         it needs no inference job (Spark still moves the part_key
         partition column last, as inference does), also when the unit
         dropped every row and left no parquet files. A fully resumed unit
-        infers the schema; if its output is empty, inference fails and the
-        empty frame is rebuilt from the transform's ANALYZED schema."""
+        infers the schema, which a global unit's plain write keeps even for
+        zero rows; an empty partitioned write keeps none, so the frame is
+        rebuilt from the partition transform's ANALYZED schema."""
         if written is not None:
             return self.spark.read.schema(written).parquet(output_path)
+        if stage.kind == "global":
+            return self.spark.read.parquet(output_path)
         from pyspark.errors import AnalysisException
         try:
             return self.spark.read.parquet(output_path)
         except AnalysisException:
-            probe = input_df
-            if stage.kind == "partition" and "part_key" not in probe.columns:
-                probe = probe.withColumn("part_key", F.lit(0).cast("int"))
+            probe = input_df.withColumn("part_key", F.lit(0).cast("int"))
             return local_frame(self.spark, [],
                                stage.transform(probe).schema)
 
@@ -340,7 +343,8 @@ class ResumableCurationPipeline:
                         current, stage, idx, run_id, ledger)
                 elif stage.kind == "global":
                     res, written = self._run_global_stage(
-                        current, stage, idx, run_id, ledger)
+                        current, stage, idx, run_id, ledger,
+                        result.stages[-1].rows_out if result.stages else None)
                 else:
                     raise ValueError(f"unknown stage kind {stage.kind!r}")
             finally:

@@ -69,6 +69,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cloud_data_quality_spark.functions.dedup import (
+    _canonical_min_id,
     dedup_near_duplicates,
     eager_checkpoint,
     ensure_min_partitions,
@@ -76,7 +77,7 @@ from cloud_data_quality_spark.functions.dedup import (
     sketch_jaccard,
     word_shingles,
 )
-from cloud_data_quality_spark.functions.text import fingerprint, tokens
+from cloud_data_quality_spark.functions.text import tokens
 
 _HASH_BITS = 60  # top 15 hex chars of md5 → fits a signed 64-bit integer
 
@@ -593,16 +594,11 @@ def incremental_dedup(
     survivor fps are new by construction, so the store needs no dedupe on
     append.
 
-    Same shape as dedup_exact (groupBy-min + semi join — O(1) aggregation
+    The body of dedup_exact (groupBy-min + semi join — O(1) aggregation
     state per key, no window) plus one anti join on the uniform md5 key.
     NULL-text docs are never duplicates: they get a per-id sentinel key and
     always survive."""
-    with_fp = new_df.withColumn(
-        "fp",
-        F.coalesce(fingerprint(F.col(text_col)),
-                   F.concat(F.lit("__null__"), F.col(id_col).cast("string"))))
-    canon = with_fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    wave = with_fp.join(canon, ["fp", id_col], "left_semi")
+    wave = _canonical_min_id(new_df, text_col, id_col, "fp")
     if seen_fps is not None:
         wave = wave.join(seen_fps.select("fp"), "fp", "left_anti")
     return wave

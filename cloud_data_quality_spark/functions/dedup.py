@@ -129,19 +129,25 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative per fingerprint group. Implemented as
-    groupBy-min + semi join (two narrow shuffles on uniform keys) rather than
-    a global window (which would sort every partition)."""
+def _canonical_min_id(df: DataFrame, text_col: str, id_col: str,
+                      fp_col: str) -> DataFrame:
+    """The min-id row per fingerprint group, fingerprint in ``fp_col``:
+    groupBy-min + semi join (two narrow shuffles on uniform keys), not a
+    global window (which would sort every partition)."""
     # NULL text is never a duplicate: give it a per-row sentinel key so the
     # equi semi-join (NULL != NULL) can't drop it
     with_fp = df.withColumn(
-        "__fp",
+        fp_col,
         F.coalesce(fingerprint(F.col(text_col)),
                    F.concat(F.lit("__null__"), F.col(id_col).cast("string"))))
-    keep = with_fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return with_fp.join(keep, ["__fp", id_col], "left_semi").drop("__fp")
+    keep = with_fp.groupBy(fp_col).agg(F.min(id_col).alias(id_col))
+    return with_fp.join(keep, [fp_col, id_col], "left_semi")
+
+
+def dedup_exact(df: DataFrame, text_col: str = "text",
+                id_col: str = "doc_id") -> DataFrame:
+    """Keep the min-id representative per fingerprint group."""
+    return _canonical_min_id(df, text_col, id_col, "__fp").drop("__fp")
 
 
 # ---------------------------------------------------------------- shingles

@@ -25,6 +25,18 @@ def fail_on_part_key(transform, k: int):
     return faulty
 
 
+def fail_on_bucket(transform, k: int, n_buckets: int, id_col: str = "url"):
+    """``fail_on_part_key`` for a global stage, whose frame has no
+    ``part_key``: computing any output row whose id hashes to bucket ``k``
+    (``pmod(xxhash64(id), n_buckets)``, the bucket a partition unit
+    assigns) raises. The fault rewrites the id column in place."""
+    def faulty(df):
+        bucket = F.pmod(F.xxhash64(id_col), F.lit(n_buckets))
+        fault = F.raise_error(F.lit(f"{INJECTED_FAULT} at bucket {k}"))
+        return transform(df).withColumn(
+            id_col, F.when(bucket == k, fault).otherwise(F.col(id_col)))
+    return faulty
+
 
 def count_jobs(spark, group, fn):
     """(fn(), number of Spark jobs fn started) — counted by job group."""

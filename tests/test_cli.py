@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from conftest import count_jobs
 
 from cloud_data_quality_spark.cli import main
 
@@ -257,6 +258,43 @@ class TestCorpus:
                     spark.read.parquet(out2).collect()] == [11]
         finally:
             spark.sql("drop table if exists cli_mh_store")
+
+    # Spark jobs of one CLI call on the 5-row input below. Counting rows_in
+    # with df.count() and rows_out by re-reading the output cost five more
+    # (sample 7 → 2, near-dedup 33 → 28, incremental-dedup 11 → 6).
+    CORPUS_JOBS = {"sample": 2, "near-dedup": 28, "incremental-dedup": 6}
+
+    @pytest.mark.parametrize("op, extra", [
+        ("sample", ["--fractions", "en=1.0"]),
+        ("near-dedup", ["--jaccard-threshold", "0.5"]),
+        ("incremental-dedup", ["--store", "cli_count_store"]),
+    ])
+    def test_counts_come_from_the_ops_own_jobs(self, spark, tmp_path,
+                                               capsys, op, extra):
+        """rows_in and rows_out are the true row counts of the input and
+        the output, taken from Observations on the op's own jobs: no job
+        counts or re-reads anything."""
+        base = "one two three four five six seven eight nine ten"
+        inp = str(tmp_path / "docs.parquet")
+        spark.createDataFrame(
+            [(1, base, "en"), (2, base + " eleven", "en"),
+             (3, "unrelated words only here", "de"), (4, base, "en"),
+             (5, None, "en")],
+            "doc_id bigint, text string, lang string").write.parquet(inp)
+        out = str(tmp_path / "out")
+        spark.sql("drop table if exists cli_count_store")
+        try:
+            rc, jobs = count_jobs(
+                spark, f"corpus-{tmp_path}",
+                lambda: main(["corpus", "--op", op, "--input", inp,
+                              "--output", out] + extra))
+        finally:
+            spark.sql("drop table if exists cli_count_store")
+        assert rc == 0
+        stats = json.loads(capsys.readouterr().out.strip())
+        assert stats["rows_in"] == 5
+        assert stats["rows_out"] == spark.read.parquet(out).count() < 5
+        assert jobs <= self.CORPUS_JOBS[op]
 
     def test_bad_mode_combos_exit(self, spark, tmp_path):
         inp = str(tmp_path / "d.parquet")
@@ -1057,6 +1095,11 @@ class TestRound5CorpusOps:
         files = glob.glob(f"{work}/sh/shards_data/data/shard_id=*/"
                           "*.parquet")
         assert len(files) == 4
+        # the unit reads exactly what the previous unit wrote, once
+        assert out["stages"][-1]["rows_in"] == out["stages"][-2]["rows_out"]
+        # the trainer's shards carry no pipeline bookkeeping
+        assert "part_key" not in \
+            spark.read.parquet(f"{work}/sh/shards_data/data").columns
         # rerun fully resumes (pipeline stage committed)
         rc = main(argv)
         out2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -1099,8 +1142,9 @@ class TestRound5CorpusOps:
     def test_curate_units_write_only_the_input_columns(self, spark,
                                                        tmp_path, capsys):
         """No unit hands hidden state to a later one: with --near-dedup on,
-        every unit writes the input's columns plus part_key, nothing more
-        (near_dedup computes its own MinHash signatures)."""
+        global units write exactly the input's columns and only the
+        partition unit adds part_key (near_dedup computes its own MinHash
+        signatures)."""
         import json as _json
         base = ("plenty of common english stopwords flow through this "
                 "sentence and it reads just fine for the filter")
@@ -1118,8 +1162,39 @@ class TestRound5CorpusOps:
         assert [s["name"] for s in out["stages"]] == \
             ["quality", "dedup", "near_dedup"]
         for s in out["stages"]:
+            extra = ["part_key"] if s["kind"] == "partition" else []
             assert sorted(spark.read.parquet(s["output"]).columns) == \
-                ["part_key", "text", "url"], s["name"]
+                sorted(["text", "url"] + extra), s["name"]
+
+    def test_curate_input_part_key_column_loses_no_rows(self, spark,
+                                                        tmp_path, capsys):
+        """An input column named part_key — here a 4-bucket one, as a
+        partition unit writes it — is the pipeline's to overwrite: a
+        2-bucket run still reads every row, and its output equals curating
+        the same input without that column."""
+        import json as _json
+        good = ("this is a perfectly reasonable english sentence with "
+                "plenty of common stopwords in the mix and good length.")
+        df = spark.createDataFrame(
+            [(f"u{i:03d}", f"{good} tail {i}", i % 4) for i in range(200)],
+            "url string, text string, part_key int")
+        keyed, plain = str(tmp_path / "keyed"), str(tmp_path / "plain")
+        df.write.parquet(keyed)
+        df.drop("part_key").write.parquet(plain)
+
+        def curate(inp, run_id):
+            rc = main(["curate", "--input", inp,
+                       "--work-dir", str(tmp_path / "w"), "--run-id", run_id,
+                       "--buckets", "2", "--id-col", "url"])
+            assert rc == 0
+            out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+            final = spark.read.parquet(out["stages"][-1]["output"])
+            return ([(s["rows_in"], s["rows_out"]) for s in out["stages"]],
+                    sorted((r["url"], r["text"]) for r in final.collect()))
+
+        rows, got = curate(keyed, "keyed")
+        assert rows[0][0] == 200
+        assert (rows, got) == curate(plain, "plain")
 
     def test_near_dedup_op(self, spark, tmp_path, capsys):
         inp = str(tmp_path / "docs.parquet")

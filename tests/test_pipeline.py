@@ -9,6 +9,7 @@ from conftest import (
     INJECTED_FAULT,
     OVERWRITE_MODE,
     count_jobs,
+    fail_on_bucket,
     fail_on_part_key,
 )
 from pyspark.errors import SparkRuntimeException
@@ -57,9 +58,15 @@ def _expected(pages):
     return _exact_dedup(_cap_hosts(_quality(pages)))
 
 
-def _faulty(stages, name, k):
-    """``stages`` with stage ``name``'s transform failing on part_key k."""
-    return [dataclasses.replace(s, transform=fail_on_part_key(s.transform, k))
+def _faulty(stages, name, k, n_buckets=8):
+    """``stages`` with stage ``name``'s transform failing on the rows of
+    bucket k: on part_key k in a partition stage, on the same rows by
+    their id hash in a global stage, which sees no part_key."""
+    def fail(s):
+        if s.kind == "global":
+            return fail_on_bucket(s.transform, k, n_buckets)
+        return fail_on_part_key(s.transform, k)
+    return [dataclasses.replace(s, transform=fail(s))
             if s.name == name else s for s in stages]
 
 
@@ -138,12 +145,11 @@ class TestComposedPipeline:
         with pytest.raises(ValueError, match="duplicate"):
             pipe.run(pages, [STAGES[0], STAGES[0]], run_id="x")
 
-    def test_downstream_partition_stage_reuses_part_key(
+    def test_downstream_partition_stage_rebuckets_by_id(
             self, spark, pages, tmp_path):
-        """A partition stage downstream of another partition stage (here
-        across a global unit that keeps the column) keys on the inherited
-        part_key column, so its wave filter physically prunes the upstream
-        partitioned output."""
+        """A partition stage after a global unit, whose output carries no
+        part_key, buckets by the same id hash as the first unit, so every
+        row lands in the bucket it had there."""
         stages = [
             PipelineStage("quality", _quality, kind="partition"),
             PipelineStage("dedup", _exact_dedup, kind="global"),
@@ -156,6 +162,8 @@ class TestComposedPipeline:
         res = pipe.run(pages, stages, run_id="r7")
         assert [s.name for s in res.stages] == ["quality", "dedup", "mark"]
         assert res.stages[2].rows_in == res.stages[1].rows_out
+        assert "part_key" not in \
+            spark.read.parquet(res.stages[1].output_path).columns
         out = spark.read.parquet(res.stages[2].output_path)
         assert "n_words" in out.columns and "part_key" in out.columns
         # bucket assignment consistent across the stages: every url in
@@ -172,6 +180,61 @@ class TestComposedPipeline:
 
 def _mark_words(df):
     return df.withColumn("n_words", F.size(F.split("text", " ")))
+
+
+class TestPartKeyStaysInPartitionUnits:
+    """part_key belongs to the pipeline: partition units bucket by the id
+    hash and write it; global units neither see nor write it."""
+
+    def test_no_global_transform_sees_part_key(self, spark, pages,
+                                               tmp_path):
+        seen = []
+
+        def record(name, transform):
+            def run(d):
+                seen.append((name, "part_key" in d.columns))
+                return transform(d)
+            return run
+
+        stages = [
+            PipelineStage("quality", _quality, kind="partition"),
+            PipelineStage("host_cap", record("host_cap", _cap_hosts),
+                          kind="global"),
+            PipelineStage("mark", record("mark", _mark_words),
+                          kind="partition"),
+            PipelineStage("dedup", record("dedup", _exact_dedup),
+                          kind="global", fuse_with_previous=True),
+        ]
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=4)
+        res = pipe.run(pages, stages, run_id="g")
+        assert [s.name for s in res.stages] == \
+            ["quality", "host_cap", "mark+dedup"]
+        assert seen == [("host_cap", False), ("mark", False),
+                        ("dedup", False)]
+        for s in res.stages:
+            cols = spark.read.parquet(s.output_path).columns
+            assert ("part_key" in cols) == (s.kind == "partition"), s.name
+
+    def test_resumed_empty_global_unit_does_not_rerun_its_transform(
+            self, spark, pages, tmp_path):
+        calls = []
+
+        def dedup(d):
+            calls.append(d)
+            return _exact_dedup(d)
+
+        stages = [PipelineStage("drop_all",
+                                lambda d: d.where(F.length("text") < 0),
+                                kind="partition"),
+                  PipelineStage("dedup", dedup, kind="global")]
+        pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
+                                         n_buckets=4)
+        first = pipe.run(pages, stages, run_id="e")
+        again = pipe.run(pages, stages, run_id="e")
+        assert all(s.resumed for s in again.stages)
+        assert again.rows_out == first.rows_out == 0
+        assert len(calls) == 1
 
 
 def _kinds(spec):

@@ -4,7 +4,12 @@ invariants, determinism across parallelism, resume."""
 from __future__ import annotations
 
 import pytest
-from conftest import INJECTED_FAULT, OVERWRITE_MODE, fail_on_part_key
+from conftest import (
+    INJECTED_FAULT,
+    OVERWRITE_MODE,
+    fail_on_bucket,
+    fail_on_part_key,
+)
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
@@ -401,7 +406,7 @@ class TestMediaFilter:
         pipe = ResumableCurationPipeline(spark, str(tmp_path / "w"),
                                          n_buckets=2, id_col="url")
         faulty = [stages[0], PipelineStage(
-            "media_filter", fail_on_part_key(stages[1].transform, 0),
+            "media_filter", fail_on_bucket(stages[1].transform, 0, 2),
             kind="global")]
         with _pytest.raises(SparkRuntimeException, match=INJECTED_FAULT):
             pipe.run(df, faulty, run_id="m")
